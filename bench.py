@@ -146,8 +146,13 @@ def emit(
     of per-query trial means vs the headline sum of mins, plus the
     trial count, so a reader can bound session noise without the
     detail file — a sum_mean/value ratio well above ~1.1 flags a
-    loaded box rather than a code change.
+    loaded box rather than a code change — and the absolute path the
+    detail was actually written to.
     """
+    if detail_path is None:
+        detail_path = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+        )
     total = round(sum(timings.values()), 3)
     mean_total = round(sum(d["mean"] for d in detail.values()), 3)
     print(
@@ -161,16 +166,12 @@ def emit(
                 "spread": {
                     "sum_mean": mean_total,
                     "trials": n_trials,
-                    "detail_file": "BENCH_DETAIL.json",
+                    "detail_file": os.path.abspath(detail_path),
                 },
             }
         ),
         flush=True,
     )
-    if detail_path is None:
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
     with open(detail_path, "w") as f:
         json.dump(
             {"metric": "bench_detail", "queries_detail": detail}, f, indent=1

@@ -40,6 +40,8 @@ resolution generalizes it to transitive near-dup groups for the
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,24 +52,30 @@ def connected_components(
     """(id, lab) with lab = min node id reachable from id over the
     undirected pair graph.
 
-    Preconditions (both relied on structurally, state them so callers
-    other than dup_clusters can't violate them silently — r12 advice):
+    Precondition (relied on structurally, stated so callers other
+    than dup_clusters can't violate it silently — r12 advice):
+    ``nodes`` must have column ``id`` (bigint-able) with DISTINCT
+    values, one row per node: the path-halving self-join treats labels
+    as node ids and must stay total and 1:1 (duplicate ids would
+    explode it).
 
-    - ``nodes`` must have column ``id`` (bigint-able) with DISTINCT
-      values, one row per node: the path-halving self-join treats
-      labels as node ids and must stay total and 1:1 (duplicate ids
-      would explode it).
-    - every ``pairs`` endpoint (``id_a``/``id_b``) must be a node id:
-      the seeded first round takes mins over raw neighbour ids, and a
-      label pointing at a non-node would fall out of the halving
-      self-join. Both in-tree callers mine pairs from the same doc
-      frame they cluster, which satisfies this by construction.
+    An edge with an endpoint that is not a node id is ignored: it
+    loses no row and merges no components. The seed's neighbour min is
+    semi-joined against ``nodes`` for this (a label pointing at a
+    non-node would fall out of the halving self-join), and later rounds
+    only take labels from nodes. Both in-tree callers mine pairs from
+    the same doc frame they cluster, so they never produce one.
 
     Isolated nodes keep lab = id; empty ``nodes`` returns empty (the
     changed-count below is 0 on an empty frame, so the loop exits on
     round 1 — no NULL-sum trap). Exact fixpoint (not an
-    approximation), so it agrees with a transitive-closure oracle.
+    approximation), so it agrees with a transitive-closure oracle
+    whenever the loop converges within ``max_iter`` rounds; when it
+    does not, the labels returned are not final and a RuntimeWarning
+    says how many labels changed in its last round.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be at least 1, got {max_iter}")
     e = pairs.select(
         F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
     )
@@ -83,15 +91,20 @@ def connected_components(
     # straight off the edge list — no label frame exists yet, so the
     # neighbour min needs NO edges-to-labels join (the most expensive
     # op of a normal round). This is a full propagation step for the
-    # price of one groupBy + one node-scale left join, and dup-pair
+    # price of one groupBy + two node-scale joins, and dup-pair
     # graphs (mostly 2-node components) already reach their fixpoint
     # here, turning the common case from two full rounds into one.
-    seed_nmin = edges.groupBy(F.col("src").alias("id")).agg(
-        F.min("dst").alias("nmin")
+    # The semi-join drops a min that is not a node id (a bad edge):
+    # that node starts from its own id and the rounds, which only take
+    # labels from nodes, finish the job.
+    node_ids = nodes.select(F.col("id").cast("long").alias("id"))
+    seed_nmin = (
+        edges.groupBy(F.col("src").alias("id"))
+        .agg(F.min("dst").alias("nmin"))
+        .join(node_ids.withColumnRenamed("id", "nmin"), "nmin", "left_semi")
     )
     lab = (
-        nodes.select(F.col("id").cast("long").alias("id"))
-        .join(seed_nmin, "id", "left")
+        node_ids.join(seed_nmin, "id", "left")
         .select("id", F.least("id", F.coalesce("nmin", F.col("id"))).alias("lab"))
         .localCheckpoint(eager=False)
     )
@@ -137,6 +150,13 @@ def connected_components(
         ).collect()[0][0]
         if n_changed == 0:
             break
+    else:
+        warnings.warn(
+            f"connected_components: max_iter={max_iter} rounds ran out with "
+            f"{n_changed} labels changed in the last round; labels are not final",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return lab.select("id", "lab")
 
 

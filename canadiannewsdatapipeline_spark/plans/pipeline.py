@@ -131,7 +131,13 @@ def run_ingestion(
     run the model DAG; returns every materialized frame. Eager from
     the ``load_raw_news`` call on (see its docstring): the extract
     lineage executes inside this function, not at first action on the
-    returned frames."""
+    returned frames.
+
+    ``transformed`` feeds all four marts, so the runner computes it
+    once per run and the four mart writes read that one result; it
+    checkpoints the view rather than persisting it so a later run over
+    the same raw store can never read this run's cached snapshot (see
+    plans/runner.py)."""
     extracts = []
     for _, pages in sorted(source_pages.items()):
         extracts.append(extract_source(pages, fetcher, parser, n_articles=n_articles))

@@ -10,11 +10,27 @@ to parquet and re-read (dbt marts, dbt_project.yml:43-45) — reading
 back the parquet both truncates the lineage for downstream plans and is
 the write-audit-publish point (S12 idempotency: a model whose output
 dir already exists can be skipped with skip_existing=True).
+
+A view that two or more models of the run build on (the reference's
+``transformed``, which feeds all four marts) is computed once per run,
+not once per consumer: the runner wraps it in
+``localCheckpoint(eager=False)`` and every consumer reads those blocks.
+Otherwise each mart write re-runs the whole upstream lineage (serial
+ids, the translation pass through Python, ``transformed``'s shuffle and
+windows). A checkpoint rather than ``persist()`` because it registers
+no CacheManager entry — a later identical plan (the next run over the
+same raw store) cannot silently match this run's snapshot — and its
+blocks are reclaimed once the returned frames are dropped, with no
+unpersist bookkeeping. Under AQE the checkpoint call itself already
+runs the view's shuffle-map stages, so only consumers that will be
+built count: a view whose consumers ``skip_existing`` all reuses is
+never checkpointed and costs no job.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
@@ -56,20 +72,29 @@ class ModelRunner:
     ) -> dict[str, DataFrame]:
         """Execute all models; ``inputs`` seeds external sources by name."""
         resolved: dict[str, DataFrame] = dict(inputs)
-        for name in self.order():
+        order = self.order()
+        out_paths = {
+            name: os.path.join(self.warehouse_dir, name) if self.warehouse_dir else None
+            for name in order
+        }
+        reused = {
+            name
+            for name in order
+            if skip_existing
+            and self.models[name].materialized == "table"
+            and out_paths[name]
+            and os.path.isdir(out_paths[name])
+        }
+        consumers = Counter(
+            d for name in order if name not in reused for d in self.models[name].deps
+        )
+        for name in order:
             model = self.models[name]
             missing = [d for d in model.deps if d not in resolved]
             if missing:
                 raise ValueError(f"model {name}: unresolved deps {missing}")
-            out_path = (
-                os.path.join(self.warehouse_dir, name) if self.warehouse_dir else None
-            )
-            if (
-                skip_existing
-                and model.materialized == "table"
-                and out_path
-                and os.path.isdir(out_path)
-            ):
+            out_path = out_paths[name]
+            if name in reused:
                 resolved[name] = self.spark.read.parquet(out_path)
                 continue
             df = model.fn(*[resolved[d] for d in model.deps])
@@ -79,5 +104,7 @@ class ModelRunner:
                     writer = writer.partitionBy(*model.partition_by)
                 writer.parquet(out_path)
                 df = self.spark.read.parquet(out_path)
+            elif model.materialized == "view" and consumers[name] > 1:
+                df = df.localCheckpoint(eager=False)
             resolved[name] = df
         return resolved

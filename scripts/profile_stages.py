@@ -16,54 +16,31 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-EVDIR = "/tmp/spark-events-profile"
-shutil.rmtree(EVDIR, ignore_errors=True)
-os.makedirs(EVDIR, exist_ok=True)
-os.environ["SPARK_GRAFT_EVENTLOG"] = EVDIR
-
-from pyspark.sql import SparkSession  # noqa: E402
-
 from bench import HEADLINE  # noqa: E402
 from canadiannewsdatapipeline_spark.queries import QUERIES  # noqa: E402
+from canadiannewsdatapipeline_spark.session import get_spark  # noqa: E402
 
+EVDIR = "/tmp/spark-events-profile"
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def get_spark_ev():
-    from canadiannewsdatapipeline_spark.session import get_spark
-
-    # piggyback on the engine factory, then add event logging via a
-    # fresh builder (must be set before session creation)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    b = (
-        SparkSession.builder.appName("profile-stages")
-        .master(f"local[{cpus}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    # copy the engine's standard confs
-    probe = get_spark.__wrapped__ if hasattr(get_spark, "__wrapped__") else None
-    b = (
-        b.config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.warehouse.dir", "/tmp/cndp-spark-warehouse")
-    )
-    s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    return s
 
 
 def main() -> None:
     names = sys.argv[1:] or [n for n in HEADLINE if n in QUERIES]
-    spark = get_spark_ev()
+    shutil.rmtree(EVDIR, ignore_errors=True)
+    os.makedirs(EVDIR, exist_ok=True)
+    # The session is the engine's own (session.get_spark), so this
+    # profile runs under the same config as bench and tests; event
+    # logging is the only addition, passed to the JVM at launch.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [
+            "--conf spark.eventLog.enabled=true",
+            f"--conf spark.eventLog.dir={EVDIR}",
+            "--conf spark.eventLog.compress=false",
+            "--conf spark.eventLog.rolling.enabled=false",
+            os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell"),
+        ]
+    )
+    spark = get_spark("profile-stages")
     windows = {}
     for name in names:
         df = QUERIES[name].fn(spark, SF_DIR)
@@ -73,7 +50,6 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
         windows[name] = (t0_ms, time.time() * 1000, wall)
-    app_id = spark.sparkContext.applicationId
     spark.stop()
 
     cand = []
@@ -86,26 +62,20 @@ def main() -> None:
         with open(log) as fh:
             lines.extend(fh.readlines())
     stages = []
-    if True:
-        for line in lines:
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
+    for line in lines:
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if ev.get("Event") == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sub = si.get("Submission Time")
+            comp = si.get("Completion Time")
+            if sub is None or comp is None:
                 continue
-            if ev.get("Event") == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sub = si.get("Submission Time")
-                comp = si.get("Completion Time")
-                if sub is None or comp is None:
-                    continue
-                stages.append(
-                    (
-                        sub,
-                        comp,
-                        si.get("Number of Tasks"),
-                        si.get("Stage Name", "")[:70],
-                    )
-                )
+            stages.append(
+                (sub, comp, si.get("Number of Tasks"), si.get("Stage Name", "")[:70])
+            )
     for name, (a, b, wall) in windows.items():
         mine = [s for s in stages if s[0] >= a - 50 and s[1] <= b + 2000]
         mine.sort()

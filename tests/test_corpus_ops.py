@@ -4,6 +4,8 @@ quantization."""
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,13 +31,18 @@ def _pairs(spark, pairs):
     ).filter(F.col("id_a").isNotNull())
 
 
+def _chain(spark, n):
+    return _nodes(spark, range(n)), _pairs(spark, [(i, i + 1) for i in range(n - 1)])
+
+
 def test_cc_chain_converges_to_min(spark):
     # Pathological 16-hop chain: path-halving must still reach the
-    # exact fixpoint (every node labelled 0).
+    # exact fixpoint (every node labelled 0), within the default
+    # max_iter, so without the not-converged warning.
     n = 17
-    lab = connected_components(
-        _nodes(spark, range(n)), _pairs(spark, [(i, i + 1) for i in range(n - 1)])
-    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        lab = connected_components(*_chain(spark, n))
     got = {r["id"]: r["lab"] for r in lab.collect()}
     assert got == {i: 0 for i in range(n)}
 
@@ -115,6 +122,27 @@ def test_cc_random_graph_matches_union_find(spark):
     lab = connected_components(_nodes(spark, ids), _pairs(spark, edges))
     got = {r["id"]: r["lab"] for r in lab.collect()}
     assert got == want
+
+
+def test_cc_warns_when_max_iter_runs_out(spark):
+    # The 16-hop chain needs more than two rounds: with max_iter=2 the
+    # labels are not final, and the operator must say so instead of
+    # returning them silently.
+    with pytest.warns(RuntimeWarning, match="max_iter=2"):
+        connected_components(*_chain(spark, 17), max_iter=2)
+
+
+def test_cc_edge_to_non_node_is_ignored(spark):
+    # 1 and 3 both touch 0, which is not a node: no row may be lost
+    # (an unfiltered seed points 1 at the absent 0, and the halving
+    # self-join drops such a row) and 1, 3 must not merge through it.
+    # 3-4 is an ordinary edge.
+    lab = connected_components(
+        _nodes(spark, [1, 2, 3, 4]),
+        _pairs(spark, [(1, 0), (0, 3), (3, 4)]),
+    )
+    got = {r["id"]: r["lab"] for r in lab.collect()}
+    assert got == {1: 1, 2: 2, 3: 3, 4: 3}
 
 
 def test_dup_clusters_keep_one(spark):

@@ -13,18 +13,18 @@ import pytest
 
 from canadiannewsdatapipeline_spark.queries import QUERIES, oracle_sql_map, query_map
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
 @pytest.fixture(scope="module")
-def con():
+def con(sf_dir):
     c = duckdb.connect()
     for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '/root/testdata/sf0.001/{t}.parquet'"
-        )
+        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return c
 
 
@@ -69,7 +69,7 @@ def test_no_registered_query_emits_nonscalar_columns(spark, sf_dir):
 def test_every_registered_query_is_documented():
     # the judge reads COVERAGE.md line by line — a registered query the
     # doc never mentions is invisible coverage
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(REPO, "COVERAGE.md")).read()
     missing = sorted(name for name in QUERIES if f"`{name}`" not in text)
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
 
@@ -198,7 +198,7 @@ def test_driver_entry_and_bench_contract():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test", "/root/repo/__spark_entry__.py"
+        "spark_entry_under_test", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -209,7 +209,7 @@ def test_driver_entry_and_bench_contract():
     assert o.keys() == oracle_sql_map().keys()
 
     bench_spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
+        "bench_under_test", os.path.join(REPO, "bench.py")
     )
     bench = importlib.util.module_from_spec(bench_spec)
     bench_spec.loader.exec_module(bench)
@@ -267,7 +267,7 @@ def test_bench_emit_prints_exactly_one_json_line(tmp_path, capsys):
     import json as _json
 
     spec = importlib.util.spec_from_file_location(
-        "bench_emit_under_test", "/root/repo/bench.py"
+        "bench_emit_under_test", os.path.join(REPO, "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
@@ -297,3 +297,5 @@ def test_bench_emit_prints_exactly_one_json_line(tmp_path, capsys):
     # detail lives in the file, not in any printed stream
     on_disk = _json.loads(out_file.read_text())
     assert on_disk["queries_detail"] == detail
+    # the printed pointer names the file actually written
+    assert parsed["spread"]["detail_file"] == str(out_file)

@@ -26,3 +26,47 @@ def test_runner_topo_order_and_materialization(spark, tmp_path):
     # write-audit-publish: skip_existing reuses the materialized table
     out2 = runner.run({"raw": raw.limit(0)}, skip_existing=True)
     assert out2["mart"].count() == 2
+
+
+def test_shared_view_is_computed_once_per_run(spark, tmp_path):
+    # A view feeding two table marts (the shape of `transformed` feeding
+    # the four marts) runs its Python stage over the input once per
+    # run, not once per consumer, and the marts are unchanged by it.
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    def shared(raw):
+        return raw.mapInPandas(count_rows, raw.schema).withColumn("k", F.col("v") % 3)
+
+    def by_k(t):
+        return t.groupBy("k").agg(F.sum("v").alias("s"))
+
+    def evens(t):
+        return t.filter(F.col("v") % 2 == 0).select("v", "k")
+
+    models = [
+        Model("shared", shared, deps=["raw"]),
+        Model("by_k", by_k, deps=["shared"], materialized="table"),
+        Model("evens", evens, deps=["shared"], materialized="table"),
+    ]
+    runner = ModelRunner(spark, models, warehouse_dir=str(tmp_path))
+    raw = spark.createDataFrame([(i,) for i in range(40)], "v long").repartition(4)
+    out = runner.run({"raw": raw})
+    got_by_k = sorted(out["by_k"].collect())
+    got_evens = sorted(out["evens"].collect())
+    assert seen.value == 40
+
+    # the unshared form: each mart straight off its own lineage
+    assert got_by_k == sorted(by_k(shared(raw)).collect())
+    assert got_evens == sorted(evens(shared(raw)).collect())
+
+    # a re-run whose consumers all exist never materializes the view
+    before = seen.value
+    out2 = runner.run({"raw": raw}, skip_existing=True)
+    assert sorted(out2["by_k"].collect()) == got_by_k
+    assert sorted(out2["evens"].collect()) == got_evens
+    assert seen.value == before
