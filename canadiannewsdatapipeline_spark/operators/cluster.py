@@ -76,16 +76,23 @@ def connected_components(
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be at least 1, got {max_iter}")
-    e = pairs.select(
-        F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
-    )
-    # Lazy checkpoint: round 1's neighbour join is the first (and only
-    # per-round) consumer, so it materializes the edge cache itself —
-    # an eager checkpoint here ran the whole upstream pair pipeline as
-    # a dedicated extra job before the loop started.
-    edges = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    a, b = F.col("id_a").cast("long"), F.col("id_b").cast("long")
+    # Both directions of every pair from one pass over ``pairs``: a
+    # union of the pair frame with its mirror planned the whole
+    # upstream pair pipeline twice.
+    # The checkpoint is not free at this call: under AQE,
+    # localCheckpoint(eager=False) still runs the shuffle-map stages
+    # of ``pairs`` here (AQE plans the query stage by stage), and only
+    # the final stage's output is deferred to round 1's neighbour join.
+    # The eager form would add a dedicated job over that final stage.
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(a.alias("src"), b.alias("dst")),
+                F.struct(b.alias("src"), a.alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst").localCheckpoint(eager=False)
 
     # Seeded start (r13): lab0 = min(id, min neighbour id), computed
     # straight off the edge list — no label frame exists yet, so the
@@ -109,15 +116,19 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
 
-    # Lazy checkpoints throughout (r12 optimization, measured
-    # 1.2-3.2x on the sf0.1 build): eager=False defers
-    # materialization to the convergence-check aggregate below, so
-    # ONE job per round both materializes the checkpoint and computes
-    # the convergence scalar — the eager form ran a write job and
-    # then a separate read-back job, i.e. one extra pass over the
-    # label frame every round at any scale. Lineage is truncated
-    # identically once materialized. The seed frame is itself a lazy
-    # checkpoint that round 1 materializes as part of its own job.
+    # Deferred checkpoints throughout (r12 optimization, measured
+    # 1.2-3.2x on the sf0.1 build): eager=False defers the final
+    # stage to the convergence-check aggregate below, so one job per
+    # round both materializes the checkpoint and computes the
+    # convergence scalar — the eager form ran a write job and then a
+    # separate read-back job, i.e. one extra pass over the label frame
+    # every round at any scale. Deferred is not lazy under AQE: the
+    # checkpoint call itself runs the shuffle-map stages of the round's
+    # joins (AQE plans stage by stage), so each round's joins run at
+    # the localCheckpoint line and only the last stage rides on the
+    # aggregate's job. Lineage is truncated identically once
+    # materialized. The seed frame is itself such a checkpoint, which
+    # round 1 finishes as part of its own job.
     #
     # Convergence (r13): each round carries the incoming label along
     # as ``lab0`` (free — it rides the joins the round already does)

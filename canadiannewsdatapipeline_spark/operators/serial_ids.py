@@ -27,7 +27,9 @@ work as a three-phase plan, all linear, none single-partition:
    bucket b sorts before every row of bucket b+1.
 2. **Per-bucket counts** (one map-side-combined aggregate job; the
    collect is one long per bucket). Driver-side cumulative sums give
-   each bucket's id offset.
+   each bucket's id offset. A batch with one bucket (under
+   ``_MIN_ROWS_PER_BUCKET`` rows, or an empty sample) skips the job:
+   its one count is phase 1's total.
 3. **Within-bucket row_number + offset** — the returned lazy plan.
    The window partitions by the bucket, so the sort parallelizes
    across buckets and the plan contains no SinglePartition exchange
@@ -84,10 +86,11 @@ Postgres errors). ``id_type='long'`` opts into a BIGSERIAL-style id
 for >2^31-row backfills (r11 verdict #3: the hard stop needed a
 sanctioned way through).
 
-Cost disclosure: phases 1-2 RUN three small jobs at plan-construction
-time (the same disclosed eagerness class as the multiprobe's exact
-count — linear scans, trivial next to the ingest write they feed),
-plus one full materialization when the input pins.
+Cost disclosure: phases 1-2 RUN up to three small jobs at
+plan-construction time, only the count for a one-bucket batch (the
+same disclosed eagerness class as the multiprobe's exact count —
+linear scans, trivial next to the ingest write they feed), plus one
+full materialization when the input pins.
 """
 
 from __future__ import annotations
@@ -308,7 +311,8 @@ def assign_serial_ids(
         "_sid_bucket", bucket_expr(0, len(bounds)).cast("int")
     )
 
-    counts = {
+    # one bucket: its count is the total already in hand, no job needed
+    counts = {0: total} if not bounds else {
         r["_sid_bucket"]: r["count"]
         for r in tagged.groupBy("_sid_bucket").count().collect()
     }

@@ -1182,12 +1182,14 @@ def stream_dedup_daily_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     The day is a function of the dedup key, so which physical row
     survives cannot change the answer (the rule for making streaming
     dedup deterministic)."""
-    import uuid
+    from ..streaming.ingest import (
+        _normalize_ts,
+        _stream_from_batch_source,
+        complete_to_memory,
+    )
 
-    from ..streaming.ingest import _normalize_ts, _state_partitions
-    from ..streaming.joins import _event_stream
-
-    stream = _event_stream(spark, f"{sf_dir}/events.parquet")
+    events_raw = load_table_raw(spark, sf_dir, "events")
+    stream = _normalize_ts(_stream_from_batch_source(spark, events_raw))
     dedup = (
         stream.withColumn("minute", F.date_trunc("minute", "ts"))
         .withWatermark("minute", "1 hour")
@@ -1196,17 +1198,7 @@ def stream_dedup_daily_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = dedup.groupBy(
         F.date_trunc("day", "minute").alias("day")
     ).agg(F.count(F.lit(1)).alias("n_active_slots"))
-    sink = f"sda_{uuid.uuid4().hex[:12]}"
-    with _state_partitions(spark, 8):
-        (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink)
+    return complete_to_memory(spark, agg, [events_raw], "sda", 8)
 
 
 @register(

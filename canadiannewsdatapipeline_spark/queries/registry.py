@@ -46,10 +46,14 @@ def _plan_cached(
     name: str, fn: Callable[[SparkSession, str], DataFrame]
 ) -> Callable[[SparkSession, str], DataFrame]:
     if name.startswith("stream_"):
-        # the streaming twins RUN a micro-batch job inside the call
+        # the streaming twins START a streaming query inside every call
         # (memory sink, AvailableNow) and return a view over the sink;
-        # memoizing would silently skip the re-execution a repeat
-        # caller asked for
+        # memoizing would silently skip the execution a repeat caller
+        # asked for. A repeat call over unchanged files resumes from
+        # the previous call's checkpoint instead
+        # (streaming/ingest.complete_to_memory): the query still runs,
+        # finds no new file, runs no micro-batch, and the previous
+        # sink is returned.
         return fn
 
     @functools.wraps(fn)

@@ -276,3 +276,55 @@ def test_oracle_series_caps_hold_for_test_corpora():
             f"sf{sf}: doc with {max_len} chars exceeds the chunk-index cap "
             f"({_CHUNK_MAX_IDX})"
         )
+
+
+def test_cc_edges_are_built_in_one_pass(spark, job_ids):
+    # cc mirrors every pair into both edge directions. Built as a union
+    # of the pair frame with its mirror, the pair pipeline upstream was
+    # planned once per branch: every pair row was produced twice, and
+    # construction on this corpus ran 55 jobs (AQE runs the shuffle-map
+    # stages at each localCheckpoint call). One explode of a two-element
+    # array produces each pair row once, in 44-45 jobs (AQE's stage
+    # timing moves the count by a job).
+    import random
+
+    from canadiannewsdatapipeline_spark.operators.dedup import lsh_verified_pairs
+
+    rng = random.Random(7)
+    base = [" ".join(f"w{b}_{rng.randrange(40)}" for _ in range(30)) for b in range(8)]
+    rows = []
+    for i in range(40):
+        words = base[i % 8].split()
+        words[rng.randrange(30)] = "zz"
+        rows.append((i, " ".join(words)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    produced = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            produced.add(len(b))
+            yield b
+
+    pairs = lsh_verified_pairs(
+        docs, "text", "doc_id", num_hashes=8, rows_per_band=2, threshold=0.6
+    )
+    pairs = pairs.mapInPandas(count_rows, pairs.schema)
+    with job_ids() as jobs:
+        lab = connected_components(docs.select(F.col("doc_id").alias("id")), pairs)
+    assert len(jobs) <= 48
+    got = {r["id"]: r["lab"] for r in lab.collect()}
+    n_produced = produced.value
+
+    parent = {i: i for i, _ in rows}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    edges = pairs.collect()
+    assert n_produced == len(edges) > 0
+    for r in edges:
+        ra, rb = find(r["id_a"]), find(r["id_b"])
+        parent[max(ra, rb)] = min(ra, rb)
+    assert got == {i: find(i) for i in parent}

@@ -243,8 +243,8 @@ def test_dropped_session_is_not_pinned_by_plan_cache(spark, sf_dir):
 
 
 def test_stream_queries_are_not_plan_cached():
-    """The streaming twins execute a micro-batch job inside the call;
-    memoizing them would skip the re-execution a repeat caller asked
+    """The streaming twins start a streaming query inside the call;
+    memoizing them would skip the execution a repeat caller asked
     for. Batch queries carry the cache wrapper (__wrapped__), stream_
     queries must not."""
     from canadiannewsdatapipeline_spark.queries import QUERIES
@@ -253,6 +253,22 @@ def test_stream_queries_are_not_plan_cached():
     for name in QUERIES:
         if name.startswith("stream_"):
             assert not hasattr(QUERIES[name].fn, "__wrapped__"), name
+
+
+def test_stream_queries_start_one_streaming_query_per_call(spark, sf_dir, stream_events):
+    """Resume (streaming/ingest.complete_to_memory) makes a repeat call
+    cheap, not skipped: every call of a stream_ query still starts
+    exactly one streaming query, and none becomes a plan-cache hit."""
+    from canadiannewsdatapipeline_spark.queries.registry import is_plan_cached
+
+    names = [n for n in QUERIES if n.startswith("stream_")]
+    assert names
+    for name in names:
+        for _ in range(2):
+            started = stream_events.started
+            QUERIES[name].fn(spark, sf_dir)
+            assert stream_events.started - started == 1, name
+            assert not is_plan_cached(spark, name, sf_dir), name
 
 
 def test_bench_emit_prints_exactly_one_json_line(tmp_path, capsys):

@@ -284,3 +284,22 @@ def test_mixed_type_sort_keys(spark):
     assert {(r["k1"], r["k2"]): r["id"] for r in got.collect()} == {
         (r["k1"], r["k2"]): r["id"] for r in want.collect()
     }
+
+
+def test_one_bucket_batch_skips_the_bucket_counts_job(spark, job_ids):
+    """Under _MIN_ROWS_PER_BUCKET rows there is one bucket, and its
+    count is the total the operator already counted: construction runs
+    the jobs of that count alone (two under AQE: map stage and result),
+    not a per-bucket counts aggregate after it."""
+    df = spark.createDataFrame(
+        [("c", "z"), ("a", "y"), ("b", "x")], "a string, b string"
+    )
+    with job_ids() as count_jobs:
+        df.count()
+    with job_ids() as jobs:
+        got = assign_serial_ids(df, ["a", "b"], pin=False)
+    assert len(jobs) == len(count_jobs)
+    want = _global_rank_ids(df, ["a", "b"])
+    assert _rows_to_keyed(got.collect(), ["a", "b", "id"]) == _rows_to_keyed(
+        want.collect(), ["a", "b", "id"]
+    )
