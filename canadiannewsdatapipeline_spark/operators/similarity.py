@@ -672,280 +672,60 @@ _WORD_BITS = 63  # bits per packed signature word (bit 63 would overflow
 # multiprobe docstring names.
 MP_BROADCAST_MAX_INPUT_BYTES = 128 * 1024 * 1024
 
-# Shuffle-disk budget for ONE multiprobe pass (r7 verdict #1: the
-# chunked pass mode sizes itself instead of relying on the user to
-# know the disk wall exists). Default sized for this box's shared
-# local dirs: the single-pass shuffle tier died past >70 GB of
-# shuffle files at threshold 0.4 x 60k vectors, while the measured
-# 4x40-pass run peaked at 29.9 GB — 32 GiB reproduces that run's K
-# from the sizing rule (see _mp_auto_tables_per_pass). A cluster
-# whose executors own real shuffle volumes raises it via the
-# ``spark.cndp.mp.diskBudgetBytes`` conf or the
-# ``disk_budget_bytes`` argument without editing the library.
+# Shuffle-disk budget for ONE multiprobe pass. Default sized for this
+# box's shared local dirs: the single-pass shuffle tier died past
+# >70 GB of shuffle files at threshold 0.4 x 60k vectors, while the
+# measured 4x40-pass run peaked at 29.9 GB (SCALE.md §Round-7). A
+# cluster whose executors own real shuffle volumes raises it via the
+# ``spark.cndp.mp.diskBudgetBytes`` conf or the ``disk_budget_bytes``
+# argument without editing the library.
 MP_DISK_BUDGET_BYTES = 32 * 1024 * 1024 * 1024
 
 # Sentinel returned by _plan_size_bytes when Catalyst's estimate is
 # unreachable: large enough that the broadcast gate always resolves
-# to the scale-safe shuffle mode, and NAMED so the auto-sizer can
-# recognize "no information" and decline to chunk on it (r8 advice —
-# see _mp_resolve_mode).
+# to the scale-safe shuffle mode. The pass sizing needs no Catalyst
+# stats (it counts candidates exactly), so nothing else reads it.
 PLAN_SIZE_UNKNOWN = 1 << 62
 
-# Static multiplier on the MODEL estimate (``sizing='model'``): the
-# byte model assumes uniform bucketing, and a clustered corpus — the
-# shape near-dup dedup exists for — concentrates candidates in few
-# buckets, so the true stream exceeds the uniform estimate by
-# ~2^k/(masks·NC), a property of the cluster count NC, not of N
-# (measured 11.2x at every rung of a 16-cluster warehouse,
-# SCALE_LADDER_SKEW_r09.json / SCALE.md §Round-9 — enough to blow a
-# budget the model called safe). Raise via the ``skew_factor`` argument or the
-# ``spark.cndp.mp.skewFactor`` conf when the corpus is known-clustered
-# and the exact ``sizing='data'`` count is not wanted; the default
-# stays 1.0 because the data-driven count is the principled fix and a
-# blanket multiplier taxes uniform corpora with the measured ~3x
-# over-chunking wall loss.
-MP_SKEW_FACTOR = 1.0
-
-# Calibration constants for the candidate-stream estimate (all from
-# measured r6/r7 ladder data, SCALE.md §Round-6/7):
-# - bytes per input embedding row in parquet: random float32 vectors
-#   barely compress; measured 262 B/row at dim=64 across every fresh
-#   warehouse (x10/x30/x100), i.e. ~4 B per element + ~16 B row
-#   overhead.
-# - shuffle bytes per candidate (pair, table, probe) row: aggregate
-#   slope of peak shuffle disk over per-pass candidate volume at
-#   fresh-x30 / threshold 0.4 — the 4x40-pass run peaked at 29.9 GB
-#   for ~4.2e8 candidates/pass (~70 B per candidate across the
-#   pass's id-only exchanges + screen/verify attaches; the 8x20 run's
-#   24.3 GB / 2.1e8 is higher per-row because the persisted
-#   signatures and concurrent stage files are a fixed floor the
-#   marginal constant deliberately over-absorbs).
-_MP_EMB_ROW_BYTES = lambda dim: 4 * dim + 16  # noqa: E731
+# Shuffle bytes per unscreened candidate (pair, table, probe) row —
+# the one constant that turns the exact candidate count into bytes:
+# the aggregate slope of peak shuffle disk over per-pass candidate
+# volume at fresh-x30 / threshold 0.4 (the 4x40-pass run peaked at
+# 29.9 GB for ~4.2e8 candidates/pass, SCALE.md §Round-7). The true
+# bytes per candidate drift with the Hamming-screen pass fraction
+# (survivors carry the exact verify's vector attach), which is why
+# chunked runs re-pack from MEASURED bytes after their first pass
+# and single-pass carries the headroom below.
 _MP_CANDIDATE_ROW_BYTES = 70
 
-# Second term of the r11 two-term byte model (r10 verdict #3): a
-# candidate that SURVIVES the Hamming screen carries the exact
-# verify's vector attach through the survivor exchange — two 64-double
-# arrays plus ids/norms, ~1 KB of shuffle file per survivor row where
-# a screened-out candidate costs only the ~70 B id-pair exchanges.
-# The r10 NC sweep measured the resulting drift as SYSTEMATIC
-# (observed/est 1.03 -> 1.64 as the screen-pass fraction shifts with
-# cluster count, SCALE_LADDER_SKEW_CURVE_r10.json): at a 4.4% pass
-# fraction the blended slope is 70 + 0.044*1024 ≈ 115 B/candidate =
-# the measured 1.64x. The flat constant stays the zero-knowledge
-# default; the two-term form engages when a measured survivor
-# fraction exists (the guard-zone screen sample below). r12 (r11
-# verdict #4): this constant is the WORST CASE on two counts the
-# guard-zone instruments measure past. (a) It charges TWO vectors
-# per survivor, but the physical attach ships ONE: pass_pairs's
-# verify joins ea onto the survivor pair and re-exchanges that row
-# hashed on id_b, while the eb side crosses its exchange once per
-# distinct id per pass — a per-pass floor, not a per-survivor
-# charge. (b) It assumes incompressible bytes, but the attach join
-# streams its output in id_a order, so high-multiplicity ids lay
-# verbatim ea copies consecutively and lz4 collapses them — the
-# NC=256 rung measured ~163 B/survivor against this 1 KB (every
-# pass at observed/est 0.27, SCALE_LADDER_SKEW_CURVE_r12.json).
-# When the guard-zone sample runs, the RIDER instrument
-# (_mp_sampled_rider_row_bytes) measures the marginal per-survivor
-# bytes through a replica of the real exchange and replaces this
-# constant (clamped to at most it); the per-vector instrument
-# (_mp_sampled_vector_row_bytes) stands as evidence and as the
-# 2-vector fallback when the rider sample is thin.
-_MP_SURVIVOR_ROW_BYTES = 1024
-
-
-def _mp_two_term_bytes(
-    n_candidates: int,
-    survivor_frac: float,
-    survivor_row_bytes: int | None = None,
-) -> int:
-    """Two-term candidate-stream bytes: base id-pair exchanges for
-    every candidate + the vector attach for the screen-pass fraction.
-    Reduces to the flat one-term model at survivor_frac=0 and is
-    monotonically >= it, so swapping it in can only size SAFER
-    (finer), never coarser than the flat model.
-
-    ``survivor_row_bytes`` (r12, r11 verdict #4): a MEASURED
-    per-survivor byte cost replaces the static worst case — the
-    rider instrument's marginal reading when the guard-zone sample
-    could take it (one vector rides per pair, in-context lz4
-    adjacency included; see ``_mp_sampled_rider_row_bytes``), else
-    the 2-vector theory over the measured per-vector bytes. The
-    static ``_MP_SURVIVOR_ROW_BYTES`` (1 KB — two raw float64[64]
-    arrays) is wrong on both structure (two vectors charged, one
-    ships) and bytes (verbatim ea repeats collapse under lz4 —
-    ~163 B/survivor true at NC=256), so it over-chunks clustered
-    runs up to ~4x; it survives only as the zero-evidence fallback.
-    The measured value is clamped to [``_MP_CANDIDATE_ROW_BYTES``,
-    ``_MP_SURVIVOR_ROW_BYTES``]: never above the calibrated
-    worst-case ceiling (its whole purpose is to shrink it), never
-    below the base id-exchange cost a survivor also pays."""
-    if not 0.0 <= survivor_frac <= 1.0:
-        raise ValueError(
-            f"survivor_frac must be in [0, 1] (got {survivor_frac})"
-        )
-    srow = (
-        _MP_SURVIVOR_ROW_BYTES
-        if survivor_row_bytes is None
-        else min(
-            _MP_SURVIVOR_ROW_BYTES,
-            max(int(survivor_row_bytes), _MP_CANDIDATE_ROW_BYTES),
-        )
-    )
-    return int(
-        n_candidates * (_MP_CANDIDATE_ROW_BYTES + survivor_frac * srow)
-    )
-
-
-def _mp_candidate_stream_bytes(
-    input_bytes: int,
-    dim: int,
-    n_tables: int,
-    n_bits: int,
-    probe_radius: int,
-) -> int:
-    """Estimated shuffle volume of the multiprobe's UNSCREENED
-    candidate stream, from the one trustworthy Catalyst stat (the
-    input relation's file size — see ``_plan_size_bytes``).
-
-    Model: N ≈ input_bytes / (4·dim + 16) rows; expected candidates
-    under uniform bucketing ≈ n_tables · n_masks · N² / 2^n_bits
-    (each of the L tables joins every probe row — home bucket plus
-    its Hamming-radius flips, ``_probe_masks`` — against the home
-    rows sharing its n_bits-bit bucket); ~70 B of shuffle files per
-    candidate row (calibrated, see ``_MP_CANDIDATE_ROW_BYTES``).
-    Checked against the measured r6/r7 datapoints in Spark-free unit
-    tests (tests/test_mp_auto_sizing.py): fresh-x10 (~1.9e8
-    candidates, ~13 GB — single-pass fits) vs fresh-x30 (~1.7e9,
-    ~118 GB — the rung that died at the disk wall).
-
-    VALIDITY BOUNDARY (measured both ways, r9): on the UNIFORM
-    warehouses the model was calibrated on, runtime feedback read
-    measured/modeled = 0.99 at x30 (SCALE_LADDER_X30_CLEAN_r09.json).
-    On a CLUSTERED corpus the uniform-bucketing assumption breaks in
-    the dangerous direction: candidates concentrate in few buckets,
-    the TRUE stream exceeds this estimate by ~2^k/(masks·NC)
-    (measured 11.2x on a 16-cluster warehouse — the model-sized run
-    blew a 2 GiB budget 3.05x while declaring single-pass safe,
-    SCALE_LADDER_SKEW_r09.json), so the model UNDER-estimates and
-    errs toward the disk wall, not away from it. For known-clustered
-    corpora use ``sizing='data'`` (exact count, skew-immune, holds
-    the bound at every measured rung) or ``skew_factor``."""
-    n_rows = max(input_bytes // _MP_EMB_ROW_BYTES(dim), 1)
-    n_masks = len(_probe_masks(n_bits, probe_radius))
-    est_pairs = (n_tables * n_masks * n_rows * n_rows) >> n_bits
-    return est_pairs * _MP_CANDIDATE_ROW_BYTES
-
-
-def _mp_auto_tables_per_pass(
-    input_bytes: int,
-    dim: int,
-    n_tables: int,
-    n_bits: int,
-    probe_radius: int,
-    disk_budget_bytes: int,
-) -> int | None:
-    """The documented sizing rule (SCALE.md §Round-7), now code:
-    K ≈ candidate-stream bytes ÷ per-pass disk budget. Returns the
-    ``tables_per_pass`` the shuffle tier should use, or ``None`` when
-    the whole stream fits the budget and single-pass is cheaper
-    (chunking below the disk wall is a measured ~3x wall LOSS).
-    Reproduces the measured good point: at fresh-x30 / threshold 0.4
-    / 160 tables with the default 32 GiB budget this returns 40 —
-    exactly the 4x40-pass configuration measured at 621.4 s /
-    29.9 GB peak (SCALE_LADDER_CHUNKED_r07.json)."""
-    est = _mp_candidate_stream_bytes(
-        input_bytes, dim, n_tables, n_bits, probe_radius
-    )
-    return _mp_k_from_estimate(est, n_tables, disk_budget_bytes)
-
-
-# Byte-drift guard at the SINGLE-PASS decision boundary (r10,
-# measured on the NC skew-curve sweep, SCALE_LADDER_SKEW_CURVE_r10):
-# every estimate — even the EXACT candidate count — converts rows to
-# bytes through the calibrated ~70 B/candidate constant, and the true
-# bytes-per-candidate drifts with the Hamming-screen pass fraction
-# (screen survivors carry ~1 KB vector attaches the aggregate slope
-# absorbed at its calibration point). Measured observed/estimate on
-# the 2 GiB-budget clustered curve: 1.03 at NC=16, 1.56 at NC=64,
-# 1.42 at NC=256, 1.64 at NC=1024 — at NC=256 the exact count
-# (1.59 GB) fit the budget, single-pass was chosen, and the true
-# stream (2.26 GB) violated it with nothing left to re-size. The
-# guard refuses single-pass when est * 1.7 exceeds the budget: runs
-# in the narrow edge zone [budget/1.7, budget] pay a minimal 2-pass
-# chunk (which the pilot + mid-run re-sizing then keep inside the
-# budget) instead of risking the measured <=1.64x bounded breach.
-# Interior K (est > budget) is unchanged — the r9 measured-best
-# combiner points (4x40 / 7x23 / 3x54) all sit there, and per-pass
-# drift inside chunked runs is the pilot/resize's job, not a static
-# multiplier's.
-MP_BYTE_DRIFT_GUARD = 1.7
+# Single-pass headroom: single-pass only when count x 70 B x this
+# fits the budget — a single-pass run has no pass boundary at which
+# a measurement could correct it. Re-derived from the single-pass
+# rungs' observed/exact shuffle ratios (SCALE.md "One sizing path"):
+# 1.42 at NC=256 (r10), 1.93 at NC=1024 (r12) — the latter above the
+# old 1.7. Estimates inside [budget/2, budget] pay a minimal 2-pass
+# chunk, whose pilot reading then packs the rest.
+MP_BYTE_DRIFT_GUARD = 2.0
 
 
 def _mp_k_from_estimate(
     est: int,
     n_tables: int,
     disk_budget_bytes: int,
-    guard: float = MP_BYTE_DRIFT_GUARD,
 ) -> int | None:
-    """The K rule itself, taking an estimate from ANY source (the
-    open-loop byte model, the model x a skew factor, or the exact
-    data-driven candidate count — r9): K = ceil(n_tables /
-    ceil(est / budget)), or ``None`` (single-pass) when the stream
-    fits WITH the boundary guard's headroom (estimates inside
-    [budget/guard, budget] chunk minimally instead of risking the
-    measured bounded breach) or chunking cannot subdivide the table
-    list. ``guard`` defaults to the static ``MP_BYTE_DRIFT_GUARD``
-    (the zero-knowledge 1.7x hedge); the r11 two-term estimate —
-    whose survivor term MODELS the drift the static guard hedged —
-    passes the narrower ``MP_TWO_TERM_RESIDUAL_GUARD``."""
-    if est * guard <= disk_budget_bytes:
+    """Pack the table list into passes under the disk budget:
+    K = ceil(n_tables / ceil(est / budget)) tables per pass (at least
+    two passes), or ``None`` (single-pass) when the stream fits with
+    ``MP_BYTE_DRIFT_GUARD`` headroom or a 1-table list cannot be
+    subdivided. ``est`` is the exact count's bytes at sizing time and
+    the first pass's measured bytes per table x the remaining tables
+    at re-pack time — one rule, two inputs."""
+    if est * MP_BYTE_DRIFT_GUARD <= disk_budget_bytes:
         return None
-    n_passes = min(
-        max(-(-est // disk_budget_bytes), 2), n_tables
-    )
+    n_passes = min(max(-(-est // disk_budget_bytes), 2), n_tables)
     if n_passes <= 1:
-        # n_tables == 1: chunking cannot subdivide the table list, so
-        # single-pass is the only plan regardless of the estimate
         return None
     return -(-n_tables // n_passes)
-
-
-def _mp_model_worst_case_bytes(
-    input_bytes: int,
-    dim: int,
-    n_tables: int,
-    n_bits: int,
-    probe_radius: int,
-) -> int:
-    """PROVABLE upper bound on the true candidate stream — the
-    routing test ``sizing='auto'`` uses to decide whether the
-    zero-job model path is safe under ANY bucket distribution (r9).
-
-    Derivation: per table, the ordered (probe, home) candidate rows
-    are sum_b pc(b)·hc(b) where pc counts probe landings and hc home
-    rows. sum_b pc(b) = N·masks (every row probes ``masks`` buckets)
-    and hc(b) ≤ N, so the sum is ≤ masks·N². Unordered candidates
-    are half that: true_pairs ≤ n_tables·masks·N²/2, with equality
-    only under total concentration (every probe landing in a full
-    bucket). Computed from the UNFLOORED product (r9 advice): the
-    earlier form re-expanded the model's floored ``>> n_bits``
-    estimate, understating the analytic bound by up to 2^(n_bits-1)
-    candidate rows — and collapsing to 0 (declaring ANY budget
-    provably safe) whenever n_tables·masks·N² < 2^n_bits. The ceil
-    here keeps the bound a true upper bound at every size. The byte
-    constant is calibration, not proof — documented in
-    ``_MP_CANDIDATE_ROW_BYTES``; the bound inherits its validity
-    window. The measured clustered warehouse sat at 11.2x the model
-    — far inside this bound, which is exactly why the bound is only
-    useful as a SAFETY proof (worst ≤ budget ⇒ no distribution can
-    violate), never as a sizing estimate (chunking by it would
-    over-chunk uniform corpora ~2000x)."""
-    n_rows = max(input_bytes // _MP_EMB_ROW_BYTES(dim), 1)
-    n_masks = len(_probe_masks(n_bits, probe_radius))
-    worst_pairs = -(-(n_tables * n_masks * n_rows * n_rows) // 2)
-    return worst_pairs * _MP_CANDIDATE_ROW_BYTES
 
 
 def _mp_exact_candidate_count(
@@ -957,27 +737,23 @@ def _mp_exact_candidate_count(
     dim: int,
 ) -> int:
     """EXACT unscreened candidate count for the multiprobe over the
-    (id, v) frame ``e`` — the data-driven alternative to the uniform-
-    bucketing byte model (r9, ``sizing='data'``).
+    (id, v) frame ``e`` — what the shuffle tier sizes its passes
+    from. A uniform-bucketing byte model was measured 11.2x under the
+    true stream on a 16-cluster corpus (SCALE.md §Round-9); the count
+    is immune to bucket skew by construction.
 
-    The model's N²/2^k term assumes uniform buckets; a CLUSTERED
-    corpus (the shape near-dup dedup exists for) concentrates rows in
-    few buckets and the true candidate volume can exceed the uniform
-    estimate by ~2^k/(masks·NC) (measured: 11.2x on a 16-cluster
-    warehouse, SCALE.md §Round-9 — enough to blow any budget the
-    model said was safe). This helper counts candidates exactly
-    without materializing any pair: run the signature stage, count
-    rows per (table, bucket), expand each home bucket by the XOR
-    probe masks, and sum home-count x probe-count over matching
-    buckets — a linear job over N rows whose shuffles carry at most
-    L·2^k count rows. ``sum(pc*hc)`` counts ordered (probe, home)
-    row pairs including each row's mask-0 self-match, so unordered
-    candidates = (total − N·L) / 2 — the id_a < id_b filter's
-    exact population.
+    Counts candidates without materializing any pair: run the
+    signature stage, count rows per (table, bucket), expand each home
+    bucket by the XOR probe masks, and sum home-count x probe-count
+    over matching buckets — a linear job over N rows whose shuffles
+    carry at most L·2^k count rows. ``sum(pc*hc)`` counts ordered
+    (probe, home) row pairs including each row's mask-0 self-match,
+    so unordered candidates = (total − N·L) / 2 — the id_a < id_b
+    filter's exact population.
 
     Cost disclosure: this RUNS A JOB at operator-construction time
-    (one linear pass — the same deviation eager passes already make,
-    and negligible next to the quadratic work it sizes)."""
+    (one linear pass — negligible next to the quadratic work it
+    sizes)."""
     n_words = pool // _WORD_BITS
     sig_schema = (
         "id long, "
@@ -1021,391 +797,39 @@ def _mp_exact_candidate_count(
     return max((ordered - selfs) // 2, 0)
 
 
-# Screen-sample sizing (r11, r10 verdict #3): target sampled
-# candidate volume and the evidence floor. 250k sampled candidates
-# put the binomial std-error of the pass fraction under ~0.1% even
-# at a 10% true fraction; below 2000 the guard-zone refinement
-# declines and the static byte-drift guard stays in force.
-MP_SCREEN_SAMPLE_TARGET = 250_000
-MP_SCREEN_SAMPLE_MIN = 2_000
+def _stage_shuffle_write_bytes(sc, group: str | None = None) -> dict | None:
+    """Shuffle bytes WRITTEN per stage, ``{stage_id: bytes}``, for the
+    stages of ``group``'s jobs — or for every stage the driver's
+    app-status store retains when ``group`` is None (the arm-time
+    snapshot). The same aggregated task metrics the Spark UI's stage
+    table shows, so it works identically on a real cluster.
 
-# Residual single-pass guard ON the two-term estimate: the sampled
-# survivor fraction closes the systematic drift term (measured
-# 1.03-1.64x on the r10 NC curve), but the sample has error and the
-# 70 B / 1 KB slopes are calibration. 1.15 covers both without
-# re-creating the 1.7x blanket zone it replaces; re-measured on the
-# same 4 NC rungs in SCALE_LADDER_SKEW_CURVE_r11.json.
-MP_TWO_TERM_RESIDUAL_GUARD = 1.15
-
-# Evidence floor for the sampled vector-byte reading (r12): below
-# this many sampled rows the lz4 blocks are too small to read a
-# stable compression ratio and the static worst case stays in force.
-MP_VECTOR_BYTES_SAMPLE_MIN = 64
-
-
-def _mp_sampled_vector_row_bytes(samp: DataFrame) -> float | None:
-    """Measured COMPRESSED shuffle bytes per (id, vector) row, read
-    from a real exchange of the guard-zone sample (r12, r11 verdict
-    #4). The survivor term of the two-term model charges each
-    screen survivor ~two attached vectors of shuffle file; its static
-    1 KB constant is the raw (incompressible) size, but shuffle files
-    are lz4-compressed and a clustered corpus's near-identical
-    vectors compress ~4x — the NC=256 rung's true stream was ~1.48
-    GiB against a 2.26 GiB incompressible estimate, over-chunking
-    ~4x. Instrument: push every sampled vector through ONE real
-    exchange — a ``collect_list(v)`` aggregate grouped on a
-    NON-unique hash bucket of the id, whose partial buffers carry
-    the raw vector payload through the shuffle write. (The obvious
-    ``groupBy(id).first(v)`` form is a trap: Spark 4's distinct-keys
-    inference rewrites an aggregate grouped on a unique key to a
-    Project and NO exchange happens — measured 1 B/row on a
-    range-backed frame. A 997-bucket group key defeats it, and the
-    downstream ``sum(size(vs))`` keeps the lists unprunable.) Read
-    the job's shuffle-write bytes scoped to a fresh job group,
-    divide by the row count. Same compression codec, same
-    serializer, same payload class as the real pass's survivor
-    attach. Layout caveat (r12 review): grouped list buffers lay a
-    hash-bucket's vectors contiguously where the real attach
-    interleaves them with id pairs, so in principle the sample can
-    compress better than the attach; in practice the delta is
-    second-order — exact duplicates never reach the attach (the
-    cascade collapses them first), near-identical-but-not-equal
-    doubles give lz4's byte matcher no long runs either way
-    (measured NC=256: 403.5 B vs 512 raw, 21% — not 4x), the
-    interleaved ids are small against 512 B arrays, and the 1.15
-    residual guard stands on top. ``None`` on a thin sample or
-    unreachable status store — the static constant then stands.
-
-    Cost disclosure: ONE job over the q-thinned sample rows — the
-    same construction-time eagerness class as the screen sample it
-    extends, run only in the guard zone."""
-    sc = samp.sparkSession.sparkContext
-    import uuid as _uuid
-
-    group = f"cndp-mp-vbytes-{_uuid.uuid4().hex[:12]}"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    pre = _status_store_stage_ids(sc)
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        row = (
-            samp.groupBy(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(997)).alias("g")
-            )
-            .agg(F.collect_list("v").alias("vs"))
-            .agg(
-                F.sum(F.size("vs")).alias("n"),
-                F.count(F.lit(1)).alias("groups"),
-            )
-            .collect()[0]
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    n = int(row["n"] or 0)
-    if n < MP_VECTOR_BYTES_SAMPLE_MIN:
-        return None
-    wrote = _group_shuffle_write_bytes(sc, group, pre)
-    if wrote is None or wrote <= 0:
-        return None
-    return wrote / n
-
-
-def _mp_sampled_rider_row_bytes(
-    surv_pairs: DataFrame,
-    samp: DataFrame,
-    upstream_bytes: int | None = None,
-) -> float | None:
-    """Measured marginal shuffle bytes PER SURVIVOR through a replica
-    of the real verify-attach micro-plan (r12 follow-up to the vector
-    instrument; closes the clustered over-chunk residual in SCALE.md
-    §Round-12).
-
-    What a survivor actually costs beyond the universal ~70 B base,
-    read off ``pass_pairs``'s physical plan: (a) the screened id-pair
-    exchange hashed on id_a (~16 B), then (b) the attach join's
-    output — (id_a, id_b, ea, sqrt_na), ONE vector riding per pair —
-    re-exchanged hashed on id_b for the eb-side join. The static
-    model's 2-vector charge is therefore ~2x high even before
-    compression; worse, the attach join streams its output in id_a
-    order, so a high-multiplicity id_a lays VERBATIM copies of the
-    same ``ea`` bytes consecutively into each partition segment and
-    lz4 collapses them — the r12 NC=256 rung measured ~163 B per
-    survivor where the model charged 876 (observed/est 0.27 on every
-    pass, SCALE_LADDER_SKEW_CURVE_r12.json). Neither effect is
-    reachable from per-id vector bytes; it must be measured on the
-    pair stream itself.
-
-    Instrument: run the sampled survivors through the SAME micro-plan
-    — SHUFFLE_HASH attach join on id_a, then ``repartition(id_b)``
-    (hash exchange, session shuffle-partition count, row serializer
-    and codec all identical to the real ENSURE_REQUIREMENTS exchange;
-    verified plan-shape: the full rider row sits directly under the
-    exchange) — and read the job-group-scoped shuffle-write bytes
-    over the survivor count. The terminal aggregate folds every
-    column into its sum so ColumnPruning cannot strip the vector
-    payload below the repartition (the same trap class the vector
-    instrument's unique-key rewrite documents).
-
-    ``upstream_bytes`` (review r12): the job's group total also
-    counts the sig/probe/home exchanges upstream of the survivor
-    filter — NOT small (signature words x the probe-mask explosion;
-    at low survivor counts they dominate the reading). The caller
-    measures exactly that pipeline as the census job's own
-    group-scoped bytes (identical lineage, deterministic recompute →
-    bit-equal shuffle bytes) and passes it here to be subtracted,
-    leaving the survivor's true marginal: the screened id-pair
-    exchange plus the rider exchange. Remaining fidelity caveats,
-    both in the SAFE (over-reading) direction: the q-thinned sample
-    has ~q of the real per-id_a multiplicity, so segment adjacency —
-    and thus compression — is weaker than the real stream's; and the
-    sampled ev vector side stays in the net total (a per-pass floor
-    in the real plan, vanishing against the rider term). ``None`` on
-    a thin sample, an unreachable status store, or a non-positive
-    net after subtraction — the 2-vector worst case then stands.
-
-    Cost disclosure: ONE job over the sampled survivors (~target
-    candidates x survivor fraction rows, bounded by the sample
-    target), same construction-time eagerness class as the screen
-    sample it extends, run only in the guard zone."""
-    sc = samp.sparkSession.sparkContext
-    import uuid as _uuid
-
-    group = f"cndp-mp-rider-{_uuid.uuid4().hex[:12]}"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    pre = _status_store_stage_ids(sc)
-    ev = samp.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("ea"),
-        F.sqrt(_norm2("v")).alias("sqrt_na"),
-    )
-    probe = (
-        surv_pairs.join(ev.hint("SHUFFLE_HASH"), "id_a")
-        .repartition(F.col("id_b"))
-        .agg(
-            F.sum(
-                F.aggregate("ea", F.lit(0.0), lambda a, x: a + x)
-                + F.col("sqrt_na")
-                + F.col("id_a")
-                + F.col("id_b")
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        row = probe.collect()[0]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    n = int(row["n"] or 0)
-    if n < MP_VECTOR_BYTES_SAMPLE_MIN:
-        return None
-    wrote = _group_shuffle_write_bytes(sc, group, pre)
-    if wrote is None or wrote <= 0:
-        return None
-    if upstream_bytes is not None and upstream_bytes > 0:
-        wrote -= upstream_bytes
-        if wrote <= 0:
-            return None
-    return wrote / n
-
-
-def _mp_sampled_survivor_frac(
-    e: DataFrame,
-    pool: int,
-    n_bits: int,
-    n_tables: int,
-    probe_radius: int,
-    hamming_max: int,
-    dim: int,
-    n_candidates_exact: int,
-    target: int = MP_SCREEN_SAMPLE_TARGET,
-) -> tuple[float, int, float | None, float | None, float | None] | None:
-    """Candidate-weighted Hamming-screen pass fraction — plus the
-    measured compressed per-vector shuffle bytes (r12, see
-    ``_mp_sampled_vector_row_bytes``), the sampled
-    survivors-per-distinct-id adjacency census (r12, observability),
-    and the measured per-survivor RIDER bytes through a replica of
-    the real attach exchange (r12, see
-    ``_mp_sampled_rider_row_bytes`` — the reading the survivor term
-    actually sizes from) — estimated on a deterministic id-sample of
-    the corpus: the measured inputs the two-term byte model needs
-    BEFORE any pass runs (the pilot can only measure after the
-    single-pass/chunk decision is spent). Returns ``(survivor_frac,
-    sampled_candidates, vector_row_bytes|None,
-    survivor_pairs_per_id|None, rider_row_bytes|None)``.
-
-    Sampling ids uniformly at rate q thins the candidate stream to
-    ~q² of its pairs with each bucket's contribution scaled equally
-    (E[sampled pairs from bucket b] = q²·pc(b)·hc(b)), so the mean of
-    the screen predicate over the sampled stream is an unbiased
-    estimator of the true candidate-weighted pass fraction — the
-    quantity the survivor term multiplies. q is derived from the
-    EXACT candidate count (already computed on this path) to land
-    ~``target`` sampled candidates; a thin result (<
-    ``MP_SCREEN_SAMPLE_MIN``) returns ``None`` and the caller keeps
-    the static guard. The id hash is seeded and content-free, so
-    reruns sample identically.
-
-    Cost disclosure: up to THREE jobs, each linear in q·N signature
-    rows plus the ~``target`` sampled candidate rows (the fraction
-    census, the vector-byte instrument, and — when the expected
-    survivor count ``frac x n_sampled`` clears the
-    ``MP_VECTOR_BYTES_SAMPLE_MIN`` evidence floor — the rider
-    instrument; below the floor the rider job would re-run the
-    signature pipeline only to decline, and a fraction that small
-    makes the survivor term negligible regardless. The signature
-    mapInPandas over the q-thinned sample recomputes per job rather
-    than persisting a frame this small) — the same disclosed
-    construction-time eagerness class as the exact count it refines,
-    and run only in the guard zone where the single-pass decision is
-    razor-edge."""
-    if n_candidates_exact <= 0:
-        return None
-    import math
-
-    q = min(1.0, math.sqrt(target / n_candidates_exact))
-    m = 1 << 20
-    keep = max(1, int(q * m))
-    samp = e.filter(
-        F.pmod(F.xxhash64(F.col("id"), F.lit(9173)), F.lit(m)) < keep
-    )
-    n_words = pool // _WORD_BITS
-    sig_schema = (
-        "id long, "
-        + ", ".join(f"w{m_} long" for m_ in range(n_words))
-        + ", bk array<long>"
-    )
-    sigs = samp.mapInPandas(
-        _mp_signature_gen(pool, n_bits, n_tables, dim), sig_schema
-    )
-    homes = sigs.select(
-        "id",
-        *[f"w{m_}" for m_ in range(n_words)],
-        F.posexplode("bk").alias("tbl", "bucket"),
-    )
-    masks = _probe_masks(n_bits, probe_radius)
-    mask_arr = F.expr("array(" + ",".join(str(v) for v in masks) + ")")
-    probes = homes.select(
-        F.col("id").alias("id_a"),
-        *[F.col(f"w{m_}").alias(f"wa{m_}") for m_ in range(n_words)],
-        "tbl",
-        F.explode(mask_arr).alias("mask"),
-        "bucket",
-    ).select(
-        "id_a",
-        *[f"wa{m_}" for m_ in range(n_words)],
-        "tbl",
-        F.col("bucket").bitwiseXOR(F.col("mask")).alias("bucket"),
-    )
-    hb = homes.select(
-        F.col("id").alias("id_b"),
-        *[F.col(f"w{m_}").alias(f"wb{m_}") for m_ in range(n_words)],
-        "tbl",
-        "bucket",
-    )
-    hamming = None
-    for m_ in range(n_words):
-        term = F.bit_count(
-            F.col(f"wa{m_}").bitwiseXOR(F.col(f"wb{m_}"))
-        )
-        hamming = term if hamming is None else hamming + term
-    surv = hamming <= F.lit(hamming_max)
-    # bound ONCE and reused by the census aggregate and the rider's
-    # survivor stream (review r12: a drifted second copy would make
-    # the rider measure a different pair stream than the fraction it
-    # is paired with)
-    cand = probes.join(hb.hint("SHUFFLE_HASH"), ["tbl", "bucket"]).filter(
-        F.col("id_a") < F.col("id_b")
-    )
-    # the census job runs in its OWN job group so its group-scoped
-    # shuffle bytes — the sig/probe/home exchanges that are exactly
-    # the rider job's upstream, recomputed deterministically — can be
-    # SUBTRACTED from the rider job's total, leaving the survivor's
-    # true marginal cost (review r12: at low survivor counts the
-    # fixed upstream otherwise dominates the per-survivor reading)
-    sc = e.sparkSession.sparkContext
-    import uuid as _uuid
-
-    group_f = f"cndp-mp-screen-{_uuid.uuid4().hex[:12]}"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    pre_f = _status_store_stage_ids(sc)
-    frac_probe = cand.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(surv.cast("double")).alias("frac"),
-        # amortization census (r12): how many distinct ids the
-        # sampled survivors touch. Recorded as the ADJACENCY
-        # covariate behind the rider instrument's compression
-        # reading (high pairs-per-id -> verbatim ea repeats in
-        # the rider exchange's partition segments -> lz4 collapse
-        # — the NC=256 mechanism). It deliberately feeds no
-        # sizing arithmetic: the bytes are governed by the
-        # per-PAIR rider row, not distinct-id fan-out, so
-        # dividing the survivor charge by pairs-per-id (the
-        # design SCALE.md §Round-12 first sketched) is UNSAFE —
-        # at NC=256 even the q-thinned LOWER bound (~tens) would
-        # collapse the survivor term and declare single-pass
-        # safe, while the true single-pass stream (4.2 GB
-        # measured) breaches the 2 GiB budget. The rider
-        # instrument measures the compression the adjacency
-        # actually buys instead of theorizing it.
-        F.approx_count_distinct(
-            F.when(surv, F.col("id_a"))
-        ).alias("d_a"),
-        F.approx_count_distinct(
-            F.when(surv, F.col("id_b"))
-        ).alias("d_b"),    )
-    sc.setLocalProperty("spark.jobGroup.id", group_f)
-    try:
-        row = frac_probe.collect()[0]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    upstream_bytes = _group_shuffle_write_bytes(sc, group_f, pre_f)
-    n_sampled = int(row["n"] or 0)
-    if n_sampled < MP_SCREEN_SAMPLE_MIN:
-        return None
-    frac = float(row["frac"])
-    d_ids = int(row["d_a"] or 0) + int(row["d_b"] or 0)
-    pairs_per_id = (
-        round(2.0 * frac * n_sampled / d_ids, 2) if d_ids else None
-    )
-    vec_row_bytes = _mp_sampled_vector_row_bytes(samp)
-    rider_row_bytes = None
-    # gate on the EXPECTED survivor count (frac x candidates — the
-    # recompute is deterministic, so the count is exactly
-    # predictable): below the evidence floor the rider job would
-    # re-run the whole signature pipeline only to decline (review
-    # r12). Harmless to the estimate — a fraction that small makes
-    # the survivor term negligible against the 70 B base regardless
-    # of srow.
-    if frac * n_sampled >= MP_VECTOR_BYTES_SAMPLE_MIN:
-        surv_pairs = cand.filter(surv).select("id_a", "id_b")
-        rider_row_bytes = _mp_sampled_rider_row_bytes(
-            surv_pairs, samp, upstream_bytes
-        )
-    return frac, n_sampled, vec_row_bytes, pairs_per_id, rider_row_bytes
-
-
-def _observed_shuffle_write_bytes(sc) -> int | None:
-    """Total shuffle bytes WRITTEN across the stages the driver's
-    app-status store currently retains, via the same aggregated
-    metrics the Spark UI's stage table shows — works identically on a
-    real cluster (the driver aggregates executor task metrics), which
-    is why the feedback hook reads this and not the local filesystem.
-    ``None`` when the status-store internals are unreachable (the
-    hook then disarms rather than guessing). Deltas of this total
-    bracket the shuffle volume of the jobs run between two calls;
-    note the store evicts old stages past ``spark.ui.retainedStages``
-    (default 1000), so deltas are only trusted while they stay
-    non-negative — the caller checks.
-
-    SINGLE-WRITER CAVEAT (r9 verdict #4): this total is APP-WIDE —
-    a concurrent job from another thread in the same SparkSession
-    inflates a delta taken across its run. The feedback hook
-    therefore prefers ``_group_shuffle_write_bytes`` (deltas scoped
-    to the run's own job group); this app-wide reader remains the
-    fallback for callers without a group and for the Spark-free
-    tests."""
+    Scoping to the run's own job group (the ``spark.jobGroup.id``
+    local property, thread-scoped) keeps a concurrent job from
+    another thread in the same SparkSession out of a pass reading.
+    Spark lists SKIPPED stages in a job's stageIds too — shuffle
+    output computed BEFORE the group existed and merely reused — so
+    the caller subtracts the ids of its arm-time snapshot. Residual
+    (bounded the safe way): a pre-group stage that physically
+    RE-RUNS inside the group keeps its id and its new bytes stay
+    excluded — an under-read. ``None`` when the status-store
+    internals are unreachable; stages evicted past
+    ``spark.ui.retainedStages`` drop out of the map."""
     try:
         store = sc._jsc.sc().statusStore()
+        wanted = None
+        if group is not None:
+            wanted = set()
+            jobs = store.jobsList(None)
+            for i in range(jobs.size()):
+                j = jobs.apply(i)
+                jg = j.jobGroup()
+                if jg.isDefined() and jg.get() == group:
+                    sids = j.stageIds()
+                    for s in range(sids.size()):
+                        wanted.add(sids.apply(s))
+            if not wanted:
+                return {}
         stages = store.stageList(
             None,
             getattr(store, "stageList$default$2")(),
@@ -1413,130 +837,33 @@ def _observed_shuffle_write_bytes(sc) -> int | None:
             getattr(store, "stageList$default$4")(),
             getattr(store, "stageList$default$5")(),
         )
-        return sum(
-            stages.apply(i).shuffleWriteBytes()
-            for i in range(stages.size())
-        )
-    except Exception:  # pragma: no cover - depends on py4j internals
-        return None
-
-
-def _status_store_stage_ids(sc) -> frozenset:
-    """Stage ids the driver's app-status store currently retains —
-    the snapshot the feedback hook takes at arm time so stages
-    computed BEFORE the run's job group existed (r10 advice: Spark
-    lists SKIPPED stages in a job's stageIds too — a cached/shuffle-
-    reused lineage produced by the exact-count job or a caller
-    persist) can be excluded from the group sum instead of landing
-    their historical bytes in the first pass's delta. Empty set when
-    the store is unreachable (the group reader will then return
-    ``None`` on its own and disarm the hook)."""
-    try:
-        store = sc._jsc.sc().statusStore()
-        stages = store.stageList(
-            None,
-            getattr(store, "stageList$default$2")(),
-            getattr(store, "stageList$default$3")(),
-            getattr(store, "stageList$default$4")(),
-            getattr(store, "stageList$default$5")(),
-        )
-        return frozenset(
-            stages.apply(i).stageId() for i in range(stages.size())
-        )
-    except Exception:  # pragma: no cover - depends on py4j internals
-        return frozenset()
-
-
-def _group_shuffle_write_bytes(
-    sc, group: str, exclude: frozenset = frozenset()
-) -> int | None:
-    """Shuffle bytes WRITTEN by the stages of ``group``'s jobs only —
-    the job-group-scoped twin of ``_observed_shuffle_write_bytes``
-    (r9 verdict #4: the app-wide total makes the feedback hook's
-    deltas lie under concurrent jobs in the same SparkSession; the
-    eager chunked runner tags its passes with a fresh job group via
-    the ``spark.jobGroup.id`` local property and reads back only its
-    own stages, so a sibling job can no longer inflate a pass
-    reading). Jobs from other threads keep their own group (local
-    properties are thread-scoped) and are excluded by construction.
-
-    ``exclude`` (r10 advice): stage ids to drop from the sum even
-    when a group job lists them — Spark's job pages include SKIPPED
-    stages, i.e. shuffle output computed BEFORE the group existed
-    and merely reused by a group job; counting those pre-group bytes
-    would inflate the pilot reading and could trigger a spurious
-    divergence warning or an unnecessarily fine mid-run re-chunk.
-    The hook passes its arm-time status-store snapshot
-    (``_status_store_stage_ids``). Residual (documented, bounded the
-    safe way): a pre-group stage that physically RE-RUNS inside the
-    group (lost shuffle files on a cluster) keeps its stage id and
-    its new bytes stay excluded — an under-read that at worst delays
-    a re-chunk by one pass, where the next pass's own reading
-    catches it.
-
-    ``None`` when the status-store internals are unreachable — the
-    hook disarms, same contract as the app-wide reader. Eviction
-    still applies: a stage evicted past ``spark.ui.retainedStages``
-    drops out of the sum and the caller's negative-delta check
-    disarms the hook."""
-    try:
-        store = sc._jsc.sc().statusStore()
-        jobs = store.jobsList(None)
-        stage_ids = set()
-        for i in range(jobs.size()):
-            j = jobs.apply(i)
-            jg = j.jobGroup()
-            if jg.isDefined() and jg.get() == group:
-                sids = j.stageIds()
-                for s in range(sids.size()):
-                    sid = sids.apply(s)
-                    if sid not in exclude:
-                        stage_ids.add(sid)
-        if not stage_ids:
-            return 0
-        stages = store.stageList(
-            None,
-            getattr(store, "stageList$default$2")(),
-            getattr(store, "stageList$default$3")(),
-            getattr(store, "stageList$default$4")(),
-            getattr(store, "stageList$default$5")(),
-        )
-        total = 0
+        out: dict = {}
         for i in range(stages.size()):
             # bind once: each .apply/.stageId is a py4j round-trip,
             # and this reader runs at every pass barrier
             s = stages.apply(i)
-            if s.stageId() in stage_ids:
-                total += s.shuffleWriteBytes()
-        return total
+            sid = s.stageId()
+            if wanted is None or sid in wanted:
+                out[sid] = out.get(sid, 0) + s.shuffleWriteBytes()
+        return out
     except Exception:  # pragma: no cover - depends on py4j internals
         return None
 
 
-# Deterministic inter-pass shuffle reclamation (r12, r11 verdict #1).
-# The r11 eager loop "cleaned" a finished pass's shuffle files with
-# _gc.collect() + System.gc() and immediately started the next pass;
-# ContextCleaner processes the weak-reference queue ASYNCHRONOUSLY,
-# so whether consecutive passes' files overlapped on disk depended on
-# cleanup timing, not the plan — SCALE_LADDER_PILOT_TAX_r11.json
-# recorded a 6.45 GB peak vs 3.67 GB for a bit-identical twin run
-# (same pass plan, shuffle bytes equal to within 166 KB) under a
-# 4 GiB budget. The disk budget was therefore soft by up to ~one
-# pass of overlap. The fix drives the SAME cleanup ContextCleaner
-# performs, synchronously: enumerate the shuffle ids registered with
-# the driver's MapOutputTrackerMaster before/after each pass and call
+# Deterministic inter-pass shuffle reclamation (r12). An eager loop
+# that merely dropped a finished pass's references and nudged the JVM
+# left the files to ContextCleaner's ASYNCHRONOUS queue, so whether
+# consecutive passes' files overlapped on disk depended on cleanup
+# timing, not the plan — SCALE_LADDER_PILOT_TAX_r11.json recorded a
+# 6.45 GB peak vs 3.67 GB for a bit-identical twin run under a 4 GiB
+# budget. The reclaimer drives the SAME cleanup synchronously:
+# enumerate the shuffle ids registered with the driver's
+# MapOutputTrackerMaster before/after each pass and call
 # ContextCleaner.doCleanupShuffle(id, blocking=true) on the pass's
 # ids once its result is checkpointed — after the call returns, the
-# files are gone (measured: scratch bytes drop to the survivor floor
-# in ~30 ms; a later job that needed a cleaned shuffle recomputes its
-# map stage, Spark's normal lost-shuffle path). Disable via the
-# ``spark.cndp.mp.deterministicReclaim`` conf (set "false") — e.g.
-# when OTHER jobs run concurrently in this SparkSession: ids
-# registered during a pass window are assumed to be the pass's own
-# (the same single-writer caveat _observed_shuffle_write_bytes
-# documents); a swept concurrent shuffle is never a correctness bug
-# (its consumer recomputes) but is a perf tax on that job.
-MP_DETERMINISTIC_RECLAIM_CONF = "spark.cndp.mp.deterministicReclaim"
+# files are gone (a later job that needed a cleaned shuffle recomputes
+# its map stage, Spark's normal lost-shuffle path). Ids are attributed
+# by exclusion: a window in which any foreign job ran is not swept.
 
 
 def _live_shuffle_ids(sc) -> frozenset | None:
@@ -1680,52 +1007,47 @@ class _ShuffleReclaimer:
     """Per-run inter-pass shuffle reclamation driver. Snapshots the
     live shuffle census at arm time; ``after_pass()`` deletes the
     shuffles the finished (checkpointed) pass registered and
-    re-snapshots. Degrades to the r11 async behavior (py4j ref drop +
-    System.gc nudge) — recording ``None`` for that pass — in three
+    re-snapshots. Degrades to the async behavior (py4j ref drop +
+    System.gc nudge) — recording ``None`` for that pass — in two
     cases: (a) internals unreachable (one-time warning: the budget is
-    soft by up to ~one pass of cleanup overlap, the honest statement
-    of the r11 behavior); (b) the pass window was NOT exclusively
-    ours — a foreign job ran during it (new foreign job ids in the
-    status store) or spans it (active now): the census diff cannot
-    attribute ids, and sweeping a sibling's shuffle is not a benign
-    recompute — downstream of a python stage Spark marks the lost
-    shuffle INDETERMINATE and aborts the consumer (both failure
-    shapes measured in the concurrent-runs test before this guard
-    existed); (c) the caller's own opt-out via
-    ``MP_DETERMINISTIC_RECLAIM_CONF`` (silent)."""
+    soft by up to ~one pass of cleanup overlap); (b) the pass window
+    was NOT exclusively ours — a foreign job ran during it (new
+    foreign job ids in the status store) or spans it (active now):
+    the census diff cannot attribute ids, and sweeping a sibling's
+    shuffle is not a benign recompute — downstream of a python stage
+    Spark marks the lost shuffle INDETERMINATE and aborts the
+    consumer (both failure shapes measured in the concurrent-runs
+    test before this guard existed)."""
 
-    def __init__(self, sc, enabled: bool = True, job_group: str | None = None):
+    def __init__(self, sc, job_group: str | None = None):
         self._sc = sc
-        self._opted_out = not enabled
         self._group = job_group
-        self._snapshot = _live_shuffle_ids(sc) if enabled else None
-        self._foreign_seen = (
-            _foreign_job_ids(sc, job_group) if enabled else None
-        )
+        self._snapshot = _live_shuffle_ids(sc)
+        self._foreign_seen = _foreign_job_ids(sc, job_group)
         if self._foreign_seen is None:
             # no attribution census => never safe to sweep
             self._snapshot = None
         self._warned = False
         self.cleaned_per_pass: list = []
 
-    def _warn_once(self, msg: str) -> None:
-        if self._warned or self._opted_out:
+    def _warn_once(self, msg: str, stacklevel: int = 4) -> None:
+        if self._warned:
             return
         self._warned = True
         import warnings
 
-        warnings.warn(msg, RuntimeWarning, stacklevel=4)
+        warnings.warn(msg, RuntimeWarning, stacklevel=stacklevel)
 
     def _window_was_exclusive(self) -> bool | None:
-        """Tri-state (r12 review — the earlier bool form re-armed a
-        degraded reclaimer and a later pass crashed on
-        ``frozenset - None``): True = the window since the last
-        barrier contained OUR group's jobs exclusively (no new
-        foreign job ids — a sibling that ran-and-finished inside the
-        window — and no foreign job active — one spanning it);
-        False = shared window (skip this sweep, stay armed);
-        None = the attribution internals are unreachable (caller
-        disarms). Updates the foreign census on a readable store."""
+        """Tri-state (r12 review — a bool form re-armed a degraded
+        reclaimer and a later pass crashed on ``frozenset - None``):
+        True = the window since the last barrier contained OUR
+        group's jobs exclusively (no new foreign job ids — a sibling
+        that ran-and-finished inside the window — and no foreign job
+        active — one spanning it); False = shared window (skip this
+        sweep, stay armed); None = the attribution internals are
+        unreachable (caller disarms). Updates the foreign census on a
+        readable store."""
         if self._foreign_seen is None:
             return None
         now_f = _foreign_job_ids(self._sc, self._group)
@@ -1780,7 +1102,6 @@ class _ShuffleReclaimer:
                 keep = _persisted_shuffle_ids(self._sc)
                 if keep is None:
                     self._snapshot = None  # can't prove safety: disarm
-                    cleaned = None
                 else:
                     cleaned = _reclaim_shuffle_ids(
                         self._sc, census - self._snapshot - keep
@@ -1789,17 +1110,6 @@ class _ShuffleReclaimer:
                     self._snapshot = _live_shuffle_ids(self._sc)
                     if self._snapshot is None:  # degraded mid-run
                         cleaned = None
-                elif self._snapshot is not None:
-                    self._warn_once(
-                        "multiprobe eager passes: deterministic shuffle "
-                        "reclamation is unavailable (ContextCleaner or "
-                        "MapOutputTracker internals unreachable) — "
-                        "falling back to async GC cleanup. The disk "
-                        "budget is soft by up to ~one pass of "
-                        "shuffle-file overlap until cleanup lands (the "
-                        "measured r11 behavior: a 4 GiB budget peaking "
-                        "at 6.45 GB on cleanup lag)."
-                    )
         if cleaned is None:
             # fallback: drop py4j refs to the pre-checkpoint plan and
             # nudge the JVM so ContextCleaner reclaims the pass's
@@ -1807,171 +1117,98 @@ class _ShuffleReclaimer:
             # to one pass of overlap under cleanup lag
             import gc as _gc
 
-            if not (self._warned or self._opted_out):
-                self._warned = True
-                import warnings
-
-                warnings.warn(
-                    "multiprobe eager passes: deterministic shuffle "
-                    "reclamation is unavailable — falling back to "
-                    "async GC cleanup; the disk budget is soft by up "
-                    "to ~one pass of shuffle-file overlap.",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
+            self._warn_once(
+                "multiprobe eager passes: deterministic shuffle "
+                "reclamation is unavailable — falling back to async GC "
+                "cleanup; the disk budget is soft by up to ~one pass "
+                "of shuffle-file overlap.",
+                stacklevel=3,
+            )
             _gc.collect()
             self._sc._jvm.System.gc()
         self.cleaned_per_pass.append(cleaned)
         return cleaned
 
 
-# Last eager-chunked run's measured-vs-modeled sizing feedback (r8
-# verdict #1: the calibrated stream estimate is open-loop — this
-# closes it). Written by _ann_lsh_multiprobe_distinct after each
-# eager chunked run whose estimate was available: per-pass observed
-# shuffle-write bytes vs the estimate's slice, plus run totals and
-# any mid-run re-sizes (r10). A cluster operator (or a test) reads
-# it to see how far reality drifted from the model that sized the
-# passes. This slot is the LAST-RUN ALIAS; concurrent runs in one
-# interpreter each keep their own entry in MP_SIZING_REPORTS (r11,
-# r10 verdict #4) so racing multiprobe runs no longer clobber each
-# other's post-hoc record.
+# Per-run pass reports. LAST_MP_SIZING_REPORT is the last chunked
+# run's report; MP_SIZING_REPORTS keeps one per run so racing runs do
+# not clobber each other, keyed by the CALLER's spark.jobGroup.id when
+# one was set at call time (the handle a concurrent caller can know),
+# else by the run's internal cndp-mp-passes-<uuid> group (always in
+# the report's "job_group" field). Bounded and insertion-ordered: the
+# stalest entry evicts past MP_SIZING_REPORTS_MAX. Mutated only under
+# _MP_REPORTS_LOCK.
 LAST_MP_SIZING_REPORT: dict | None = None
-
-# Per-run sizing reports, keyed by job group (r11, r10 verdict #4).
-# Key: the CALLER's spark.jobGroup.id local property if one was set
-# when the operator was invoked (the practical retrieval handle — a
-# caller who wants their run's report sets a group first and looks
-# it up here), else the run's internal cndp-mp-sizing-<uuid> group
-# (always present in the report's "job_group" field). Bounded,
-# insertion-ordered: oldest entries evict past
-# MP_SIZING_REPORTS_MAX so a long-lived session cannot grow it
-# without bound. Mutated only under _MP_REPORTS_LOCK.
 MP_SIZING_REPORTS: "_OrderedDict[str, dict]" = _OrderedDict()
 MP_SIZING_REPORTS_MAX = 32
 _MP_REPORTS_LOCK = _Lock()
 
-# Divergence band for the one-time runtime warning: the model's
-# calibration constants absorb fixed floors and the estimate is
-# deliberately conservative on duplicated corpora, so anything within
-# 4x either way is "the model working as documented"; beyond it the
-# constants have drifted from this workload's physics and the next
-# un-warned run may size K wrong (under-chunk -> disk wall;
-# over-chunk -> the measured ~3x wall loss).
-MP_SIZING_DIVERGENCE_BAND = 4.0
-
-# Pilot-pass sizing for ALL adaptive chunked runs (r10, r9 verdict
-# #1): the first pass is shrunk to tables_per_pass //
-# MP_PILOT_DIVISOR tables (>= 1) so the run measures the real
-# per-table shuffle rate BEFORE committing a full-size pass to an
-# estimate. Why it must be the FIRST pass: re-sizing can only go
-# finer, so a refuted estimate discovered after a full-size pass has
-# already paid that pass's budget violation — the measured clustered
-# drift (11.2x, NC=16) would blow the first full MODEL-sized pass
-# ~5.6x under a 2x skew hedge, while the 1/8 pilot stays inside the
-# budget for any residual drift < 8x and costs one extra pass
-# barrier (~the fixed per-pass floor) on corpora where the estimate
-# was right. DATA-sized runs pilot too (r10 NC sweep,
-# SCALE_LADDER_SKEW_CURVE_r10): the exact count nails the candidate
-# ROWS, but the ~70 B/candidate byte constant drifts with the
-# Hamming-screen pass fraction — measured 1.56x at NC=64, where the
-# un-piloted count-sized first pass (80 tables) shuffled 2.58 GB
-# against a 2 GiB budget before the mid-run re-size could act; the
-# re-measured run's 10-table pilot read 0.49 GB and re-chunked
-# 80->38, every pass inside the budget (SCALE_LADDER_SKEW_CURVE_r10).
+# The first pass of a budget-sized chunked run is small: 1/8 of the
+# packed K (>= 1 table). It is the measurement the rest of the run is
+# packed from, taken before any full-size pass can breach the budget:
+# the count fixes the candidate ROWS, but bytes per candidate drift
+# with the Hamming-screen pass fraction (up to 1.93x measured), and a
+# full first pass pays any drift before it is seen — the r12 no-pilot
+# control shuffled 5.43 GB in its first pass against a 4 GiB budget
+# (SCALE_LADDER_PILOT_TAX_r12.json). Costs one extra pass barrier.
 MP_PILOT_DIVISOR = 8
 
-# Below this per-pass volume the divergence warning stays silent
-# (the report still records): every pass pays a fixed shuffle floor —
-# signature-persist partials, bucket-count exchanges, shuffle-file
-# metadata — that the marginal ~70 B/candidate constant deliberately
-# does not model (it was calibrated at tens-of-GB passes where the
-# floor vanishes). Measured: a sf0.001-scale chunked pass shuffles
-# ~0.9 MB against a ~0.1 MB estimate slice — a 8x "divergence" that
-# is all floor, no drift. 64 MiB is safely above any observed floor
-# and 3 orders of magnitude below the passes the budget exists for.
+# A first pass that shuffled less than this is dominated by fixed
+# per-pass floors (signature partials, bucket-count exchanges,
+# shuffle-file metadata — ~0.9 MB on a sf0.001 pass), so its per-table
+# rate is not evidence and the run is not re-packed from it. 64 MiB
+# sits far above any observed floor and far below the passes the
+# budget exists for.
 MP_SIZING_FEEDBACK_MIN_BYTES = 64 * 1024 * 1024
 
 
 class _MpSizingFeedback:
-    """Closes the loop on the candidate-stream estimate (r8 verdict
-    #1): the sizer's constants are calibration, not physics — if the
-    pool/word packing, probe shape, or vector compressibility drift,
-    the model silently sizes K wrong until a job meets the disk wall.
-    This hook makes drift observable: snapshot the shuffle-write
-    total before the run, re-read it at each eager pass's
-    materialization barrier, and compare the delta against the
-    estimate's slice for that pass. One RuntimeWarning per run past
-    ``MP_SIZING_DIVERGENCE_BAND`` (direction-specific advice;
-    suppressed below ``MP_SIZING_FEEDBACK_MIN_BYTES``, where fixed
-    per-pass floors the marginal constant never modeled dominate),
-    and the full per-pass record lands in ``LAST_MP_SIZING_REPORT``
-    either way.
+    """Measure each eager pass and re-pack the run from the first one.
 
-    When ``job_group`` is given, readings come from
-    ``_group_shuffle_write_bytes`` — deltas scoped to the run's own
-    jobs, immune to concurrent jobs in the same SparkSession (r9
-    verdict #4); without one, the app-wide total with its documented
-    single-writer caveat.
-
-    When ``disk_budget_bytes`` is given the hook is CORRECTIVE, not
-    just observable (r9 verdict #1): after each measured pass,
-    ``resize`` projects the measured worst per-table shuffle rate
-    over the next pass, and when that projection exceeds the budget
-    it re-derives K for the REMAINING table list from the measured
-    rate (``_mp_k_from_estimate`` — the same K rule the sizer used,
-    fed measurement instead of estimate). Mid-run re-sizes only ever
-    go FINER: the asymmetric loss stands (under-chunking risks the
-    unbounded disk wall, over-chunking costs the bounded ~3x), so a
-    low-reading rate never coarsens the plan. Passes below the
-    feedback floor contribute no rate — floor noise must not drive a
-    re-chunk.
+    Snapshots the status store's stage ids at arm time, then reads
+    the run's job-group-scoped shuffle-write bytes at each pass
+    barrier (``_stage_shuffle_write_bytes``) and records the delta
+    per pass. When the run was sized from a disk budget, ``repack``
+    — called once, after the first pass — projects that pass's
+    measured bytes per table over the next pass and, when the
+    projection exceeds the budget, packs the REMAINING tables with
+    the same K rule the sizer used (``_mp_k_from_estimate``). It only
+    ever goes finer: a too-fine pack costs the bounded pass-barrier
+    tax, a too-coarse one meets the disk wall.
 
     Disarms itself (never raises, never blocks the job) when the
     status store is unreachable or a delta goes negative (stage
-    eviction past ``spark.ui.retainedStages`` rolled the total back —
-    a stale reading is worse than none)."""
+    eviction past ``spark.ui.retainedStages`` — a stale reading is
+    worse than none)."""
 
     def __init__(
         self,
         sc,
-        est_stream_bytes: int,
         n_tables: int,
+        job_group: str,
+        est_stream_bytes: int | None = None,
         disk_budget_bytes: int | None = None,
-        job_group: str | None = None,
         pilot_tables: int | None = None,
         caller_group: str | None = None,
     ):
         self._sc = sc
-        self._est = est_stream_bytes
         self._n_tables = n_tables
-        self._budget = disk_budget_bytes
         self._group = job_group
+        self._est = est_stream_bytes
+        self._budget = disk_budget_bytes
         self._pilot = pilot_tables
         self._caller_group = caller_group
         self._passes: list[dict] = []
-        self._resizes: list[dict] = []
-        self._reclaim: dict | None = None
-        self._warned = False
-        self._resize_warned = False
-        # arm-time snapshot: stages that already exist were computed
-        # BEFORE this run's group — a group job that merely REUSES
-        # one lists it as SKIPPED, and its historical bytes must not
-        # land in a pass delta (r10 advice; see
-        # _group_shuffle_write_bytes's ``exclude``)
-        self._preexisting = (
-            _status_store_stage_ids(sc)
-            if job_group is not None
-            else frozenset()
-        )
+        self._repack: dict | None = None
+        snap = _stage_shuffle_write_bytes(sc)
+        self._preexisting = frozenset(snap or ())
         self._base = self._read()
 
     def _read(self) -> int | None:
-        if self._group is not None:
-            return _group_shuffle_write_bytes(
-                self._sc, self._group, self._preexisting
-            )
-        return _observed_shuffle_write_bytes(self._sc)
+        stages = _stage_shuffle_write_bytes(self._sc, self._group)
+        if stages is None:
+            return None
+        return sum(b for s, b in stages.items() if s not in self._preexisting)
 
     def after_pass(self, tables_in_pass: int) -> None:
         if self._base is None:
@@ -1980,251 +1217,72 @@ class _MpSizingFeedback:
         if now is None or now < self._base:
             self._base = None
             return
-        observed = now - self._base
-        self._base = now
-        est_slice = self._est * tables_in_pass // self._n_tables
-        ratio = observed / est_slice if est_slice > 0 else float("inf")
         self._passes.append(
-            {
-                "tables": tables_in_pass,
-                "est_bytes": est_slice,
-                "observed_bytes": observed,
-                "ratio": round(ratio, 3),
-            }
+            {"tables": tables_in_pass, "observed_bytes": now - self._base}
         )
-        band = MP_SIZING_DIVERGENCE_BAND
-        if self._warned or (1 / band <= ratio <= band):
-            return
-        if max(observed, est_slice) < MP_SIZING_FEEDBACK_MIN_BYTES:
-            # fixed per-pass shuffle floors dominate tiny passes —
-            # a ratio here is not evidence about the marginal
-            # constant (see MP_SIZING_FEEDBACK_MIN_BYTES)
-            return
-        self._warned = True
-        import warnings
+        self._base = now
 
-        if ratio > band:
-            advice = (
-                "the sizing model UNDERESTIMATED this workload's "
-                "shuffle volume — on a larger corpus the same model "
-                "under-chunks toward the disk wall. Lower "
-                "disk_budget_bytes / spark.cndp.mp.diskBudgetBytes by "
-                "the same factor, set skew_factor / "
-                "spark.cndp.mp.skewFactor, or use sizing='data' (the "
-                "exact, skew-immune count)."
-            )
-        else:
-            advice = (
-                "the sizing model OVERESTIMATED this workload's "
-                "shuffle volume — likely a heavily duplicated corpus "
-                "(the exact-dup cascade shrank the real stream) — so "
-                "these passes over-chunk, a measured ~3x wall loss. "
-                "Raise disk_budget_bytes / "
-                "spark.cndp.mp.diskBudgetBytes, or use sizing='data' "
-                "on the deduplicated input."
-            )
-        warnings.warn(
-            f"multiprobe sizing feedback: a chunked pass shuffled "
-            f"{observed} B vs the estimate's {est_slice} B slice "
-            f"(measured/modeled = {ratio:.2f}, outside the {band}x "
-            f"band): {advice} Per-pass numbers: "
-            "canadiannewsdatapipeline_spark.operators.similarity."
-            "LAST_MP_SIZING_REPORT.",
-            RuntimeWarning,
-            stacklevel=2,
+    def repack(self, remaining_tables: int, current_k: int) -> int | None:
+        """Tables per pass for the remaining list, packed from the
+        first pass's measured bytes per table — or ``None`` to keep
+        ``current_k``: no budget, no qualifying reading (below
+        ``MP_SIZING_FEEDBACK_MIN_BYTES``), the projected next pass
+        fits, or the packed K is not strictly finer."""
+        if self._budget is None or remaining_tables <= 0 or not self._passes:
+            return None
+        first = self._passes[0]
+        if first["observed_bytes"] < MP_SIZING_FEEDBACK_MIN_BYTES:
+            return None
+        rate = first["observed_bytes"] / first["tables"]
+        if rate * min(current_k, remaining_tables) <= self._budget:
+            return None
+        new_k = _mp_k_from_estimate(
+            int(rate * remaining_tables) + 1, remaining_tables, self._budget
         )
-
-    def _fitted_rate_model(self) -> tuple[float, float] | None:
-        """Two-term per-pass byte model fitted from this run's own
-        readings (r12, r11 verdict #2): every pass pays a fixed
-        shuffle FLOOR (signature partials, bucket-count exchanges,
-        file metadata) plus a MARGINAL cost per table, so the
-        per-table RATE is floor/k + marginal — a small pilot pass
-        reads an INFLATED rate (r11 pilot-tax: 176 MB/table at a
-        5-table pilot vs ~136-146 at 23-40-table passes), and
-        projecting the flat pilot rate over a full pass over-chunks
-        one step finer than the budget needs. Fit ``obs = floor +
-        marginal·k`` through the two LARGEST distinct pass sizes with
-        qualifying readings (max observed bytes per size — the
-        asymmetric-loss pick; largest sizes, because the first/pilot
-        pass additionally absorbs the one-time signature cache build
-        that is NOT a per-pass floor). Returns (floor_bytes,
-        marginal_bytes_per_table), or ``None`` when fewer than two
-        distinct sizes qualify or the fit is degenerate (marginal or
-        floor <= 0 — not the modeled shape; the flat worst-rate path
-        then stands)."""
-        by_k: dict[int, int] = {}
-        for p in self._passes:
-            if p["observed_bytes"] >= MP_SIZING_FEEDBACK_MIN_BYTES:
-                by_k[p["tables"]] = max(
-                    by_k.get(p["tables"], 0), p["observed_bytes"]
-                )
-        if len(by_k) < 2:
-            return None
-        k1, k2 = sorted(by_k)[-2:]
-        marginal = (by_k[k2] - by_k[k1]) / (k2 - k1)
-        floor = by_k[k1] - marginal * k1
-        if marginal <= 0 or floor < 0:
-            return None
-        return floor, marginal
-
-    def resize(
-        self, remaining_tables: int, current_k: int
-    ) -> int | None:
-        """Re-derive ``tables_per_pass`` for the remaining table list
-        from the MEASURED per-pass shuffle readings, or ``None`` to
-        keep the current K. Acts only when (a) the hook is corrective
-        (a consulted disk budget exists), (b) at least one measured
-        pass cleared the feedback floor (floor-dominated readings are
-        not evidence — see ``MP_SIZING_FEEDBACK_MIN_BYTES``), (c) the
-        projection puts the NEXT pass past the budget, and (d) the
-        re-derived K is strictly FINER (a measured rate never
-        COARSENS the plan mid-run — the asymmetric loss stands: a
-        too-fine re-chunk costs the bounded ~3x wall loss, a
-        too-coarse one meets the disk wall).
-
-        Projection source (r12): once two distinct pass sizes have
-        qualifying readings, the fitted floor+marginal model
-        (``_fitted_rate_model``) projects ``floor + marginal·k`` —
-        this stops the pilot's floor-inflated flat rate from driving
-        a one-step-too-fine re-chunk after the first full-size pass
-        confirms the marginal. With only one size measured (i.e.
-        right after the pilot), the flat worst per-table rate stands:
-        floor and marginal cannot be separated from one point, and
-        over-projecting there is the safe direction."""
-        if (
-            self._budget is None
-            or remaining_tables <= 0
-            or not self._passes
-        ):
-            return None
-        rates = [
-            p["observed_bytes"] / p["tables"]
-            for p in self._passes
-            if p["observed_bytes"] >= MP_SIZING_FEEDBACK_MIN_BYTES
-        ]
-        if not rates:
-            return None
-        k_next = min(current_k, remaining_tables)
-        fit = self._fitted_rate_model()
-        if fit is not None:
-            floor_b, marginal = fit
-            if floor_b + marginal * k_next <= self._budget:
-                return None
-            # largest k whose fitted pass bytes fit the budget
-            new_k = max(1, int((self._budget - floor_b) // marginal))
-            new_k = min(new_k, remaining_tables)
-            rate = marginal  # recorded below
-            next_pass = floor_b + marginal * k_next
-        else:
-            rate = max(rates)
-            next_pass = rate * k_next
-            if next_pass <= self._budget:
-                return None
-            new_k = _mp_k_from_estimate(
-                int(rate * remaining_tables) + 1,
-                remaining_tables,
-                self._budget,
-            )
         if new_k is None or new_k >= current_k:
-            # remaining_tables == 1 cannot be subdivided; a measured
-            # rate can never COARSEN the plan mid-run
             return None
-        self._resizes.append(
-            {
-                "after_pass": len(self._passes),
-                "measured_bytes_per_table": int(rate),
-                "old_tables_per_pass": current_k,
-                "new_tables_per_pass": new_k,
-                "remaining_tables": remaining_tables,
-                "rate_model": (
-                    None
-                    if fit is None
-                    else {
-                        "floor_bytes": int(fit[0]),
-                        "marginal_bytes_per_table": int(fit[1]),
-                    }
-                ),
-            }
-        )
-        if not self._resize_warned:
-            self._resize_warned = True
-            import warnings
-
-            warnings.warn(
-                "multiprobe adaptive re-sizing: measured "
-                f"{int(rate)} B/table over {len(self._passes)} "
-                f"pass(es) projects the next {current_k}-table pass "
-                f"to {int(next_pass)} B, past the "
-                f"{self._budget} B disk budget — re-chunking the "
-                f"remaining {remaining_tables} tables to "
-                f"tables_per_pass={new_k} so the budget holds on "
-                "this corpus instead of finishing on the refuted "
-                "estimate. Details: "
-                "canadiannewsdatapipeline_spark.operators."
-                "similarity.LAST_MP_SIZING_REPORT['resizes'].",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        self._repack = {
+            "measured_bytes_per_table": int(rate),
+            "old_tables_per_pass": current_k,
+            "new_tables_per_pass": new_k,
+            "remaining_tables": remaining_tables,
+        }
         return new_k
 
-    def note_reclaim(self, reclaimer: "_ShuffleReclaimer") -> None:
-        """Record the run's inter-pass reclamation record (r12): the
-        per-pass cleaned-shuffle counts, and whether EVERY pass was
-        deterministically reclaimed (None entries mean that pass fell
-        back to the async nudge — the budget was soft there)."""
-        self._reclaim = {
-            "deterministic": bool(reclaimer.cleaned_per_pass)
-            and all(c is not None for c in reclaimer.cleaned_per_pass),
-            "cleaned_per_pass": list(reclaimer.cleaned_per_pass),
-        }
-
-    def finish(self) -> None:
+    def finish(self, reclaimer: "_ShuffleReclaimer | None" = None) -> None:
         if not self._passes:
             return
         global LAST_MP_SIZING_REPORT
-        tot_obs = sum(p["observed_bytes"] for p in self._passes)
-        tot_est = sum(p["est_bytes"] for p in self._passes)
+        cleaned = [] if reclaimer is None else reclaimer.cleaned_per_pass
         report = {
-            "est_stream_bytes": self._est,
             "n_tables": self._n_tables,
-            "passes": self._passes,
-            "observed_total_bytes": tot_obs,
-            "est_total_bytes": tot_est,
-            "ratio_total": round(tot_obs / tot_est, 3) if tot_est else None,
-            "divergence_band": MP_SIZING_DIVERGENCE_BAND,
-            "warned": self._warned,
+            "est_stream_bytes": self._est,
             "disk_budget_bytes": self._budget,
             "adaptive": self._budget is not None,
             "pilot_tables": self._pilot,
-            "resizes": self._resizes,
-            "reclaim": self._reclaim,
-            "rate_model": (
-                None
-                if (fit := self._fitted_rate_model()) is None
-                else {
-                    "floor_bytes": int(fit[0]),
-                    "marginal_bytes_per_table": int(fit[1]),
-                }
+            "passes": self._passes,
+            "observed_total_bytes": sum(
+                p["observed_bytes"] for p in self._passes
             ),
-            "job_group_scoped": self._group is not None,
+            "repack": self._repack,
+            "reclaim": {
+                # None entries: that pass fell back to the async nudge
+                "deterministic": bool(cleaned)
+                and all(c is not None for c in cleaned),
+                "cleaned_per_pass": list(cleaned),
+            },
             "job_group": self._group,
             "caller_group": self._caller_group,
         }
         LAST_MP_SIZING_REPORT = report
-        # per-run slot (r11, r10 verdict #4): keyed by the CALLER's
-        # job group when one was set — the handle a concurrent caller
-        # can actually know — else the run's internal group
         key = self._caller_group or self._group
-        if key is not None:
-            with _MP_REPORTS_LOCK:
-                # re-insert so an overwritten key moves to the fresh
-                # end — FIFO eviction must drop the STALEST report,
-                # not a just-updated one that kept an old slot
-                MP_SIZING_REPORTS.pop(key, None)
-                MP_SIZING_REPORTS[key] = report
-                while len(MP_SIZING_REPORTS) > MP_SIZING_REPORTS_MAX:
-                    MP_SIZING_REPORTS.popitem(last=False)
+        with _MP_REPORTS_LOCK:
+            # re-insert so an overwritten key moves to the fresh end —
+            # eviction must drop the STALEST report
+            MP_SIZING_REPORTS.pop(key, None)
+            MP_SIZING_REPORTS[key] = report
+            while len(MP_SIZING_REPORTS) > MP_SIZING_REPORTS_MAX:
+                MP_SIZING_REPORTS.popitem(last=False)
 
 
 def _int_conf(spark, key: str) -> int | None:
@@ -2251,16 +1309,10 @@ def _plan_size_bytes(df: DataFrame) -> int:
     41.6M-row side, see ``_ann_lsh_multiprobe_distinct``), which is
     why the gate reads the INPUT relation, never an intermediate.
     Unknown size degrades to the ``PLAN_SIZE_UNKNOWN`` sentinel so
-    the auto mode fails toward the scale-safe shuffle joins — with a
+    the auto gate fails toward the scale-safe shuffle joins — with a
     one-time warning, because a silently degraded gate is a quiet ~2x
     perf regression (the measured below-gate mode delta) if the
-    py4j/Catalyst internals this touches ever change shape (r6
-    advice). The auto-SIZER, by contrast, DECLINES to act on the
-    sentinel (r8 advice): a no-information estimate would chunk
-    maximally — n_tables eager construction-time jobs on zero
-    evidence — so it resolves to the lazy single-pass plan instead
-    and the caller who wants bounded disk under degraded stats must
-    pass ``tables_per_pass`` explicitly."""
+    py4j/Catalyst internals this touches ever change shape."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -2272,10 +1324,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
             "Catalyst size estimate unavailable "
             f"({type(exc).__name__}: {exc}); the multiprobe auto-gate "
             "degrades to shuffle mode (scale-safe but ~2x slower below "
-            "the broadcast gate) and the auto-sizer declines to chunk "
-            "(a no-information estimate would run n_tables eager "
-            "construction-time jobs on zero evidence). Pass "
-            "broadcast_corpus (and tables_per_pass) explicitly to "
+            "the broadcast gate). Pass broadcast_corpus explicitly to "
             "silence this.",
             RuntimeWarning,
             stacklevel=3,
@@ -2339,7 +1388,6 @@ def _ann_lsh_multiprobe_distinct(
     dim: int,
     broadcast_corpus: bool = True,
     tables_per_pass: int | None = None,
-    eager_passes: bool = False,
     est_stream_bytes: int | None = None,
     disk_budget_bytes: int | None = None,
     pilot_tables: int | None = None,
@@ -2401,15 +1449,15 @@ def _ann_lsh_multiprobe_distinct(
     left to AQE because every one of these joins sits downstream of
     the mapInPandas signature stage, where Catalyst's size stats are
     known-garbage (measured: a 41.6M-row probe side chosen as a
-    broadcast build, 134 s). ``tables_per_pass``/``eager_passes``
-    bound the shuffle tier's candidate exchanges by slicing the table
-    list into K-table passes (see the chunking comment in the body).
+    broadcast build, 134 s). ``tables_per_pass`` slices the table list
+    into eager K-table passes (see the chunking comment in the body).
     ``sigs`` is persisted: three consumers (homes, probes, signature
     words) — and every chunked pass reuses the one materialization.
-    The cache entry lives in the session CacheManager until explicitly
-    unpersisted (Dataset persists are NOT ContextCleaner-reclaimed —
-    r11 advice); unpersist/clearCache between repeated runs in one
-    session, swap for checkpoints on a cluster."""
+    A chunked run unpersists it once its last pass is checkpointed;
+    a single-pass result still reads it lazily, so there the cache
+    entry lives in the session CacheManager until the caller
+    unpersists or clears the cache (Dataset persists are NOT
+    ContextCleaner-reclaimed)."""
     from pyspark.storagelevel import StorageLevel
 
     n_words = (pool + _WORD_BITS - 1) // _WORD_BITS
@@ -2560,160 +1608,85 @@ def _ann_lsh_multiprobe_distinct(
         )
 
     if not tables_per_pass or tables_per_pass >= n_tables:
-        if eager_passes:
-            # r7 advice: a caller asking for the bounded-disk eager
-            # behavior with no effective chunking would otherwise get
-            # the lazy single-pass plan silently — no materialization,
-            # no disk bound, no signal.
-            raise ValueError(
-                "eager_passes=True has no effect without chunking: "
-                f"tables_per_pass={tables_per_pass!r} with "
-                f"n_tables={n_tables} resolves to the single-pass "
-                "plan, which materializes nothing at construction "
-                "time. Pass tables_per_pass < n_tables (or leave "
-                "both unset and let the shuffle tier auto-size)."
-            )
         return pass_pairs(homes)
 
-    # Chunked pass mode (the above-gate scale path, r6 verdict #1):
-    # one pipeline per ``tables_per_pass`` slice of the table list,
-    # results unioned and pair-deduped across passes. Output-identical
-    # to single-pass — the per-table candidate sets partition the full
-    # candidate set by table, and the cross-pass groupBy/max commutes
-    # with the per-pass one (duplicate pairs carry identical cosines).
-    # Why: in shuffle mode the UNSCREENED candidate stream is
-    # exchanged whole for the wa/wb attach — measured ~1e9 rows /
-    # >70 GB of shuffle files at threshold 0.4 x 60k vectors, which
-    # filled the box and died (SCALE.md §Round-6). Each pass exchanges
-    # only its slice's candidates, bounding per-exchange volume to
-    # ~tables_per_pass/n_tables of the whole.
+    # Chunked pass mode (the above-gate scale path): one pipeline per
+    # ``tables_per_pass`` slice of the table list, results unioned and
+    # pair-deduped across passes. Output-identical to single-pass —
+    # the per-table candidate sets partition the full candidate set by
+    # table, and the cross-pass groupBy/max commutes with the per-pass
+    # one (duplicate pairs carry identical cosines). Why: in shuffle
+    # mode the UNSCREENED candidate stream is exchanged whole for the
+    # wa/wb attach — measured ~1e9 rows / >70 GB of shuffle files at
+    # threshold 0.4 x 60k vectors, which filled the box and died
+    # (SCALE.md §Round-6).
     #
-    # ``eager_passes`` additionally MATERIALIZES each pass (tiny
-    # post-threshold deduped pairs) before building the next, then
-    # DETERMINISTICALLY deletes the pass's shuffle files before the
-    # next pass starts writing its own (_ShuffleReclaimer, r12 —
-    # blocking ContextCleaner.doCleanupShuffle on the pass's shuffle
-    # ids; the r11 async System.gc() nudge left the budget soft by up
-    # to one pass of overlap under cleanup lag, see the reclaimer's
-    # comment block). Peak shuffle DISK is thereby bounded to ~one
-    # pass, not just per-exchange volume. The cost is running jobs at
-    # operator-construction time (documented deviation from the
-    # engine's lazy contract — reach for it only in the >500k-vector
-    # shuffle tier). Checkpoint tier: if the session has a RELIABLE
-    # checkpoint dir configured (SparkContext.setCheckpointDir —
-    # cluster storage), pass results checkpoint there and survive
-    # executor loss; otherwise localCheckpoint stores blocks on
-    # executors (fine in local mode / when a lost pass may re-run).
-    # Operational hygiene (r7 advice): reliable checkpoint FILES are
-    # only reclaimed by ContextCleaner when
-    # spark.cleaner.referenceTracking.cleanCheckpoints=true —
-    # otherwise each invocation leaves one small directory per pass
-    # (tiny post-threshold deduped pairs, not a disk-bound risk) on
-    # cluster storage for the app lifetime. Set that conf, or sweep
-    # the checkpoint dir, on clusters that run this repeatedly.
-    sc = emb.sparkSession.sparkContext
-    has_reliable_dir = (
-        eager_passes and sc._jsc.sc().getCheckpointDir().isDefined()
-    )
-    # Runtime sizing feedback (r8 verdict #1): the eager barrier after
-    # each pass is the natural point to read back what the pass
-    # ACTUALLY shuffled and compare it to the estimate that sized the
-    # passes — see _MpSizingFeedback. Armed only when eager (lazy
-    # chunking has no barrier to measure at) and an estimate exists.
-    # Readings are scoped to a fresh job group (r9 verdict #4): the
-    # spark.jobGroup.id LOCAL property tags this thread's pass jobs,
-    # so a concurrent job in the same SparkSession can neither
-    # inflate a pass delta nor trigger a spurious divergence warning
-    # or re-size. When the auto-sizer consulted a disk budget, the
-    # hook is also CORRECTIVE (r9 verdict #1): measured per-table
-    # rates that refute the estimate re-chunk the REMAINING passes
-    # finer mid-run — see _MpSizingFeedback.resize and the pilot-pass
-    # comment at MP_PILOT_DIVISOR.
-    feedback = None
-    group = None
-    prev_group = None
-    if eager_passes:
-        # EVERY eager run gets a fresh job group (r12) — not just
-        # feedback-armed ones: the group is how both the sizing
-        # reader AND the shuffle reclaimer tell this run's jobs from
-        # a concurrent sibling's (attribution by exclusion; see
-        # _ShuffleReclaimer).
-        import uuid as _uuid
+    # Every pass is MATERIALIZED (tiny post-threshold deduped pairs)
+    # before the next is built, then its shuffle files are deleted
+    # synchronously (_ShuffleReclaimer) before the next pass writes
+    # its own, so peak shuffle DISK is bounded to ~one pass. The cost
+    # is running jobs at operator-construction time (documented
+    # deviation from the engine's lazy contract — the >500k-vector
+    # shuffle tier only). Checkpoint tier: with a RELIABLE checkpoint
+    # dir (SparkContext.setCheckpointDir — cluster storage), pass
+    # results checkpoint there and survive executor loss; otherwise
+    # localCheckpoint stores blocks on executors. Reliable checkpoint
+    # FILES are only reclaimed by ContextCleaner when
+    # spark.cleaner.referenceTracking.cleanCheckpoints=true — otherwise
+    # each invocation leaves one small directory per pass on cluster
+    # storage for the app lifetime.
+    #
+    # The passes run under a fresh job group (the thread-scoped
+    # spark.jobGroup.id local property): the pass readings and the
+    # reclaimer both tell this run's jobs from a concurrent sibling's
+    # by it. A budget-sized run leads with the small pilot pass and
+    # packs the rest from its measured bytes (_MpSizingFeedback).
+    import uuid as _uuid
 
-        group = f"cndp-mp-sizing-{_uuid.uuid4().hex[:12]}"
-        prev_group = sc.getLocalProperty("spark.jobGroup.id")
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        if est_stream_bytes:
-            feedback = _MpSizingFeedback(
-                sc,
-                est_stream_bytes,
-                n_tables,
-                disk_budget_bytes=disk_budget_bytes,
-                job_group=group,
-                pilot_tables=pilot_tables,
-                # the caller's own group (if any) keys the per-run
-                # report in MP_SIZING_REPORTS — the handle a
-                # concurrent caller can know, unlike the internal
-                # uuid group
-                caller_group=prev_group,
-            )
-    reclaimer = None
-    if eager_passes:
-        raw = emb.sparkSession.conf.get(MP_DETERMINISTIC_RECLAIM_CONF, "true")
-        reclaimer = _ShuffleReclaimer(
-            sc,
-            enabled=str(raw).strip().lower() not in ("false", "0", "no"),
-            job_group=group,
-        )
+    sc = emb.sparkSession.sparkContext
+    has_reliable_dir = sc._jsc.sc().getCheckpointDir().isDefined()
+    group = f"cndp-mp-passes-{_uuid.uuid4().hex[:12]}"
+    caller_group = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
     parts: list[DataFrame] = []
     try:
+        feedback = _MpSizingFeedback(
+            sc,
+            n_tables,
+            group,
+            est_stream_bytes=est_stream_bytes,
+            disk_budget_bytes=disk_budget_bytes,
+            pilot_tables=pilot_tables,
+            caller_group=caller_group,
+        )
+        reclaimer = _ShuffleReclaimer(sc, job_group=group)
         lo = 0
-        k_cur = tables_per_pass
-        first = True
+        k = tables_per_pass
         while lo < n_tables:
-            size = (
-                pilot_tables
-                if (first and pilot_tables and feedback is not None)
-                else k_cur
-            )
-            first = False
+            size = pilot_tables if lo == 0 and pilot_tables else k
             hi = min(lo + size, n_tables)
             part = pass_pairs(
                 homes.filter((F.col("tbl") >= lo) & (F.col("tbl") < hi))
             )
-            if eager_passes:
-                if has_reliable_dir:
-                    # Measured cost of the reliable tier at fresh-x30
-                    # (SCALE.md §Round-8): 691.1 s vs 526.3 s for
-                    # localCheckpoint, same 29.7 GB shuffle peak,
-                    # ~44 MB of checkpoint files for the whole run.
-                    # The textbook persist-before-checkpoint
-                    # mitigation for RDD doCheckpoint recomputation
-                    # was tried and measured WORSE here (772.9 s) —
-                    # the pass outputs are tiny, so the double walk is
-                    # not the dominant term; keep the simple form.
-                    part = part.checkpoint(eager=True)
-                else:
-                    part = part.localCheckpoint(eager=True)
-                # the pass is materialized — synchronously delete its
-                # shuffle files before the next pass starts writing
-                # its own (falls back to the async GC nudge, warning
-                # once, if the internals are unreachable)
-                reclaimer.after_pass()
-                if feedback is not None:
-                    feedback.after_pass(hi - lo)
-                    new_k = feedback.resize(n_tables - hi, k_cur)
-                    if new_k is not None:
-                        k_cur = new_k
+            if has_reliable_dir:
+                # measured at fresh-x30 (SCALE.md §Round-8): 691.1 s vs
+                # 526.3 s for localCheckpoint, same 29.7 GB shuffle
+                # peak; persist-before-checkpoint measured WORSE
+                # (772.9 s) — the pass outputs are tiny
+                part = part.checkpoint(eager=True)
+            else:
+                part = part.localCheckpoint(eager=True)
+            reclaimer.after_pass()
+            feedback.after_pass(hi - lo)
+            if lo == 0:
+                k = feedback.repack(n_tables - hi, k) or k
             parts.append(part)
             lo = hi
     finally:
-        if group is not None:
-            sc.setLocalProperty("spark.jobGroup.id", prev_group)
-    if feedback is not None:
-        if reclaimer is not None:
-            feedback.note_reclaim(reclaimer)
-        feedback.finish()
+        sc.setLocalProperty("spark.jobGroup.id", caller_group)
+        # every pass is checkpointed: nothing reads the signatures now
+        sigs.unpersist()
+    feedback.finish(reclaimer)
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
@@ -2732,67 +1705,24 @@ def _mp_resolve_mode(
     broadcast_corpus: bool | None,
     broadcast_max_input_bytes: int | None,
     tables_per_pass: int | None,
-    eager_passes: bool | None,
     disk_budget_bytes: int | None,
-    skew_factor: float | None,
-    sizing: str,
-    hamming_max: int | None = None,
 ) -> dict:
-    """THE multiprobe mode-resolution logic — one code path shared by
+    """THE multiprobe mode resolution — one code path shared by
     ``ann_lsh_multiprobe_pairs`` (which executes what this decides)
-    and ``mp_mode_report`` (which shows it to an operator before a
-    10-hour run), so the report can never drift from the behavior.
+    and ``mp_mode_report`` (which shows it before a long run), so the
+    report cannot drift from the behavior.
 
-    Walks the r6-r8 ladder: broadcast below the gate → single-pass
-    shuffle while the estimated candidate stream fits the disk
-    budget → auto-sized eager chunked passes past it. The estimate's
-    SOURCE routes through ``sizing`` (r9): ``'auto'`` (default) takes
-    the zero-job uniform byte model only when its worst-case
-    concentration bound (``_mp_model_worst_case_bytes``) already fits
-    the budget — provably safe under ANY bucket distribution — and
-    otherwise runs the exact skew-immune candidate count
-    (``_mp_exact_candidate_count``, one linear job; the measured
-    price of a disk bound that holds on clustered corpora, where the
-    bare model was measured 11.2x under truth) and sizes from
-    ``max(exact, model)`` — the asymmetric-loss combiner: each
-    estimator under-shoots in a different regime, under-chunking
-    risks the disk wall while over-chunking is the bounded ~3x, so
-    the max is never coarser than either alone. An explicit
-    ``skew_factor`` routes 'auto' to the model path (the caller
-    asserted their skew); Catalyst-stats-unavailable routes it to the
-    stats-free count (no model to floor with).
-    ``'model'``/``'data'`` force a pure source. Returns
-    a report dict; raises the same named errors the operator raises
-    for contradictory knobs. Advisory signals (r8 advice — no knob
-    the caller paid for is ever silently ignored):
-
-    - ``disk_budget_bytes`` / ``sizing`` / ``skew_factor`` provided
-      but not consulted (explicit ``tables_per_pass``, or the call
-      resolved to broadcast mode where no candidate stream is ever
-      materialized) → ``RuntimeWarning`` naming the unconsulted
-      knobs; the report's ``budget_consulted`` says the same in
-      machine-readable form.
-    - Catalyst stats unreachable (``PLAN_SIZE_UNKNOWN``): the
-      auto-sizer DECLINES to chunk — a no-information estimate would
-      run n_tables eager construction-time jobs on zero evidence —
-      and resolves to the lazy single-pass plan; explicit
-      ``eager_passes=True`` under the sentinel raises instead, since
-      the bounded-disk request cannot be honored without a real
-      estimate (pass ``tables_per_pass`` to size by hand).
-    - ``eager_passes=True`` where the sizer picked single-pass warns
-      with ADVICE THE CALLER CAN FOLLOW: "pass tables_per_pass=K"
-      when the stream simply fits, "increase n_tables" when a
-      1-table list cannot be subdivided.
-
-    r10 fields: ``adaptive`` (a consulted budget + eager chunked
-    passes arm mid-run corrective re-sizing — measured per-table
-    rates that refute the estimate re-chunk the remaining passes
-    finer, see ``_MpSizingFeedback.resize``) and ``pilot_tables``
-    (every adaptive run leads with a 1/8-size calibration pass so
-    the refutation arrives BEFORE a full-size pass pays the
-    violation — ``MP_PILOT_DIVISOR``; data-sized runs pilot too,
-    because the byte constant drifts ~1.6x with the screen pass
-    fraction even when the candidate COUNT is exact)."""
+    Broadcast below the gate. In the shuffle tier with no explicit
+    ``tables_per_pass``: count the candidates exactly
+    (``_mp_exact_candidate_count``, one linear job, on the RAW input
+    — duplicates only inflate it, erring toward chunking), convert at
+    ``_MP_CANDIDATE_ROW_BYTES``, and pack the table list into eager
+    passes under the disk budget (``_mp_k_from_estimate``); a chunked
+    plan leads with the 1/``MP_PILOT_DIVISOR`` pilot pass whose
+    measured bytes pack the rest. An explicit ``tables_per_pass``
+    always wins and is never re-packed. ``disk_budget_bytes`` given
+    where it is not consulted (explicit K, broadcast mode) warns.
+    Returns the report dict; raises the operator's named errors."""
     import warnings
 
     if tables_per_pass is not None and tables_per_pass < 1:
@@ -2800,21 +1730,7 @@ def _mp_resolve_mode(
             f"tables_per_pass must be >= 1 (got {tables_per_pass}); "
             "use None for the single-pass default"
         )
-    if sizing not in ("auto", "model", "data"):
-        raise ValueError(
-            f"sizing must be 'auto', 'model' or 'data', got {sizing!r}"
-        )
     explicit_k = tables_per_pass is not None
-    budget_given = disk_budget_bytes is not None
-    sizing_knobs_given = [
-        name
-        for name, given in (
-            ("disk_budget_bytes", budget_given),
-            ("sizing='data'", sizing == "data"),
-            ("skew_factor", skew_factor is not None),
-        )
-        if given
-    ]
     input_bytes: int | None = None
     gate: int | None = None
     if broadcast_corpus is None:
@@ -2827,12 +1743,12 @@ def _mp_resolve_mode(
                 gate = MP_BROADCAST_MAX_INPUT_BYTES
         input_bytes = _plan_size_bytes(emb)
         broadcast_corpus = input_bytes <= gate
-    if sizing_knobs_given and (broadcast_corpus or explicit_k):
-        # r8 advice: a caller paying for a sizing knob gets a signal
-        # when the resolution path never consults it
+        if input_bytes >= PLAN_SIZE_UNKNOWN:
+            input_bytes = None
+    if disk_budget_bytes is not None and (broadcast_corpus or explicit_k):
         why = (
             f"tables_per_pass={tables_per_pass} is explicit and "
-            "always wins over auto-sizing"
+            "always wins over the budget"
             if explicit_k
             else "the call resolved to broadcast mode, where the "
             "candidate stream is screened in-stage and never "
@@ -2840,35 +1756,16 @@ def _mp_resolve_mode(
             "bound"
         )
         warnings.warn(
-            f"{', '.join(sizing_knobs_given)} provided but not "
-            f"consulted: {why}. Pass broadcast_corpus=False and drop "
-            "tables_per_pass to let the auto-sizer use them.",
+            f"disk_budget_bytes provided but not consulted: {why}. "
+            "Pass broadcast_corpus=False and drop tables_per_pass to "
+            "let the budget size the passes.",
             RuntimeWarning,
             stacklevel=3,
         )
-    if broadcast_corpus and not explicit_k and eager_passes:
-        raise ValueError(
-            "eager_passes=True with no tables_per_pass in broadcast "
-            "mode: the candidate stream is screened in-stage and "
-            "never materialized, so there are no passes to make "
-            "eager. Pass tables_per_pass=K, or broadcast_corpus="
-            "False to enter the shuffle tier where auto-sizing "
-            "applies."
-        )
     est: int | None = None
-    est_exact: int | None = None
-    est_source: str | None = None
-    skew_used: float | None = None
-    budget_consulted = False
-    unknown_size = False
-    sizing_effective: str | None = None
-    model_worst_case: int | None = None
-    screen_sample: dict | None = None
-    single_pass_guard = MP_BYTE_DRIFT_GUARD
-    if not broadcast_corpus and not explicit_k:
-        # The auto-sizer (r7 verdict #1): the sizing rule
-        # (SCALE.md §Round-7) as mechanism, so the shuffle tier never
-        # runs a candidate stream into the disk wall by default.
+    pilot_tables: int | None = None
+    budget_consulted = not broadcast_corpus and not explicit_k
+    if budget_consulted:
         if disk_budget_bytes is None:
             disk_budget_bytes = _int_conf(
                 emb.sparkSession, "spark.cndp.mp.diskBudgetBytes"
@@ -2880,361 +1777,49 @@ def _mp_resolve_mode(
                 "disk_budget_bytes must be >= 1 "
                 f"(got {disk_budget_bytes})"
             )
-        if input_bytes is None:
-            input_bytes = _plan_size_bytes(emb)
-        unknown_size = input_bytes >= PLAN_SIZE_UNKNOWN
-        skew_from_conf = False
-        if sizing != "data" and skew_factor is None:
-            # resolved before routing: under 'auto' an explicit skew
-            # factor (arg or conf) is the caller asserting knowledge
-            # of their corpus's skew — honor it on the zero-job model
-            # path instead of re-deriving it with the count job
-            raw = emb.sparkSession.conf.get(
-                "spark.cndp.mp.skewFactor", None
-            )
-            if raw is not None:
-                try:
-                    skew_factor = float(raw)
-                except ValueError:
-                    raise ValueError(
-                        "spark.cndp.mp.skewFactor must be a float, "
-                        f"got {raw!r}"
-                    ) from None
-                skew_from_conf = True
-        sizing_effective = sizing
-        auto_model_floor: int | None = None
-        if sizing == "auto":
-            # r9: the default. The uniform byte model was MEASURED
-            # 11.2x under the true stream on a clustered corpus (the
-            # shape near-dup dedup exists for) — the zero-job model
-            # path is only taken when it is PROVABLY safe under any
-            # bucket distribution (worst-case concentration bound ≤
-            # budget); otherwise the exact count prices one linear
-            # job for a disk bound that actually holds
-            # (SCALE_LADDER_SKEW_r09.json: model-sized runs violated
-            # a 2 GiB budget 3.05x; data-sized held every rung).
-            if skew_factor is not None:
-                sizing_effective = "model"
-                if skew_from_conf:
-                    # r9 advice: a cluster-wide conf set in the r8 era
-                    # (when skew_factor was the ONLY skew defense)
-                    # would otherwise silently disable the r9
-                    # skew-safe count routing for every zero-knob
-                    # caller on the cluster — say so once per call
-                    warnings.warn(
-                        "spark.cndp.mp.skewFactor="
-                        f"{skew_factor} (session conf) is routing "
-                        "sizing='auto' to the zero-job MODEL path: "
-                        "the skew-safe exact-count routing is "
-                        "disabled for this call. The measured "
-                        "clustered under-estimate was 11.2x — if the "
-                        "conf's factor hedges less than your "
-                        "corpus's real skew, the disk budget can "
-                        "still be violated. Unset the conf (or pass "
-                        "sizing='data') to restore the count "
-                        "routing; pass skew_factor explicitly to "
-                        "silence this warning.",
-                        RuntimeWarning,
-                        stacklevel=3,
-                    )
-            elif unknown_size:
-                # the count needs no Catalyst stats — strictly more
-                # information than declining (the 'model' sentinel
-                # path below), at the count job's disclosed price
-                sizing_effective = "data"
-            else:
-                model_raw = _mp_candidate_stream_bytes(
-                    input_bytes, dim, n_tables, n_bits, probe_radius
-                )
-                model_worst_case = _mp_model_worst_case_bytes(
-                    input_bytes, dim, n_tables, n_bits, probe_radius
-                )
-                if model_worst_case <= disk_budget_bytes:
-                    sizing_effective = "model"
-                else:
-                    sizing_effective = "data"
-                    # asymmetric-loss combiner (r9, measured): on the
-                    # count route, size from max(exact, model). The
-                    # two estimators under-shoot in DIFFERENT regimes
-                    # (the model by the bucket-concentration factor
-                    # on clustered corpora; the exact count by the
-                    # per-candidate byte drift on uniform ones —
-                    # measured feedback ratio 1.20 at fresh-x30,
-                    # where exact-only sizing picked 3x54 at the
-                    # slack edge while the model's 4x40 ran 25%
-                    # faster at 29.8 GB). Under-chunking risks the
-                    # disk wall (unbounded); over-chunking costs ≤
-                    # the measured ~3x (bounded) — so take the max:
-                    # never coarser than either estimator alone,
-                    # never finer than the r8 model default.
-                    auto_model_floor = model_raw
-        if sizing_effective == "data":
-            if skew_factor is not None:
-                warnings.warn(
-                    "skew_factor is ignored under sizing='data': the "
-                    "exact candidate count already reflects the "
-                    "corpus's bucket skew.",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
-            e = emb.filter(
-                F.col(vec_col).isNotNull()
-                & ~F.exists(F.col(vec_col), lambda x: x.isNull())
-            ).select(
-                F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-            )
-            # counted on the RAW input, not the post-cascade
-            # representatives the pipeline actually runs on —
-            # deliberately conservative: exact duplicates share every
-            # bucket, so duplication only inflates this count and the
-            # sizer errs toward chunking (the bounded ~3x wall cost),
-            # never toward the disk wall
-            n_candidates = _mp_exact_candidate_count(
-                e, pool, n_bits, n_tables, probe_radius, dim
-            )
-            est = n_candidates * _MP_CANDIDATE_ROW_BYTES
-            est_exact = est
-            est_source = "data"
-            if auto_model_floor is not None and auto_model_floor > est:
-                # the 'auto' max() combiner — see the routing comment
-                est = auto_model_floor
-                est_source = "data+model-floor"
-            budget_consulted = True
-            # r11 (r10 verdict #3): in the byte-drift GUARD ZONE —
-            # est fits the budget but est x 1.7 does not, exactly
-            # where the r10 static guard forced a minimal chunk on
-            # no evidence — measure the screen-pass fraction on a
-            # candidate sample and re-estimate with the two-term
-            # model (base ~70 B + survivors' ~1 KB vector attach).
-            # The drift the 1.7x hedged is SYSTEMATIC in that
-            # fraction (measured 1.03->1.64x on the NC curve), so
-            # the measured-fraction estimate replaces the blanket
-            # guard with a narrow residual one; a thin sample keeps
-            # the static guard. n_tables=1 is skipped: no K decision
-            # can change, so the job would buy nothing.
-            if (
-                hamming_max is not None
-                and n_tables > 1
-                and est <= disk_budget_bytes
-                and est * MP_BYTE_DRIFT_GUARD > disk_budget_bytes
-            ):
-                sampled = _mp_sampled_survivor_frac(
-                    e, pool, n_bits, n_tables, probe_radius,
-                    hamming_max, dim, n_candidates,
-                )
-                if sampled is not None:
-                    (
-                        frac,
-                        n_sampled,
-                        vec_row_bytes,
-                        pairs_per_id,
-                        rider_row_bytes,
-                    ) = sampled
-                    # r12: the survivor charge prefers the RIDER
-                    # reading — marginal bytes per survivor measured
-                    # through a replica of the real attach exchange
-                    # (one vector per pair, in-context lz4 adjacency
-                    # included; see _mp_sampled_rider_row_bytes). The
-                    # 2-vector theory (2 x measured per-vector bytes
-                    # + base) stands as the fallback when the rider
-                    # sample was thin; the static 1 KB worst case
-                    # when both instruments declined. All clamped
-                    # inside _mp_two_term_bytes.
-                    if rider_row_bytes is not None:
-                        srow = int(rider_row_bytes)
-                    elif vec_row_bytes is not None:
-                        srow = int(
-                            2 * vec_row_bytes + _MP_CANDIDATE_ROW_BYTES
-                        )
-                    else:
-                        srow = None
-                    est = max(
-                        _mp_two_term_bytes(n_candidates, frac, srow), est
-                    )
-                    est_source += "+screen-sample"
-                    # survivor_row_bytes reports the CLAMPED value the
-                    # model actually charged (review r12: the raw
-                    # instrument readings stay in their own columns,
-                    # so est_stream_bytes is reproducible from the
-                    # reported fields)
-                    srow_charged = (
-                        None
-                        if srow is None
-                        else min(
-                            _MP_SURVIVOR_ROW_BYTES,
-                            max(srow, _MP_CANDIDATE_ROW_BYTES),
-                        )
-                    )
-                    screen_sample = {
-                        "survivor_frac": round(frac, 4),
-                        "sampled_candidates": n_sampled,
-                        "vector_row_bytes": (
-                            None
-                            if vec_row_bytes is None
-                            else round(vec_row_bytes, 1)
-                        ),
-                        "rider_row_bytes": (
-                            None
-                            if rider_row_bytes is None
-                            else round(rider_row_bytes, 1)
-                        ),
-                        "survivor_row_bytes": srow_charged,
-                        # survivor-pair adjacency census over
-                        # distinct ids (observability — the
-                        # compression covariate, NOT a divisor; see
-                        # _mp_sampled_survivor_frac)
-                        "survivor_pairs_per_id": pairs_per_id,
-                    }
-                    single_pass_guard = MP_TWO_TERM_RESIDUAL_GUARD
-        elif unknown_size:
-            # r8 advice: the sentinel MODEL estimate carries no
-            # information; chunking on it would run n_tables eager
-            # jobs on zero evidence. Decline — lazy single-pass — and
-            # require explicit knobs for bounded disk under degraded
-            # stats. (Reachable only under explicit sizing='model' or
-            # a skew_factor: the 'auto' default routes the sentinel
-            # to the stats-free exact count instead.
-            # _plan_size_bytes already warned about the degradation.)
-            est_source = "unknown"
-            if eager_passes:
-                raise ValueError(
-                    "eager_passes=True but the Catalyst size estimate "
-                    "is unavailable (see the RuntimeWarning from the "
-                    "size probe), so the auto-sizer has no information "
-                    "to pick tables_per_pass with and declines to "
-                    "guess. Pass tables_per_pass=K explicitly to get "
-                    "bounded-disk eager passes under degraded stats, "
-                    "or sizing='data' (or the 'auto' default) to size "
-                    "from the exact stats-free candidate count."
-                )
-            eager_passes = False
-        else:
-            if skew_factor is None:
-                skew_factor = MP_SKEW_FACTOR
-            if not skew_factor > 0:
-                raise ValueError(
-                    f"skew_factor must be > 0 (got {skew_factor})"
-                )
-            est = int(
-                _mp_candidate_stream_bytes(
-                    input_bytes, dim, n_tables, n_bits, probe_radius
-                )
-                * skew_factor
-            )
-            est_source = "model"
-            skew_used = skew_factor
-            budget_consulted = True
-        if est is not None:
-            tables_per_pass = _mp_k_from_estimate(
-                est, n_tables, disk_budget_bytes, guard=single_pass_guard
-            )
-            if tables_per_pass is None:
-                if eager_passes:
-                    if n_tables == 1:
-                        # r10 advice: branch on the 1-table list FIRST
-                        # — 'pass tables_per_pass=K' is unactionable
-                        # advice when the list cannot be subdivided,
-                        # including estimates in the byte-drift guard
-                        # zone (budget/guard < est <= budget) where
-                        # single-pass was chosen despite headroom
-                        # doubts
-                        detail = (
-                            "; n_tables=1 cannot be subdivided), so no "
-                            "passes are materialized. Increase n_tables "
-                            "so the table list can be chunked."
-                        )
-                    else:
-                        detail = (
-                            " — the stream fits the disk budget), so no "
-                            "passes are materialized: the disk bound "
-                            "you asked for already holds without "
-                            "chunking. Pass tables_per_pass=K to force "
-                            "chunking anyway."
-                        )
-                    warnings.warn(
-                        "eager_passes=True requested but the auto-sizer "
-                        "selected the single-pass plan (estimated "
-                        f"candidate stream {est} B vs disk budget "
-                        f"{disk_budget_bytes} B{detail}",
-                        RuntimeWarning,
-                        stacklevel=3,
-                    )
-                eager_passes = False
-            elif eager_passes is None:
-                eager_passes = True
-    elif not broadcast_corpus and explicit_k:
-        # explicit K in the shuffle tier: the model estimate is still
-        # computed when the chunked eager path will run, so the
-        # runtime sizing-feedback hook can arm (see
-        # _ann_lsh_multiprobe_distinct) — it is NOT used for sizing
-        if eager_passes and tables_per_pass < n_tables:
-            if input_bytes is None:
-                input_bytes = _plan_size_bytes(emb)
-            unknown_size = input_bytes >= PLAN_SIZE_UNKNOWN
-            if not unknown_size:
-                est = _mp_candidate_stream_bytes(
-                    input_bytes, dim, n_tables, n_bits, probe_radius
-                )
-                est_source = "model"
-    if eager_passes is None:
-        eager_passes = False
+        e = emb.filter(
+            F.col(vec_col).isNotNull()
+            & ~F.exists(F.col(vec_col), lambda x: x.isNull())
+        ).select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
+        est = _MP_CANDIDATE_ROW_BYTES * _mp_exact_candidate_count(
+            e, pool, n_bits, n_tables, probe_radius, dim
+        )
+        tables_per_pass = _mp_k_from_estimate(
+            est, n_tables, disk_budget_bytes
+        )
+        if tables_per_pass is not None:
+            pilot_tables = max(1, tables_per_pass // MP_PILOT_DIVISOR)
+            if pilot_tables >= tables_per_pass:
+                pilot_tables = None
     chunked = tables_per_pass is not None and tables_per_pass < n_tables
-    # Adaptive mid-run re-sizing (r10, r9 verdict #1): armed whenever
-    # the auto-sizer consulted a budget and eager chunked passes will
-    # run — the runtime feedback then CORRECTS the plan (finer only)
-    # when measured per-table bytes refute the estimate, instead of
-    # finishing on it. Model-sized runs additionally lead with a
-    # calibration pilot pass (see MP_PILOT_DIVISOR) because their
-    # estimate carries no safety proof.
-    adaptive = budget_consulted and eager_passes and chunked
-    pilot_tables: int | None = None
-    if adaptive:
-        pilot_tables = max(1, tables_per_pass // MP_PILOT_DIVISOR)
-        if pilot_tables >= tables_per_pass:
-            pilot_tables = None
+    if broadcast_corpus:
+        regime = "broadcast"
+    elif chunked:
+        regime = "chunked-shuffle"
+    else:
+        regime = "single-pass-shuffle"
     if chunked:
         rest = n_tables - (pilot_tables or 0)
-        n_passes = -(-rest // tables_per_pass) + (
-            1 if pilot_tables else 0
+        n_passes = -(-rest // tables_per_pass) + (1 if pilot_tables else 0)
+        est_pass_bytes = (
+            None if est is None else est * tables_per_pass // n_tables
         )
     else:
         n_passes = 1
-    if broadcast_corpus:
-        regime = "broadcast"
-        est_pass_bytes = None
-    elif chunked:
-        regime = "chunked-shuffle"
-        est_pass_bytes = (
-            est * tables_per_pass // n_tables if est is not None else None
-        )
-    else:
-        regime = "single-pass-shuffle"
         est_pass_bytes = est
     return {
         "regime": regime,
         "broadcast_corpus": broadcast_corpus,
-        "input_bytes": None if unknown_size else input_bytes,
-        "input_bytes_unknown": unknown_size,
+        "input_bytes": input_bytes,
         "broadcast_gate_bytes": gate,
         "est_stream_bytes": est,
-        "est_exact_bytes": est_exact,
-        "est_source": est_source,
-        "sizing": sizing,
-        "sizing_effective": sizing_effective,
-        "model_worst_case_bytes": model_worst_case,
-        "skew_factor": skew_used,
         "disk_budget_bytes": disk_budget_bytes,
         "budget_consulted": budget_consulted,
-        "tables_per_pass": tables_per_pass,
-        "n_passes": n_passes,
-        "eager_passes": eager_passes,
-        "est_pass_bytes": est_pass_bytes,
-        "adaptive": adaptive,
+        "tables_per_pass": tables_per_pass if chunked else None,
         "pilot_tables": pilot_tables,
-        "screen_sample": screen_sample,
-        "single_pass_guard": (
-            single_pass_guard if budget_consulted else None
-        ),
+        "n_passes": n_passes,
+        "est_pass_bytes": est_pass_bytes,
+        "adaptive": budget_consulted and chunked,
     }
 
 
@@ -3252,67 +1837,38 @@ def mp_mode_report(
     broadcast_corpus: bool | None = None,
     broadcast_max_input_bytes: int | None = None,
     tables_per_pass: int | None = None,
-    eager_passes: bool | None = None,
     disk_budget_bytes: int | None = None,
-    skew_factor: float | None = None,
-    sizing: str = "auto",
 ) -> dict:
     """What WOULD ``ann_lsh_multiprobe_pairs`` do with these knobs —
-    without running the job (r8 verdict #6: the auto decision was
-    only visible in ladder notes; a cluster operator should be able
-    to audit the plan before a 10-hour run).
+    without running the quadratic job, so a cluster operator can
+    audit the plan before a long run.
 
     Returns the resolution dict: ``regime`` ('broadcast' /
-    'single-pass-shuffle' / 'chunked-shuffle'), ``input_bytes`` (the
-    Catalyst estimate the gate read, None if unreachable),
-    ``broadcast_gate_bytes``, ``est_stream_bytes`` + ``est_source``
-    ('model' / 'data' / 'data+model-floor' — the 'auto' max()
-    combiner chose the model value over a smaller exact count — /
-    'unknown') + ``est_exact_bytes`` (the raw count whenever the
-    count job ran), ``sizing`` (as requested) +
-    ``sizing_effective`` ('auto' resolved to the path actually taken;
-    None where sizing was never consulted) +
-    ``model_worst_case_bytes`` (the concentration bound 'auto' routed
-    on, when computed), ``skew_factor`` (as applied),
-    ``disk_budget_bytes`` + ``budget_consulted``, resolved
-    ``tables_per_pass`` / ``n_passes`` / ``eager_passes``,
-    ``est_pass_bytes`` (the per-pass stream the disk budget bounds),
-    and the r10 adaptivity fields ``adaptive`` / ``pilot_tables``
-    (mid-run corrective re-sizing and the model-path calibration
-    pilot — see ``_mp_resolve_mode``).
+    'single-pass-shuffle' / 'chunked-shuffle'),
+    ``input_bytes`` (the Catalyst estimate the gate read, None if
+    unread or unreachable), ``broadcast_gate_bytes``,
+    ``est_stream_bytes`` (exact candidate count x 70 B, when the
+    budget was consulted), ``disk_budget_bytes`` +
+    ``budget_consulted``, ``tables_per_pass`` / ``pilot_tables`` /
+    ``n_passes`` (the first pass runs ``pilot_tables`` tables when
+    set, else ``tables_per_pass``; a pilot's measurement may pack the
+    later passes finer, see ``LAST_MP_SIZING_REPORT``),
+    ``est_pass_bytes`` and ``adaptive``.
 
-    This calls the SAME ``_mp_resolve_mode`` the operator calls — it
-    cannot drift — including its validation: a knob combination the
-    operator would reject raises the identical named error here, and
-    the advisory RuntimeWarnings (unconsulted knobs, degraded stats)
-    fire identically. Accepts (and ignores) ``threshold`` /
-    ``hamming_max`` so a preset dict splats straight in:
-    ``mp_mode_report(emb, "vec_id", "embedding",
+    This calls the SAME ``_mp_resolve_mode`` the operator calls,
+    including its validation and warnings. Accepts (and ignores)
+    ``threshold`` / ``hamming_max`` so a preset dict splats straight
+    in: ``mp_mode_report(emb, "vec_id", "embedding",
     **PROD_NEAR_DUP_MP)``.
 
-    Job cost: zero — EXCEPT when the exact candidate count runs: under
-    ``sizing='data'``, or under the ``'auto'`` default whenever the
-    model's worst-case concentration bound exceeds the disk budget
-    (in the real shuffle tier that is nearly always — the zero-job
-    fast path engages only near the broadcast gate). The count is the
-    one linear job the operator itself would run
-    (``_mp_exact_candidate_count``); that is the documented price in
-    both places. ``sizing='model'`` is the fully-lazy opt-out.
-
-    r11: ``hamming_max`` is no longer ignored — when the data-sized
-    estimate lands in the byte-drift guard zone, the resolution runs
-    the guard-zone screen sample (one more linear job, same disclosed
-    class) and reports ``screen_sample`` / the narrowed
-    ``single_pass_guard``, exactly like the operator. ``None`` keeps
-    the static guard (the report then shows what a hamming-blind
-    resolution would do). ``threshold`` stays ignored — candidate
-    volume is threshold-independent."""
-    del threshold  # resolution is threshold-independent
+    Job cost: zero, except in the shuffle tier without an explicit
+    ``tables_per_pass``, where it runs the one linear candidate-count
+    job the operator itself would run."""
+    del threshold, hamming_max  # resolution is independent of both
     return _mp_resolve_mode(
         emb, id_col, vec_col, pool, n_bits, n_tables, probe_radius, dim,
         broadcast_corpus, broadcast_max_input_bytes, tables_per_pass,
-        eager_passes, disk_budget_bytes, skew_factor, sizing,
-        hamming_max=hamming_max,
+        disk_budget_bytes,
     )
 
 
@@ -3330,10 +1886,7 @@ def ann_lsh_multiprobe_pairs(
     broadcast_corpus: bool | None = None,
     broadcast_max_input_bytes: int | None = None,
     tables_per_pass: int | None = None,
-    eager_passes: bool | None = None,
     disk_budget_bytes: int | None = None,
-    skew_factor: float | None = None,
-    sizing: str = "auto",
 ) -> DataFrame:
     """Scale path for LOW-threshold ANN pairs: bit-pool multi-probe
     sign-LSH with a packed-signature Hamming prefilter, wrapped in the
@@ -3347,135 +1900,55 @@ def ann_lsh_multiprobe_pairs(
 
     ``broadcast_corpus``: physical shape of the four corpus-side
     joins. ``None`` (default) auto-gates on the input relation's
-    Catalyst size estimate vs the broadcast gate — the estimate is
-    read HERE, on the file-source relation, because it is the last
-    point in the pipeline where Catalyst's stats are trustworthy
-    (post-mapInPandas they are garbage, see ``_plan_size_bytes``).
-    Booleans force a mode; output is identical either way
-    (equivalence pinned by
+    Catalyst size estimate vs the broadcast gate — read HERE, on the
+    file-source relation, the last point where Catalyst's stats are
+    trustworthy (see ``_plan_size_bytes``). Booleans force a mode;
+    output is identical either way (pinned by
     tests/test_similarity.py::test_multiprobe_shuffle_mode_output_equal).
-    The gate sizes the RAW input relation while the broadcast build
-    sides are built from post-cascade DISTINCT representatives, so it
-    is conservative by construction: a heavily duplicated corpus above
-    the gate whose distinct vectors would broadcast comfortably can
-    (and should) pass ``broadcast_corpus=True`` explicitly.
+    The gate sizes the RAW input while the build sides are post-cascade
+    DISTINCT representatives, so a heavily duplicated corpus above the
+    gate can (and should) pass ``broadcast_corpus=True``.
 
-    ``broadcast_max_input_bytes``: the gate threshold in bytes.
-    ``None`` reads the Spark conf
-    ``spark.cndp.mp.broadcastMaxInputBytes`` if set, else the module
-    constant ``MP_BROADCAST_MAX_INPUT_BYTES`` (128 MiB — sized for
-    4-8 GiB executors, see the constant's comment: 128 MiB of source
-    parquet is ~500k 64-dim vectors, whose two exact-verify build
-    sides are ~2 x 280 MB in memory plus 2 x 20 MB of signature
-    words). A cluster with 32 GiB executors can safely run 8x that:
-    set the conf (or pass the argument) to
-    ``8 * 128 * 1024 * 1024`` without editing the library.
+    ``broadcast_max_input_bytes``: the gate in bytes. ``None`` reads
+    the ``spark.cndp.mp.broadcastMaxInputBytes`` conf if set, else
+    ``MP_BROADCAST_MAX_INPUT_BYTES`` (128 MiB, sized for 4-8 GiB
+    executors; a cluster with 32 GiB executors can run 8x that).
 
-    ``tables_per_pass`` / ``eager_passes``: chunked pass mode for the
-    above-gate shuffle tier — see ``_ann_lsh_multiprobe_distinct``'s
-    chunking comment. ``tables_per_pass=K`` bounds every candidate
-    exchange to a K-table slice; eager passes additionally
-    materialize each pass so its shuffle files are reclaimed before
-    the next pass runs (bounds peak shuffle disk; runs jobs at
-    operator-construction time — a disclosed deviation from the
-    engine's lazy contract). Eager passes checkpoint RELIABLY when
-    the session has a checkpoint dir configured
-    (``SparkContext.setCheckpointDir`` to cluster storage — pass
-    results then survive executor loss; set
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` there
-    or the small per-pass checkpoint dirs persist for the app
-    lifetime); without one they localCheckpoint to executor blocks.
+    **Bounded shuffle disk** (the shuffle tier, above the gate). With
+    ``tables_per_pass=None`` the operator sizes its passes in four
+    steps:
 
-    **Auto-sizing (r7 verdict #1)**: with ``tables_per_pass=None`` in
-    the shuffle tier, the operator sizes K itself — it estimates the
-    unscreened candidate-stream volume (source chosen by ``sizing``
-    — see the Skew paragraph below; the byte model
-    ``_mp_candidate_stream_bytes`` is calibrated on the
-    measured r6/r7 ladder) and compares it against a per-pass disk
-    budget: the ``disk_budget_bytes`` argument, else the
-    ``spark.cndp.mp.diskBudgetBytes`` conf, else
-    ``MP_DISK_BUDGET_BYTES`` (32 GiB, sized for this box). Stream
-    fits → the cheaper single-pass plan (chunking below the disk
-    wall is a measured ~3x wall loss); stream exceeds the budget →
-    K = ceil(n_tables / ceil(stream / budget)) chunked passes, EAGER
-    by default (lazy chunking bounds per-exchange rows but lets all
-    passes' shuffle files accumulate — the disk bound needs the
-    materialization barrier). An explicit ``tables_per_pass`` always
-    wins (pass ``tables_per_pass=n_tables`` to pin single-pass);
-    ``eager_passes=None`` means "eager iff auto-chunking engaged",
-    explicit booleans force the form. ``eager_passes=True`` without
-    effective chunking raises (or, when auto-sizing itself concluded
-    the stream fits the budget, warns and stays lazy — the requested
-    disk bound already holds without passes).
+    1. count the unscreened candidates exactly — one linear job at
+       construction time (``_mp_exact_candidate_count``), immune to
+       bucket skew — and convert at ~70 B per candidate;
+    2. pack the table list into eager passes under the disk budget
+       (``disk_budget_bytes``, else the ``spark.cndp.mp.diskBudgetBytes``
+       conf, else ``MP_DISK_BUDGET_BYTES`` = 32 GiB): single-pass when
+       the stream fits with ``MP_BYTE_DRIFT_GUARD`` headroom, else
+       K = ceil(n_tables / ceil(stream / budget)) tables per pass,
+       led by a 1/8-size first pass;
+    3. after that first pass, pack the remaining tables (finer only)
+       from its measured, job-group-scoped shuffle-write bytes;
+    4. after every pass, checkpoint its pairs and delete its shuffle
+       files synchronously (``_ShuffleReclaimer``), so peak disk is
+       ~one pass.
 
-    **Skew (r8 verdict #2) and the ``sizing`` router (r9)**: the byte
-    model assumes UNIFORM bucketing; a clustered corpus — the shape
-    near-dup dedup exists for — concentrates candidates in few
-    buckets and the true stream exceeds the uniform estimate by
-    ~2^k/(masks·NC) — a property of the cluster count, not of N
-    (measured 11.2x at every rung of a 16-cluster warehouse — enough
-    to blow through a budget the model called safe, SCALE.md
-    §Round-9). ``sizing='auto'`` (the default) therefore takes the
-    zero-job model path ONLY when the model's worst-case
-    concentration bound (true stream ≤ model·2^(k-1), provable —
-    ``_mp_model_worst_case_bytes``) already fits the budget, i.e.
-    when NO bucket distribution could violate it; otherwise it runs
-    the EXACT candidate count — one linear counting job over the
-    signatures at construction time (``_mp_exact_candidate_count``;
-    the same disclosed eagerness class as ``eager_passes``, and
-    negligible next to the quadratic work it sizes), immune to skew
-    by construction and conservative under exact duplication (it
-    counts the raw input, the cascade only shrinks the real
-    stream) — and sizes from ``max(exact, model)``. The max is the
-    asymmetric-loss combiner: the model under-shoots on clustered
-    corpora (11.2x), the exact count under-shoots on uniform ones
-    (measured per-pass byte ratio 1.20 at fresh-x30, enough to pick
-    3x54 at the slack edge where the model's 4x40 ran 25% faster);
-    under-chunking risks the disk wall, over-chunking costs at most
-    the measured ~3x, so 'auto' is never coarser than either
-    estimator alone and never finer than the r8 model default
-    (``sizing='data'`` keeps the pure exact count). Opt-outs: an explicit
-    ``skew_factor`` (arg / ``spark.cndp.mp.skewFactor`` conf) routes
-    'auto' to the model path with the estimate statically multiplied
-    — the zero-job hedge for a caller who knows their corpus's skew;
-    ``sizing='model'`` pins the fully-lazy r8 behavior (and with it
-    the measured risk: model-sized runs violated a 2 GiB budget up
-    to 3.05x on the clustered warehouse while data-sized runs held
-    every rung, SCALE_LADDER_SKEW_r09.json).
-
-    **Runtime sizing feedback (r8 verdict #1), now corrective
-    (r10)**: whichever estimate sized the passes is open-loop
-    calibration, not physics — so when eager chunked passes run,
-    each pass's actual shuffle-write bytes (driver-aggregated task
-    metrics, scoped to the run's own job group so concurrent jobs in
-    the session cannot contaminate a reading — cluster-valid) are
-    compared against the estimate's slice; on >4x divergence either
-    way a one-time ``RuntimeWarning`` reports the measured-vs-modeled
-    ratio and the knob to turn (``disk_budget_bytes`` /
-    ``skew_factor`` / ``sizing='data'``), and every run writes the
-    per-pass numbers to the module-level ``LAST_MP_SIZING_REPORT``
-    for post-hoc audit. When the auto-sizer consulted the disk
-    budget, the feedback additionally ACTS (r9 verdict #1): a
-    measured per-table rate that projects the next pass past the
-    budget re-chunks the REMAINING passes finer mid-run (never
-    coarser — the asymmetric loss stands), and every adaptive run
-    leads with a 1/8-size calibration pilot pass so the refutation
-    arrives before any full-size pass pays the violation
-    (``MP_PILOT_DIVISOR``; measured: the skew_factor=2-hedged model
-    run on the clustered x3 warehouse finishes at a 1.96 GB peak
-    inside the 2 GiB budget where finishing on the estimate peaked
-    4.72 GB — SCALE_LADDER_DRIFT_r10.json). The single-pass decision
-    itself carries a measured byte-drift guard
-    (``MP_BYTE_DRIFT_GUARD``): even the exact count converts rows to
-    bytes through calibration, and the r10 NC sweep measured true
-    bytes up to 1.64x the estimate at the budget edge
-    (SCALE_LADDER_SKEW_CURVE_r10.json). Use ``mp_mode_report`` to
-    see the whole resolution without running the quadratic job."""
+    An explicit ``tables_per_pass`` always wins (pass
+    ``tables_per_pass=n_tables`` to pin single-pass) and is never
+    re-packed; any chunked run is eager. Eager passes run jobs at
+    construction time — a disclosed deviation from the engine's lazy
+    contract. They checkpoint RELIABLY when the session has a
+    checkpoint dir (``SparkContext.setCheckpointDir``; set
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` there or
+    the small per-pass dirs persist), else to executor blocks. Each
+    chunked run's per-pass bytes, re-pack and reclaim record land in
+    ``LAST_MP_SIZING_REPORT`` and ``MP_SIZING_REPORTS`` (keyed by the
+    caller's job group). ``mp_mode_report`` shows the resolution
+    without running the quadratic job."""
     res = _mp_resolve_mode(
         emb, id_col, vec_col, pool, n_bits, n_tables, probe_radius, dim,
         broadcast_corpus, broadcast_max_input_bytes, tables_per_pass,
-        eager_passes, disk_budget_bytes, skew_factor, sizing,
-        hamming_max=hamming_max,
+        disk_budget_bytes,
     )
     return _exact_dup_cascade(
         emb,
@@ -3495,7 +1968,6 @@ def ann_lsh_multiprobe_pairs(
             dim,
             broadcast_corpus=res["broadcast_corpus"],
             tables_per_pass=res["tables_per_pass"],
-            eager_passes=res["eager_passes"],
             est_stream_bytes=res["est_stream_bytes"],
             disk_budget_bytes=(
                 res["disk_budget_bytes"] if res["adaptive"] else None

@@ -1,28 +1,22 @@
-"""Measure the calibration pilot's overhead where it is PURE cost
-(r10 verdict #5): on a well-estimated uniform corpus the 1/8-size
-pilot pass buys nothing — the estimate is right, no re-chunk fires —
-so its price is one extra pass barrier plus a finer first slice. The
-r10 round ARGUED that price ("~the fixed per-pass floor"); this
-script measures it: the same adaptive chunked run on a fresh-x10
-uniform warehouse, with the pilot enabled (default) vs disabled
-(MP_PILOT_DIVISOR=1 resolves pilot_tables=None), one child
-subprocess per configuration (fresh JVM + scratch — the r9
-clean-session methodology), N trials each.
+"""Measure what the small first pass (the pilot) costs and buys on a
+well-estimated uniform corpus: the same budget-sized chunked run on a
+fresh-x10 uniform warehouse with the pilot enabled (default
+MP_PILOT_DIVISOR=8) vs disabled (MP_PILOT_DIVISOR=1 resolves
+pilot_tables=None, so the first pass is full-size and the re-pack
+reads it instead), one child subprocess per configuration (fresh JVM
++ scratch), N interleaved trials each.
 
-Noise caveats (SCALE.md), corrected r12: WALLS on this box drift up
-to 1.6x between sessions, so the claim this measures is the RELATIVE
-with/without delta from interleaved same-session-class trials. Pass
-DECISIONS and shuffle-write BYTES are bit-stable; disk PEAKS were
-NOT under the r11 async cleanup (SCALE_LADDER_PILOT_TAX_r11.json:
-bit-identical twins peaked 6.45 GB vs 3.67 GB under a 4 GiB budget,
-3 of 4 trials breaching on ContextCleaner lag alone — the r11 form
-of this docstring wrongly claimed peaks bit-stable). The r12
-deterministic inter-pass reclamation exists to make every trial hold
-the budget; this script is its acceptance gate (``budget_held_all``).
+Walls on a shared box drift up to 1.6x between sessions, so the wall
+claim is the RELATIVE with/without delta from interleaved trials.
+Pass decisions and shuffle-write bytes are bit-stable; disk peaks
+hold the budget under deterministic inter-pass reclamation
+(``budget_held_all_with_pilot`` is the acceptance gate). The
+pilot-off arm is the control that keeps the pilot: its first
+full-size pass shuffled 5.43 GB against a 4 GiB budget in r12.
 
-The corpus rotates per round (r11 verdict #5): ``--seed`` prefixes
-the fresh-content md5 keys (SPARK_GRAFT_LADDER_CONTENT_SEED), so the
-fix is validated on unmemorized data; the artifact records the seed.
+The corpus rotates per run: ``--seed`` prefixes the fresh-content md5
+keys (SPARK_GRAFT_LADDER_CONTENT_SEED), so the run is validated on
+unmemorized data; the artifact records the seed.
 
 Usage:
   python scripts/pilot_tax.py [--k 10] [--budget BYTES]
@@ -67,7 +61,12 @@ def child(sf_dir: str, budget: int, pilot_divisor: int) -> int:
     emb = load_table(spark, sf_dir, "embeddings")
     sim.LAST_MP_SIZING_REPORT = None
     sc = spark.sparkContext
-    shuf0 = sim._observed_shuffle_write_bytes(sc)
+
+    def shuffle_total():
+        stages = sim._stage_shuffle_write_bytes(sc)
+        return None if stages is None else sum(stages.values())
+
+    shuf0 = shuffle_total()
     t0 = time.perf_counter()
     pairs = ann_lsh_multiprobe_pairs(
         emb, "vec_id", "embedding", threshold=_COS_THRESHOLD,
@@ -77,7 +76,7 @@ def child(sf_dir: str, budget: int, pilot_divisor: int) -> int:
     )
     pairs.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    shuf1 = sim._observed_shuffle_write_bytes(sc)
+    shuf1 = shuffle_total()
     disk = tracer.stop()
     fb = sim.LAST_MP_SIZING_REPORT
     print(json.dumps({
@@ -92,7 +91,11 @@ def child(sf_dir: str, budget: int, pilot_divisor: int) -> int:
         ),
         "pass_tables": [p["tables"] for p in (fb or {}).get("passes", [])],
         "pilot_tables": (fb or {}).get("pilot_tables"),
-        "resizes": (fb or {}).get("resizes"),
+        "pass_bytes": [
+            p["observed_bytes"] for p in (fb or {}).get("passes", [])
+        ],
+        "est_stream_bytes": (fb or {}).get("est_stream_bytes"),
+        "repack": (fb or {}).get("repack"),
         "reclaim": (fb or {}).get("reclaim"),
     }))
     spark.stop()
@@ -157,11 +160,11 @@ def main() -> int:
         "with_pilot_sec": by[8],
         "without_pilot_sec": by[1],
         "pilot_tax_sec_min": round(min(by[8]) - min(by[1]), 3),
-        # the acceptance gate for the r12 deterministic reclaim is the
-        # SHIPPED configuration (pilot on); the pilot-OFF control arm
-        # can breach for a reason cleanup can never fix — its first
-        # full-size pass alone may exceed the budget when the model
-        # under-estimates (the documented reason the pilot leads)
+        # the acceptance gate is the SHIPPED configuration (pilot
+        # on); the pilot-OFF control arm can breach for a reason
+        # cleanup can never fix — its first full-size pass alone may
+        # exceed the budget when bytes per candidate drift above the
+        # count's 70 B (the reason the pilot leads)
         "budget_held_all_with_pilot": all(
             r["budget_held"] for r in runs if r["pilot_divisor"] == 8
         ),

@@ -187,7 +187,7 @@ def _mp_forced_shuffle_chunked(spark, sf_dir):
     The single-pass shuffle form exchanges the whole unscreened
     candidate stream (~1e9 rows at fresh-x30) and died filling >70 GB
     of shuffle files (SCALE.md §Round-6); each chunked pass exchanges
-    ~1/8 of that and eager_passes reclaims a pass's shuffle files
+    ~1/8 of that and each eager pass's shuffle files are reclaimed
     before the next starts, so the same row completes with bounded
     disk. Timed against ann_mp_t04 (broadcast mode) on the same
     warehouse, this prices the above-gate chunked tier."""
@@ -210,7 +210,7 @@ def _mp_forced_shuffle_chunked(spark, sf_dir):
         threshold=_COS_THRESHOLD, pool=_MP_POOL, n_bits=_MP_BITS,
         n_tables=_MP_TABLES, probe_radius=_MP_RADIUS,
         hamming_max=_MP_HAMMING, broadcast_corpus=False,
-        tables_per_pass=20, eager_passes=True,
+        tables_per_pass=20,
     )
 
 
@@ -223,9 +223,9 @@ def _mp_forced_shuffle(spark, sf_dir, prod: bool):
     memory-bound, not wall-bound: above it broadcast OOMs executors
     rather than losing on wall — see similarity.py).
 
-    tables_per_pass is pinned to n_tables since r8: with the r8
-    auto-sizer, a bare broadcast_corpus=False call above the disk
-    budget would auto-chunk — the right default for a user, but this
+    tables_per_pass is pinned to n_tables: a bare
+    broadcast_corpus=False call above the disk budget would
+    auto-chunk — the right default for a user, but this
     row exists to measure the SINGLE-PASS shuffle anchor, so it pins
     the pre-auto form explicitly (the documented opt-out)."""
     from canadiannewsdatapipeline_spark.operators.similarity import (
@@ -259,9 +259,9 @@ def _mp_forced_shuffle(spark, sf_dir, prod: bool):
 
 
 def _mp_prod_shuffle_chunked(spark, sf_dir):
-    """r7 verdict #4: the PROD preset with the chunk/eager knobs
-    engaged through its **overrides pass-through, in forced shuffle
-    mode — pins that the knobs compose with the preset at scale. The
+    """r7 verdict #4: the PROD preset with the chunking knob engaged
+    through its **overrides pass-through, in forced shuffle mode —
+    pins that the knob composes with the preset at scale. The
     prod candidate stream is ~10^3x smaller than the t04 stress
     row's, so this is expected to be boring: 4-table eager passes
     over the preset's 16 tables."""
@@ -273,18 +273,17 @@ def _mp_prod_shuffle_chunked(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     return prod_near_dup_pairs(
         emb, "vec_id", "embedding",
-        broadcast_corpus=False, tables_per_pass=4, eager_passes=True,
+        broadcast_corpus=False, tables_per_pass=4,
     )
 
 
 def _mp_t04_shuffle_auto(spark, sf_dir):
     """r8: the t04 config in the shuffle tier with EVERYTHING ELSE
     default — what a user above the broadcast gate gets without
-    knowing any knob exists. The auto-sizer estimates the candidate
-    stream from the input relation's Catalyst size, compares it to
-    spark.cndp.mp.diskBudgetBytes (default 32 GiB) and picks
-    tables_per_pass + eager passes itself; at fresh-x30 the sizing
-    rule lands on the measured-good 4x40-pass point."""
+    knowing any knob exists. The operator counts the candidate
+    stream exactly, packs eager passes under
+    spark.cndp.mp.diskBudgetBytes (default 32 GiB), and re-packs the
+    rest from its small first pass's measured bytes."""
     from canadiannewsdatapipeline_spark.operators.similarity import (
         ann_lsh_multiprobe_pairs,
     )
@@ -307,83 +306,14 @@ def _mp_t04_shuffle_auto(spark, sf_dir):
     )
 
 
-def _mp_t04_tight_skew2(spark, sf_dir, adaptive: bool):
-    """r10 (r9 verdict #1): the injected-drift pair. A caller hedges
-    the model with skew_factor=2 on a clustered corpus whose real
-    drift is ~11x — the model x2 estimate chunks, but too coarse.
-
-    ``adaptive=True`` is the r10 zero-knob behavior: the model-sized
-    plan leads with the 1/8 calibration pilot pass, the measured
-    per-table rate refutes the estimate after the pilot, and the
-    remaining passes re-chunk finer mid-run — the budget holds.
-
-    ``adaptive=False`` replays what finishing on the refuted estimate
-    did (the pre-r10 behavior): the SAME resolution's K as an
-    explicit tables_per_pass (explicit K never re-sizes), so the
-    first full-size pass pays the violation the pilot exists to
-    avoid. Run both under --clean-session --disk-trace and compare
+def _mp_t04_auto_tight_budget(spark, sf_dir):
+    """The t04 config in the shuffle tier, zero knobs except a TIGHT
+    disk budget ($SPARK_GRAFT_MP_BUDGET bytes, default 2 GiB). On a
+    --clustered warehouse the candidates concentrate in few buckets
+    (the shape a uniform byte model once under-read 11.2x); the exact
+    count sizes the passes and the first pass's measured bytes pack
+    the rest. Run under --clean-session --disk-trace and compare
     peak_disk_bytes against the budget."""
-    import warnings
-
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        ann_lsh_multiprobe_pairs,
-        mp_mode_report,
-    )
-    from canadiannewsdatapipeline_spark.queries.llm import (
-        _COS_THRESHOLD,
-        _MP_BITS,
-        _MP_HAMMING,
-        _MP_POOL,
-        _MP_RADIUS,
-        _MP_TABLES,
-    )
-    from canadiannewsdatapipeline_spark.sources.registry import load_table
-
-    budget = int(
-        os.environ.get("SPARK_GRAFT_MP_BUDGET", str(2 * 1024**3))
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    common = dict(
-        pool=_MP_POOL, n_bits=_MP_BITS, n_tables=_MP_TABLES,
-        probe_radius=_MP_RADIUS, broadcast_corpus=False,
-    )
-    if adaptive:
-        return ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", threshold=_COS_THRESHOLD,
-            hamming_max=_MP_HAMMING, disk_budget_bytes=budget,
-            skew_factor=2.0, **common,
-        )
-    plan = mp_mode_report(
-        emb, "vec_id", "embedding", disk_budget_bytes=budget,
-        skew_factor=2.0, **common,
-    )
-    k = plan["tables_per_pass"]
-    with warnings.catch_warnings():
-        # the explicit-K twin intentionally triggers the
-        # unconsulted-knob advisory; this row measures, not audits
-        warnings.simplefilter("ignore", RuntimeWarning)
-        return ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", threshold=_COS_THRESHOLD,
-            hamming_max=_MP_HAMMING,
-            # K=None (the estimate fit): the pre-r10 behavior is the
-            # same single-pass plan — pin it explicitly
-            tables_per_pass=k if k is not None else _MP_TABLES,
-            eager_passes=plan["eager_passes"] if k is not None else None,
-            **common,
-        )
-
-
-def _mp_t04_auto_tight_budget(spark, sf_dir, sizing: str):
-    """r8 verdict #2 (skew measurement): the t04 config in the
-    shuffle tier, zero knobs except a TIGHT disk budget
-    ($SPARK_GRAFT_MP_BUDGET bytes, default 2 GiB) and the sizing
-    source. On a --clustered warehouse the uniform byte model
-    ('model') underestimates the candidate stream by ~2^k/(masks·NC)
-    and declares single-pass "safe" — the run then blows through the
-    budget (the violation under measurement). sizing='data' counts
-    the stream exactly from the bucket histogram, chunks, and the
-    budget holds. Run both under --clean-session --disk-trace and
-    compare peak_disk_bytes against the budget."""
     from canadiannewsdatapipeline_spark.operators.similarity import (
         ann_lsh_multiprobe_pairs,
     )
@@ -406,7 +336,7 @@ def _mp_t04_auto_tight_budget(spark, sf_dir, sizing: str):
         threshold=_COS_THRESHOLD, pool=_MP_POOL, n_bits=_MP_BITS,
         n_tables=_MP_TABLES, probe_radius=_MP_RADIUS,
         hamming_max=_MP_HAMMING, broadcast_corpus=False,
-        disk_budget_bytes=budget, sizing=sizing,
+        disk_budget_bytes=budget,
     )
 
 
@@ -414,26 +344,7 @@ EXTRA_QUERIES = {
     "ann_lsh_prod_thresh": _ann_lsh_prod,
     "ann_lsh_prod_mp": _ann_lsh_prod_mp,
     "ann_mp_t04_count": _ann_mp_t04_count,
-    "ann_mp_t04_auto_tight_budget": (
-        lambda s, d: _mp_t04_auto_tight_budget(s, d, "model")
-    ),
-    "ann_mp_t04_auto_tight_budget_data": (
-        lambda s, d: _mp_t04_auto_tight_budget(s, d, "data")
-    ),
-    # r9: the zero-knob DEFAULT (sizing='auto') on the same tight
-    # budget — must behave like the data-sized row on clustered
-    # warehouses (the worst-case bound refuses the model there)
-    "ann_mp_t04_auto_tight_budget_auto": (
-        lambda s, d: _mp_t04_auto_tight_budget(s, d, "auto")
-    ),
-    # r10: the injected-drift pair (r9 verdict #1) — same resolution,
-    # with and without the pilot + mid-run re-sizing
-    "ann_mp_t04_tight_skew2_adaptive": (
-        lambda s, d: _mp_t04_tight_skew2(s, d, True)
-    ),
-    "ann_mp_t04_tight_skew2_static": (
-        lambda s, d: _mp_t04_tight_skew2(s, d, False)
-    ),
+    "ann_mp_t04_auto_tight_budget": _mp_t04_auto_tight_budget,
     # mode-comparison rows: select via SPARK_GRAFT_LADDER_QUERIES
     # (not in any default subset — they exist to measure the
     # broadcast-vs-shuffle delta, not to run every ladder)
@@ -893,9 +804,9 @@ def main() -> int:
         if tracer is not None:
             rec.update(tracer.stop())
         if _sim.LAST_MP_SIZING_REPORT is not None:
-            # runtime sizing feedback from the rung's LAST eager
-            # chunked multiprobe run (attributable when the rung is
-            # filtered to one such row)
+            # per-pass record of the rung's LAST eager chunked
+            # multiprobe run (attributable when the rung is filtered
+            # to one such row)
             rec["mp_sizing_report"] = _sim.LAST_MP_SIZING_REPORT
         summary[f"x{k}"] = rec
         print(json.dumps(rec))

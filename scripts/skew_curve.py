@@ -1,34 +1,26 @@
-"""Map the sizing model's validity boundary at INTERMEDIATE skew
-(r9 verdict #5): r9 measured the two extremes — uniform corpora
-(model right, exact count reads 0.71x under it) and a 16-cluster
-corpus (model 11.2x under truth) — and built the max(exact, model)
-combiner from those two points. This sweep turns the rationale into
-a curve: clustered warehouses at NC cluster counts between the
-extremes, recording for each
+"""Run the multiprobe's zero-knob shuffle tier on clustered
+warehouses across NC cluster counts (16 -> 1024: from strongly
+concentrated buckets toward uniform) under a tight disk budget, and
+record for each NC
 
-- the uniform byte-model estimate and its worst-case bound,
-- the exact candidate count (the skew-immune estimator),
-- which estimator the 'auto' combiner sized from,
-- the zero-knob run's decision (K, passes), measured shuffle-write
-  bytes, wall, and peak scratch disk vs the tight budget,
+- the exact candidate count (x 70 B) and the resolved plan
+  (``mp_mode_report``: tables per pass, pilot, pass count),
+- the run: wall, peak scratch disk vs the budget, total shuffle-write
+  bytes and their ratio to the exact count, the per-pass readings and
+  the measured re-pack (``LAST_MP_SIZING_REPORT``),
+- whether the run's first pass is the one the report predicted.
 
-so the NC where max(exact, model) switches drivers is measured, and
-any mid-skew regime where BOTH estimators under-read the true stream
-would show up as observed/est feedback ratios past 1.
-
-Theory says the under-estimate factor is ~2^k/(masks*NC) = 4096/(13*NC)
-at k=12/r=1: ~19.7x at NC=16 (measured 11.2x — partial concentration),
-~4.9x at NC=64, ~1.2x at NC=256, below 1 at NC=1024 (uniform-ish; the
-model floor should take over between 256 and 1024).
+The observed/exact ratio of a single-pass rung is the evidence for
+``MP_BYTE_DRIFT_GUARD`` (a single pass has no boundary at which a
+measurement could correct it).
 
 Usage:
   python scripts/skew_curve.py [--nc 16,64,256,1024] [--k 3]
       [--budget BYTES] [--out OUT.json]
 
-One child subprocess per NC (fresh JVM + scratch dirs — the r9
---clean-session methodology), warehouses built by the parent via
-scale_ladder.build_rung (deterministic md5 content). ~3-4 min per NC
-at k=3 on this box; run the whole sweep in tmux.
+One child subprocess per NC (fresh JVM + scratch dirs), warehouses
+built by the parent via scale_ladder.build_rung (deterministic md5
+content). ~1-4 min per NC at k=3 on a 4-core box.
 """
 
 from __future__ import annotations
@@ -71,22 +63,17 @@ def child(sf_dir: str, budget: int) -> int:
         pool=_MP_POOL, n_bits=_MP_BITS, n_tables=_MP_TABLES,
         probe_radius=_MP_RADIUS, broadcast_corpus=False,
     )
-    # the pure model view (zero jobs) ...
-    model_rep = mp_mode_report(
-        emb, "vec_id", "embedding", sizing="model",
-        disk_budget_bytes=budget, **common,
-    )
-    # ... and the zero-knob 'auto' resolution (runs the count job
-    # whenever the worst-case bound exceeds the budget; r11: passes
-    # hamming_max so the guard-zone screen sample — which the run
-    # itself consults — shows up in the recorded decision too)
-    auto_rep = mp_mode_report(
-        emb, "vec_id", "embedding", disk_budget_bytes=budget,
-        hamming_max=_MP_HAMMING, **common,
+    rep = mp_mode_report(
+        emb, "vec_id", "embedding", disk_budget_bytes=budget, **common,
     )
     sim.LAST_MP_SIZING_REPORT = None
     sc = spark.sparkContext
-    shuf0 = sim._observed_shuffle_write_bytes(sc)
+
+    def shuffle_total():
+        stages = sim._stage_shuffle_write_bytes(sc)
+        return None if stages is None else sum(stages.values())
+
+    shuf0 = shuffle_total()
     t0 = time.perf_counter()
     pairs = ann_lsh_multiprobe_pairs(
         emb, "vec_id", "embedding", threshold=_COS_THRESHOLD,
@@ -94,44 +81,42 @@ def child(sf_dir: str, budget: int) -> int:
     )
     pairs.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    shuf1 = sim._observed_shuffle_write_bytes(sc)
+    shuf1 = shuffle_total()
     disk = tracer.stop()
     fb = sim.LAST_MP_SIZING_REPORT
+    passes = [p["tables"] for p in (fb or {}).get("passes", [])]
+    shuffle = (
+        shuf1 - shuf0 if shuf0 is not None and shuf1 is not None else None
+    )
     rec = {
         "sf_dir": sf_dir,
         "n_rows": emb.count(),
-        "model_est_bytes": model_rep["est_stream_bytes"],
-        "model_worst_case_bytes": auto_rep["model_worst_case_bytes"],
-        "exact_stream_bytes": auto_rep["est_exact_bytes"],
-        "est_source": auto_rep["est_source"],
-        "sizing_effective": auto_rep["sizing_effective"],
-        "est_stream_bytes": auto_rep["est_stream_bytes"],
+        "exact_stream_bytes": rep["est_stream_bytes"],
         "decision": {
-            "tables_per_pass": auto_rep["tables_per_pass"],
-            "n_passes": auto_rep["n_passes"],
-            "eager_passes": auto_rep["eager_passes"],
-            "pilot_tables": auto_rep["pilot_tables"],
-            "adaptive": auto_rep["adaptive"],
-            "screen_sample": auto_rep.get("screen_sample"),
-            "single_pass_guard": auto_rep.get("single_pass_guard"),
+            k: rep[k]
+            for k in ("regime", "tables_per_pass", "pilot_tables", "n_passes")
         },
         "run": {
             "sec": round(wall, 3),
             "budget_bytes": budget,
             "peak_disk_bytes": disk["peak_disk_bytes"],
             "budget_held": disk["peak_disk_bytes"] <= budget,
-            "shuffle_write_bytes": (
-                shuf1 - shuf0
-                if shuf0 is not None and shuf1 is not None
+            "shuffle_write_bytes": shuffle,
+            "observed_over_exact": (
+                round(shuffle / rep["est_stream_bytes"], 3)
+                if shuffle and rep["est_stream_bytes"]
                 else None
+            ),
+            "pass_tables": passes,
+            "first_pass_as_reported": (
+                passes[:1]
+                == [rep["pilot_tables"] or rep["tables_per_pass"]]
+                if passes
+                else rep["regime"] == "single-pass-shuffle"
             ),
             "mp_sizing_report": fb,
         },
     }
-    if rec["exact_stream_bytes"] and rec["model_est_bytes"]:
-        rec["exact_over_model"] = round(
-            rec["exact_stream_bytes"] / rec["model_est_bytes"], 3
-        )
     print(json.dumps(rec))
     spark.stop()
     return 0
@@ -183,13 +168,9 @@ def main() -> int:
         print(json.dumps(rec))
     result = {
         "metric": "clustered_skew_curve_t04_tight_budget",
+        "sizing": "exact count -> packed eager passes -> re-pack from the first pass",
         "k_replication": k,
         "budget_bytes": budget,
-        "theory_note": (
-            "under-estimate factor ~2^k/(masks*NC) = 4096/(13*NC); "
-            "combiner should switch from exact-driven to model-floor "
-            "as NC grows toward uniform"
-        ),
         "curve": curve,
     }
     with open(out_path, "w") as fh:

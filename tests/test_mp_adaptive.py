@@ -1,30 +1,13 @@
-"""Round-10 multiprobe additions: the sizing feedback becomes
-CORRECTIVE, and its readings become concurrency-safe.
-
-1. **Adaptive mid-run re-sizing** (r9 verdict #1): when the
-   auto-sizer consulted a disk budget and eager chunked passes run,
-   a measured per-table shuffle rate that projects the next pass past
-   the budget re-derives K for the REMAINING table list — finer only,
-   never coarser (the asymmetric loss stands). Every adaptive run
-   leads with a 1/8-size calibration pilot pass so the refutation
-   arrives before a full-size pass pays the violation (the measured
-   clustered drift is 11.2x — any full first pass under a 2-3x skew
-   hedge already blows the budget; and even the exact count's byte
-   conversion drifted 1.56x at NC=64).
-
-2. **Job-group-scoped readings** (r9 verdict #4): pass deltas come
-   from the run's own job group (``_group_shuffle_write_bytes``), so
-   a concurrent job in the same SparkSession can neither inflate a
-   reading nor trigger a spurious warning or re-size.
-
-3. **r9 advice items**: the worst-case concentration bound computed
-   from the UNFLOORED product (no collapse to 0 at tiny N), and the
-   conf-derived-skew_factor warning under ``sizing='auto'``.
+"""The multiprobe's measured re-pack, its job-group-scoped readings
+(``_stage_shuffle_write_bytes``: a concurrent job in the same session
+never reaches a pass delta; stages that predate the group are
+excluded), and the per-run report slots. A budget-sized chunked run
+leads with a 1/8-size first pass; when that pass's measured bytes
+per table project the next pass past the budget, the REMAINING tables
+are packed with the sizer's K rule — finer only, never coarser.
 """
 
 from __future__ import annotations
-
-import warnings as _warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,7 +15,6 @@ from pyspark.sql import functions as F
 import canadiannewsdatapipeline_spark.operators.similarity as sim
 from canadiannewsdatapipeline_spark.operators.similarity import (
     _mp_k_from_estimate,
-    _mp_model_worst_case_bytes,
     _MpSizingFeedback,
     ann_lsh_multiprobe_pairs,
     mp_mode_report,
@@ -49,261 +31,181 @@ def emb(spark):
     return load_table(spark, SF_DIR, "embeddings")
 
 
-def _fake_group_tracker(monkeypatch, readings):
+def _fake_group_tracker(monkeypatch, readings, group="g"):
+    """Cumulative group readings, one per read; the arm-time snapshot
+    (group=None) sees no stages."""
     it = iter(readings)
-    monkeypatch.setattr(
-        sim,
-        "_group_shuffle_write_bytes",
-        lambda sc, group, exclude=frozenset(): next(it),
+
+    def fake(sc, g=None):
+        if g is None:
+            return {}
+        assert g == group
+        return {0: next(it)}
+
+    monkeypatch.setattr(sim, "_stage_shuffle_write_bytes", fake)
+
+
+def _feedback(budget=None, n_tables=32, group="g", **kw):
+    return _MpSizingFeedback(
+        None, n_tables, group, disk_budget_bytes=budget, **kw
     )
 
 
 # ---------------------------------------------------------------------------
-# 1. resize() — Spark-free decision pins (faked pass readings)
+# 1. repack() — Spark-free decision pins (faked pass readings)
 # ---------------------------------------------------------------------------
 
 
 def test_resize_triggers_on_measured_drift(monkeypatch):
-    """A measured rate that projects the next pass past the budget
-    must re-chunk the remaining tables with the SAME K rule the sizer
-    used, fed the measurement — and warn once, naming the numbers."""
+    """A first-pass rate that projects the next pass past the budget
+    packs the remaining tables with the SAME K rule the sizer used,
+    fed the measurement."""
     budget = 256 * MB
-    # pilot pass of 2 tables observed at 200 MB -> 100 MB/table;
-    # the next 8-table pass projects to 800 MB >> 256 MB budget
+    # first pass of 2 tables observed at 200 MB -> 100 MB/table; the
+    # next 8-table pass projects to 800 MB >> 256 MB
     _fake_group_tracker(monkeypatch, [0, 200 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=100 * MB, n_tables=32,
-        disk_budget_bytes=budget, job_group="g",
-    )
+    fb = _feedback(budget)
     fb.after_pass(2)
-    with pytest.warns(RuntimeWarning, match="adaptive re-sizing"):
-        new_k = fb.resize(remaining_tables=30, current_k=8)
-    # est_remaining = 30 * 100 MB = 3000 MB -> 12 passes -> K = 3
-    assert new_k == _mp_k_from_estimate(
-        30 * 100 * MB + 1, 30, budget
-    ) == 3
+    new_k = fb.repack(remaining_tables=30, current_k=8)
+    # 30 * 100 MB = 3000 MB -> 12 passes -> K = 3
+    assert new_k == _mp_k_from_estimate(30 * 100 * MB + 1, 30, budget) == 3
     fb.finish()
     rep = sim.LAST_MP_SIZING_REPORT
     assert rep["adaptive"] is True
     assert rep["disk_budget_bytes"] == budget
-    assert rep["resizes"] == [
-        {
-            "after_pass": 1,
-            "measured_bytes_per_table": 100 * MB,
-            "old_tables_per_pass": 8,
-            "new_tables_per_pass": 3,
-            "remaining_tables": 30,
-            # one measured pass size: floor/marginal not separable,
-            # the flat worst-rate path stands (r12)
-            "rate_model": None,
-        }
-    ]
-
-
-def test_resize_fit_prevents_overfine_rechunk(monkeypatch):
-    """r11 verdict #2: the pilot's floor-inflated flat rate must stop
-    driving re-chunks once a full-size pass separates floor from
-    marginal. Pilot (2 tables) reads 200 MB -> flat 100 MB/table
-    projects an 8-table pass at 800 MB, past a 450 MB budget; but the
-    8-table pass itself reads 400 MB, so the fit (marginal 33.3 MB/t,
-    floor 133 MB) projects the NEXT 8-table pass at exactly 400 MB —
-    inside the budget. No re-chunk."""
-    budget = 450 * MB
-    _fake_group_tracker(monkeypatch, [0, 200 * MB, 600 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=1000 * MB, n_tables=34,
-        disk_budget_bytes=budget, job_group="g",
-    )
-    fb.after_pass(2)   # pilot: 200 MB
-    fb.after_pass(8)   # full pass: 400 MB
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        assert fb.resize(remaining_tables=24, current_k=8) is None
-    fb.finish()
-    rm = sim.LAST_MP_SIZING_REPORT["rate_model"]
-    assert rm is not None
-    assert 133 * MB <= rm["floor_bytes"] <= 134 * MB
-    assert 33 * MB <= rm["marginal_bytes_per_table"] <= 34 * MB
-
-
-def test_resize_fit_rechunks_on_fitted_marginal(monkeypatch):
-    """When even the FITTED projection exceeds the budget, the
-    re-chunk derives K from (budget - floor) / marginal and records
-    the model."""
-    budget = 300 * MB
-    # pilot 2 tables -> 160 MB; pass 8 tables -> 460 MB:
-    # marginal = 300/6 = 50 MB/t, floor = 60 MB.
-    _fake_group_tracker(monkeypatch, [0, 160 * MB, 620 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=1000 * MB, n_tables=34,
-        disk_budget_bytes=budget, job_group="g",
-    )
-    fb.after_pass(2)
-    fb.after_pass(8)
-    # next 8-table pass projects 60 + 8*50 = 460 MB > 300 MB;
-    # new K = (300 - 60) / 50 = 4
-    with pytest.warns(RuntimeWarning, match="adaptive re-sizing"):
-        assert fb.resize(remaining_tables=24, current_k=8) == 4
-    fb.finish()
-    rec = sim.LAST_MP_SIZING_REPORT["resizes"][-1]
-    assert rec["new_tables_per_pass"] == 4
-    assert rec["rate_model"] == {
-        "floor_bytes": 60 * MB,
-        "marginal_bytes_per_table": 50 * MB,
+    assert rep["repack"] == {
+        "measured_bytes_per_table": 100 * MB,
+        "old_tables_per_pass": 8,
+        "new_tables_per_pass": 3,
+        "remaining_tables": 30,
     }
 
 
-def test_resize_fit_degenerate_falls_back_to_flat(monkeypatch):
-    """A larger pass that shuffled FEWER bytes (tail passes, cache
-    effects) is not the modeled floor+marginal shape — the fit
-    declines and the flat worst-rate path stands."""
-    budget = 300 * MB
-    _fake_group_tracker(monkeypatch, [0, 400 * MB, 300 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=1000 * MB, n_tables=34,
-        disk_budget_bytes=budget, job_group="g",
-    )
-    fb.after_pass(2)   # 200 MB/table
-    fb.after_pass(8)   # 37.5 MB/table -> marginal would be negative
-    assert fb._fitted_rate_model() is None
-    # flat path: worst rate 200 MB/t projects 8 tables -> 1600 MB
-    with pytest.warns(RuntimeWarning, match="adaptive re-sizing"):
-        new_k = fb.resize(remaining_tables=24, current_k=8)
-    assert new_k is not None and new_k < 8
-    fb.finish()
-    assert sim.LAST_MP_SIZING_REPORT["resizes"][-1]["rate_model"] is None
-
-
 def test_resize_fit_reproduces_r11_pilot_tax_convergence(monkeypatch):
-    """The verdict's done-criterion, pinned Spark-free on the r11
-    pilot-tax numbers: pilot 5 tables -> 882 MB (flat 176 MB/t),
-    first full 23-table pass -> 3369 MB. The fit (marginal 138 MB/t,
-    floor 191 MB) projects the next 23-table pass at 3369 MB —
-    inside the 4 GiB budget — so the run converges at the no-pilot
-    K (23, no finer)."""
+    """The r11 pilot-tax numbers: pilot 5 tables -> 882 MB (176 MB/t,
+    floor-inflated), then full 23-table passes at 3369 MB. The re-pack
+    reads the first pass only: 40 -> 23 once, and no later pass can
+    push the run one step finer (the over-fine second re-chunk a flat
+    rate re-read after every pass used to cause) — the run converges
+    at K=23 inside the 4 GiB budget."""
     budget = 4 * 1024 * MB
-    _fake_group_tracker(
-        monkeypatch, [0, 882 * MB, (882 + 3369) * MB]
-    )
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=20_000 * MB, n_tables=160,
-        disk_budget_bytes=budget, job_group="g", pilot_tables=5,
-    )
+    _fake_group_tracker(monkeypatch, [0, 882 * MB, (882 + 3369) * MB])
+    fb = _feedback(budget, n_tables=160, pilot_tables=5)
     fb.after_pass(5)
-    # right after the pilot only one size is measured: the flat rate
-    # stands and re-chunks 40 -> 23 (the pilot's exposure cap)
-    with pytest.warns(RuntimeWarning, match="adaptive re-sizing"):
-        assert fb.resize(remaining_tables=155, current_k=40) == 23
+    assert fb.repack(remaining_tables=155, current_k=40) == 23
     fb.after_pass(23)
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        assert fb.resize(remaining_tables=132, current_k=23) is None
+    assert fb._passes[1]["observed_bytes"] <= budget
+    assert fb.repack(remaining_tables=132, current_k=23) is None
 
 
 def test_resize_never_coarsens(monkeypatch):
-    """A LOW measured rate (over-chunked run) must not re-chunk
-    coarser: the worst case of staying fine is the bounded ~3x wall
-    loss, the worst case of coarsening on a lucky pass is the disk
-    wall."""
-    budget = 256 * MB
+    """A LOW measured rate must not pack coarser: staying fine costs
+    pass barriers, coarsening on a lucky pass meets the disk wall."""
     _fake_group_tracker(monkeypatch, [0, 70 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=4000 * MB, n_tables=32,
-        disk_budget_bytes=budget, job_group="g",
-    )
-    fb.after_pass(4)  # 17.5 MB/table: next 4-table pass fits easily
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        assert fb.resize(remaining_tables=28, current_k=4) is None
+    fb = _feedback(256 * MB)
+    fb.after_pass(4)  # 17.5 MB/table: the next 4-table pass fits
+    assert fb.repack(remaining_tables=28, current_k=4) is None
+    # even when the projection breaches, a K rule answer that is not
+    # strictly finer than the current K is declined
+    _fake_group_tracker(monkeypatch, [0, 300 * MB])
+    fb = _feedback(256 * MB)
+    fb.after_pass(1)
+    assert fb.repack(remaining_tables=28, current_k=1) is None
 
 
 def test_resize_ignores_floor_noise(monkeypatch):
-    """Passes below MP_SIZING_FEEDBACK_MIN_BYTES are fixed-floor
-    dominated (measured: ~0.9 MB floor on sf0.001 passes) — their
-    apparent per-table rate is not evidence and must not re-chunk."""
-    budget = 1 * MB
-    _fake_group_tracker(monkeypatch, [0, 2 * MB, 3 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=1 * MB, n_tables=32,
-        disk_budget_bytes=budget, job_group="g",
-    )
+    """A first pass below MP_SIZING_FEEDBACK_MIN_BYTES is dominated by
+    fixed per-pass floors (~0.9 MB on sf0.001 passes) — its apparent
+    per-table rate is not evidence and must not re-pack."""
+    _fake_group_tracker(monkeypatch, [0, 2 * MB])
+    fb = _feedback(1 * MB)
     fb.after_pass(1)
-    fb.after_pass(1)
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        # 2 MB/table vs a 1 MB budget LOOKS like it must re-chunk,
-        # but both passes sit under the 64 MiB feedback floor
-        assert fb.resize(remaining_tables=30, current_k=4) is None
+    # 2 MB/table vs a 1 MB budget LOOKS like it must re-pack
+    assert fb.repack(remaining_tables=30, current_k=4) is None
 
 
 def test_resize_inert_without_budget(monkeypatch):
-    """No consulted budget (explicit tables_per_pass, or a plain
-    observability run) -> the hook stays advisory-only."""
+    """No consulted budget (explicit tables_per_pass) -> the readings
+    are recorded, the plan never changes."""
     _fake_group_tracker(monkeypatch, [0, 500 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=100 * MB, n_tables=32, job_group="g",
-    )
+    fb = _feedback(None)
     fb.after_pass(2)
-    assert fb.resize(remaining_tables=30, current_k=8) is None
+    assert fb.repack(remaining_tables=30, current_k=8) is None
     fb.finish()
     assert sim.LAST_MP_SIZING_REPORT["adaptive"] is False
-    assert sim.LAST_MP_SIZING_REPORT["resizes"] == []
+    assert sim.LAST_MP_SIZING_REPORT["repack"] is None
 
 
 def test_resize_cannot_subdivide_single_table(monkeypatch):
-    """remaining_tables=1 cannot be split: resize declines even under
+    """remaining_tables=1 cannot be split: no re-pack even under
     measured drift (the K rule's n_tables=1 contract)."""
     _fake_group_tracker(monkeypatch, [0, 500 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=100 * MB, n_tables=32,
-        disk_budget_bytes=64 * MB, job_group="g",
-    )
+    fb = _feedback(64 * MB)
     fb.after_pass(2)
-    assert fb.resize(remaining_tables=1, current_k=2) is None
+    assert fb.repack(remaining_tables=1, current_k=2) is None
+
+
+def test_k_rule_byte_drift_guard():
+    """Single-pass only with MP_BYTE_DRIFT_GUARD headroom: estimates
+    inside [budget/2, budget] pack a minimal 2-pass plan; comfortable
+    fits stay single-pass; interior K is guard-independent."""
+    budget = 2 * 1024**3
+    assert sim.MP_BYTE_DRIFT_GUARD == 2.0
+    # the measured NC=256 failure: exact 1.59 GB "fit" 2 GiB, a
+    # single pass shuffled 2.26 GB (r10) -> minimal chunk
+    assert _mp_k_from_estimate(1_593_224_080, 160, budget) == 80
+    # the NC=1024 rung: exact 1.01 GB x 2.0 fits, single pass shuffled
+    # 1.96 GB (observed/exact 1.93, r12) — inside the budget
+    assert _mp_k_from_estimate(1_011_712_660, 160, budget) is None
+    assert _mp_k_from_estimate(13 * 1024**3, 160, 32 * 1024**3) is None
+    # interior pins: the measured r9 exact-count points
+    assert _mp_k_from_estimate(13_391_046_060, 160, budget) == 23
+    # n_tables=1 cannot chunk, even in the guard zone
+    assert _mp_k_from_estimate(budget, 1, budget) is None
+
+
+def test_measured_r10_boundaries_pin():
+    """Spark-free replays of measured decisions: the clustered x2
+    exact count (5.94 GB at 2 GiB) packs 3x54, and the x30 first
+    pass's measured 1.46 GB/table packs the remaining 155 tables to
+    exactly the K=23 the run executed (SCALE_LADDER_X30_AUTO_r10)."""
+    assert _mp_k_from_estimate(5_943_649_180, 160, 2 * 1024**3) == 54
+    assert _mp_k_from_estimate(
+        1_456_943_750 * 155 + 1, 155, 32 * 1024**3
+    ) == 23
 
 
 # ---------------------------------------------------------------------------
-# 2. job-group scoping — concurrency-safe readings (r9 verdict #4)
+# 2. job-group scoping — concurrency-safe readings
 # ---------------------------------------------------------------------------
 
 
 def test_group_scoped_hook_ignores_foreign_shuffle(monkeypatch):
-    """The r9 app-wide reader would attribute a concurrent job's
-    shuffle to the pass and warn/re-size on garbage. With a job
-    group, the hook must read ONLY the group total: fake an app-wide
-    total that explodes while the group total stays calm — no
-    warning, no resize, group numbers in the report."""
-    # app-wide total contaminated by a concurrent job: must never be
-    # consulted when a group is given
-    monkeypatch.setattr(
-        sim,
-        "_observed_shuffle_write_bytes",
-        lambda sc: pytest.fail(
-            "group-scoped hook consulted the app-wide reader"
-        ),
-    )
-    _fake_group_tracker(monkeypatch, [0, 100 * MB, 200 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=400 * MB, n_tables=8,
-        disk_budget_bytes=110 * MB, job_group="run-1",
-    )
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        fb.after_pass(4)
-        assert fb.resize(remaining_tables=4, current_k=4) is None
-        fb.after_pass(4)
+    """The hook reads ONLY its own group's stages (the fake fails on
+    any other group): a concurrent job's shuffle never reaches a pass
+    delta, so it cannot force a re-pack."""
+    _fake_group_tracker(monkeypatch, [0, 100 * MB, 200 * MB], group="run-1")
+    fb = _feedback(110 * MB, n_tables=8, group="run-1")
+    fb.after_pass(4)
+    assert fb.repack(remaining_tables=4, current_k=4) is None
+    fb.after_pass(4)
     fb.finish()
     rep = sim.LAST_MP_SIZING_REPORT
-    assert rep["job_group_scoped"] is True
+    assert rep["job_group"] == "run-1"
     assert rep["observed_total_bytes"] == 200 * MB
-    assert rep["warned"] is False
 
 
 def test_group_shuffle_bytes_excludes_foreign_jobs(spark):
     """Real-Spark pin of the scoping claim: shuffle run under group G
     is counted; a foreign job's shuffle (no group) must not move G's
-    total."""
+    total, while the app-wide view sees it."""
     sc = spark.sparkContext
+
+    def total(group=None):
+        stages = sim._stage_shuffle_write_bytes(sc, group)
+        assert stages is not None
+        return sum(stages.values())
+
     group = "test-scope-group-xyz"
     prev = sc.getLocalProperty("spark.jobGroup.id")
     sc.setLocalProperty("spark.jobGroup.id", group)
@@ -313,269 +215,24 @@ def test_group_shuffle_bytes_excludes_foreign_jobs(spark):
         ).groupBy("k").count().collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
-    mine = sim._group_shuffle_write_bytes(sc, group)
-    assert mine is not None and mine > 0
-    # foreign shuffle, different (absent) group
+    mine = total(group)
+    assert mine > 0
+    before = total()
     spark.range(300_000).withColumn(
         "k", F.col("id") % 5
     ).groupBy("k").count().collect()
-    assert sim._group_shuffle_write_bytes(sc, group) == mine
-    appwide = sim._observed_shuffle_write_bytes(sc)
-    assert appwide is not None and appwide > mine
-
-
-# ---------------------------------------------------------------------------
-# 3. resolution: adaptive + pilot fields (one code path with the
-#    operator — mp_mode_report shows what the run will do)
-# ---------------------------------------------------------------------------
-
-
-def test_resolution_pilot_on_skew_routed_model_sizing(emb):
-    """skew_factor routes 'auto' to the model path; if that chunks,
-    the estimate is UNPROVEN (the worst-case bound was never checked
-    against the budget) — the plan must lead with the 1/8 calibration
-    pilot."""
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=8 * MB, skew_factor=2.0,
-    )
-    assert rep["regime"] == "chunked-shuffle"
-    assert rep["est_source"] == "model"
-    assert rep["adaptive"] is True
-    k = rep["tables_per_pass"]
-    assert rep["pilot_tables"] == max(1, k // sim.MP_PILOT_DIVISOR)
-    assert rep["pilot_tables"] < k
-    # pass count includes the pilot
-    rest = 160 - rep["pilot_tables"]
-    assert rep["n_passes"] == -(-rest // k) + 1
-
-
-def test_resolution_pilot_on_data_sizing_too(emb, monkeypatch):
-    """Data-sized chunked runs pilot as well (r10 NC sweep): the
-    exact count nails candidate ROWS, but the ~70 B/candidate byte
-    constant drifted 1.56x at NC=64 and the un-piloted count-sized
-    first pass (80 tables) shuffled 2.58 GB against a 2 GiB budget
-    before the re-size could act."""
-    monkeypatch.setattr(
-        sim, "_mp_exact_candidate_count", lambda *a, **kw: 10_000_000
-    )
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=16 * MB,
-    )
-    assert rep["regime"] == "chunked-shuffle"
-    assert rep["est_source"] == "data"
-    assert rep["adaptive"] is True
-    k = rep["tables_per_pass"]
-    assert rep["pilot_tables"] == max(1, k // sim.MP_PILOT_DIVISOR)
-
-
-def test_k_rule_byte_drift_guard():
-    """The single-pass boundary carries the measured byte-drift
-    guard (r10): estimates inside [budget/1.7, budget] chunk
-    minimally (2 passes) instead of risking the measured <=1.64x
-    breach; comfortable fits stay single-pass; interior K is
-    unchanged (the r9 measured-best points)."""
-    budget = 2 * 1024**3
-    # the measured NC=256 failure: exact est 1.59 GB "fit" the 2 GiB
-    # budget, single-pass was chosen, true stream 2.26 GB violated it
-    assert _mp_k_from_estimate(1_593_224_080, 160, budget) == 80
-    # comfortable fit (x10 model est ~13 GB vs 32 GiB) stays
-    # single-pass
-    assert _mp_k_from_estimate(
-        13 * 1024**3, 160, 32 * 1024**3
-    ) is None
-    # interior pins unchanged: the r9 measured-best combiner points
-    assert _mp_k_from_estimate(
-        118_781_078_430, 160, 32 * 1024**3
-    ) == 40
-    assert _mp_k_from_estimate(13_391_046_060, 160, budget) == 23
-    # n_tables=1 still cannot chunk, even in the guard zone
-    assert _mp_k_from_estimate(budget, 1, budget) is None
-
-
-def test_resolution_not_adaptive_with_explicit_k(emb):
-    """An explicit tables_per_pass never consulted the budget: the
-    run must not re-size itself against a budget the caller didn't
-    give the sizer."""
-    with pytest.warns(RuntimeWarning, match="not.*consulted|consulted"):
-        rep = mp_mode_report(
-            emb, "vec_id", "embedding", broadcast_corpus=False,
-            tables_per_pass=3, eager_passes=True,
-            disk_budget_bytes=8 * MB,
-        )
-    assert rep["adaptive"] is False
-    assert rep["pilot_tables"] is None
-
-
-# ---------------------------------------------------------------------------
-# 4. executor end-to-end: the loop actually re-chunks, output exact
-# ---------------------------------------------------------------------------
-
-
-def test_adaptive_run_rechunks_and_stays_exact(emb, monkeypatch):
-    """Drive the REAL chunked executor through a pilot + mid-run
-    re-size with deterministic faked readings (10 MB/table against an
-    8 MB budget) and assert (a) the pass ledger shows pilot -> resize
-    -> finer passes, (b) the output stays bit-identical to the
-    broadcast reference — re-chunking must never change WHAT is
-    computed, only how it is sliced."""
-    args = dict(pool=252, n_bits=12, n_tables=8, probe_radius=1,
-                hamming_max=112)
-    want = {
-        tuple(r)
-        for r in ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, **args
-        ).collect()
-    }
-    # sf0.001 model est at 8 tables ~0.85 MB x skew 2 = ~1.7 MB vs a
-    # 512 KB budget -> 4 passes -> K=2, pilot=1. Faked group
-    # readings: 10 MB per table processed (cumulative), floor
-    # lowered so tiny real passes don't mask the fake.
-    budget = 512 * 1024
-    plan = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=budget, skew_factor=2.0, n_tables=8,
-    )
-    assert plan["regime"] == "chunked-shuffle"
-    assert plan["pilot_tables"] == 1
-    assert plan["tables_per_pass"] == 2
-    monkeypatch.setattr(sim, "MP_SIZING_FEEDBACK_MIN_BYTES", 1 * MB)
-    state = {"tables": 0}
-    orig_filter = {}
-
-    def fake_read(sc, group, exclude=frozenset()):
-        return state["tables"] * 10 * MB
-
-    monkeypatch.setattr(sim, "_group_shuffle_write_bytes", fake_read)
-    # count tables per pass by intercepting the feedback barrier
-    orig_after = sim._MpSizingFeedback.after_pass
-
-    def counting_after(self, tables_in_pass):
-        state["tables"] += tables_in_pass
-        return orig_after(self, tables_in_pass)
-
-    monkeypatch.setattr(sim._MpSizingFeedback, "after_pass", counting_after)
-    del orig_filter
-    sim.LAST_MP_SIZING_REPORT = None
-    with pytest.warns(RuntimeWarning, match="adaptive re-sizing"):
-        got = {
-            tuple(r)
-            for r in ann_lsh_multiprobe_pairs(
-                emb, "vec_id", "embedding", THRESHOLD, **args,
-                broadcast_corpus=False, disk_budget_bytes=budget,
-                skew_factor=2.0,
-            ).collect()
-        }
-    assert got == want and len(got) > 0
-    rep = sim.LAST_MP_SIZING_REPORT
-    assert rep["adaptive"] is True
-    assert rep["pilot_tables"] == 1
-    # pilot measured 10 MB/table -> next 2-table pass projects 20 MB
-    # > 512 KB -> re-chunk remaining 7 tables to K=1
-    assert rep["resizes"][0]["after_pass"] == 1
-    assert rep["resizes"][0]["old_tables_per_pass"] == 2
-    assert rep["resizes"][0]["new_tables_per_pass"] == 1
-    assert [p["tables"] for p in rep["passes"]] == [1] * 8
-    assert rep["job_group_scoped"] is True
-
-
-# ---------------------------------------------------------------------------
-# 5. r9 advice items
-# ---------------------------------------------------------------------------
-
-
-def test_worst_case_bound_no_floor_collapse():
-    """The old bound re-expanded the floored model estimate and read
-    0 (any budget 'provably safe') whenever T*M*N^2 < 2^n_bits; the
-    r10 unfloored form stays a true upper bound at every size."""
-    # one row: T*M*N^2 = 160*13 = 2080 < 4096 = 2^12
-    tiny = _mp_model_worst_case_bytes(
-        input_bytes=1, dim=64, n_tables=160, n_bits=12, probe_radius=1
-    )
-    assert tiny == -(-(160 * 13) // 2) * sim._MP_CANDIDATE_ROW_BYTES
-    assert tiny > 0
-
-
-def test_worst_case_bound_dominates_model_estimate():
-    """worst >= model_est << (n_bits - 1) for any inputs — the
-    unfloored product can only raise the bound."""
-    for input_bytes in (1, 10_000, 5 * MB, 500 * MB):
-        model = sim._mp_candidate_stream_bytes(
-            input_bytes, 64, 160, 12, 1
-        )
-        worst = _mp_model_worst_case_bytes(input_bytes, 64, 160, 12, 1)
-        assert worst >= model << 11
-
-
-def test_conf_skew_factor_warns_under_auto(emb):
-    """An r8-era cluster conf (spark.cndp.mp.skewFactor) silently
-    routed 'auto' off the skew-safe count path; r10 says so out loud
-    (an explicit arg stays silent — the caller just asserted it)."""
-    spark = emb.sparkSession
-    spark.conf.set("spark.cndp.mp.skewFactor", "3.0")
-    try:
-        with pytest.warns(RuntimeWarning, match="skewFactor.*session conf"):
-            rep = mp_mode_report(
-                emb, "vec_id", "embedding", broadcast_corpus=False,
-                disk_budget_bytes=16 * MB,
-            )
-        assert rep["sizing_effective"] == "model"
-        assert rep["skew_factor"] == 3.0
-    finally:
-        spark.conf.unset("spark.cndp.mp.skewFactor")
-    # explicit argument: no conf warning
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        rep = mp_mode_report(
-            emb, "vec_id", "embedding", broadcast_corpus=False,
-            disk_budget_bytes=16 * MB, skew_factor=3.0,
-        )
-    assert rep["skew_factor"] == 3.0
-
-
-def test_measured_r10_boundaries_pin():
-    """Spark-free pins of the r10 measured boundary decisions
-    (SCALE_LADDER_DRIFT_r10.json / SCALE_LADDER_X30_AUTO_r10.json):
-
-    - the skew_factor=2 opt-out at clustered x2 keeps the hedged
-      estimate (1.06 GB) under the guard line (x1.7 = 1.80 GB <=
-      2 GiB), so the run single-passes — the measured residual
-      (peak 3.34 GB, byte-identical to the r9 violation);
-    - the x30 pilot's measured 1.46 GB/table re-chunks the remaining
-      155 tables to exactly the K=23 the run executed."""
-    budget = 2 * 1024**3
-    hedged_x2 = 528_811_220 * 2
-    assert hedged_x2 * sim.MP_BYTE_DRIFT_GUARD <= budget
-    assert _mp_k_from_estimate(hedged_x2, 160, budget) is None
-    # the zero-knob default at the same rung sized from the exact
-    # count (5.94 GB) and held: interior K unchanged by the guard
-    assert _mp_k_from_estimate(5_943_649_180, 160, budget) == 54
-    # the x30 mid-run re-size, replayed from the recorded pilot rate
-    pilot_rate = 1_456_943_750
-    assert _mp_k_from_estimate(
-        pilot_rate * 155 + 1, 155, 32 * 1024**3
-    ) == 23
-
-
-# ---------------------------------------------------------------------------
-# 4. r11 additions: skipped-stage exclusion, per-run report slots,
-#    and the followable 1-table guard-zone advice (r10 advice items
-#    + r10 verdict #4)
-# ---------------------------------------------------------------------------
+    assert total(group) == mine
+    assert total() > before
 
 
 def test_group_reading_excludes_snapshotted_stages(spark):
-    """r10 advice: a stage id listed by a group job but already
-    present in the status store at arm time was (at least partly)
-    written BEFORE the group existed — it must be excludable from the
-    group sum. Sequentially, Spark re-creates skipped stages under
-    fresh ids with zero recorded bytes (verified here too), so the
-    inflation shape needs a still-registered shared stage id
-    (concurrent jobs); the exclusion handles both, and this test pins
-    the mechanism on real py4j objects: a pre-group snapshot never
-    contains the group's own new stages, and excluding a group
-    stage's id verifiably drops its bytes from the sum."""
+    """A stage id listed by a group job but already present in the
+    status store at arm time was (at least partly) written BEFORE the
+    group existed — the hook subtracts the arm-time snapshot.
+    Sequentially, Spark re-creates skipped stages under fresh ids with
+    zero recorded bytes, so this pins the mechanism on real py4j
+    objects: a pre-group snapshot never contains the group's own new
+    stages, and excluding a group stage's id drops its bytes."""
     from operator import add
 
     sc = spark.sparkContext
@@ -585,16 +242,13 @@ def test_group_reading_excludes_snapshotted_stages(spark):
         .reduceByKey(add)
     )
     assert rdd.count() == 7  # pre-group: materializes the shuffle
-    snapshot = sim._status_store_stage_ids(sc)
+    snapshot = frozenset(sim._stage_shuffle_write_bytes(sc) or ())
     assert snapshot, "status store must be reachable in this test"
     group = "skip-exclusion-test-group"
     prev = sc.getLocalProperty("spark.jobGroup.id")
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        # reuses the pre-group shuffle: its (re-created) skipped stage
-        # must carry no bytes into the group sum either way
-        assert rdd.count() == 7
-        # a REAL group shuffle, so the sum has something to exclude
+        assert rdd.count() == 7  # reuses the pre-group shuffle
         assert (
             sc.parallelize(range(100_000), 8)
             .map(lambda x: (x % 5, 1))
@@ -604,41 +258,138 @@ def test_group_reading_excludes_snapshotted_stages(spark):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
-    raw = sim._group_shuffle_write_bytes(sc, group)
-    excl = sim._group_shuffle_write_bytes(sc, group, snapshot)
-    assert raw is not None and raw > 0
-    # the arm-time snapshot contains no group stage: sum unchanged
-    assert excl == raw
-    # excluding the group's own stages empties the sum — the
-    # exclusion path verifiably reaches the byte accounting
-    after = sim._status_store_stage_ids(sc)
-    assert sim._group_shuffle_write_bytes(sc, group, after) == 0
+    stages = sim._stage_shuffle_write_bytes(sc, group)
+    raw = sum(stages.values())
+    excl = sum(b for s, b in stages.items() if s not in snapshot)
+    assert raw > 0
+    assert excl == raw  # the snapshot holds no group stage
+    assert not set(stages) & snapshot
 
 
 def test_feedback_init_snapshots_and_threads_the_exclusion(monkeypatch):
-    """The hook must snapshot the store at arm time and pass that
-    exact set to every group read (Spark-free pin of the wiring)."""
-    sentinel = frozenset({3, 7})
-    seen = []
-    monkeypatch.setattr(sim, "_status_store_stage_ids", lambda sc: sentinel)
+    """The hook snapshots the store at arm time and drops those stage
+    ids from every group read (Spark-free pin of the wiring)."""
+    calls = []
 
-    def fake_read(sc, group, exclude=frozenset()):
-        seen.append(exclude)
-        return len(seen) * MB
+    def fake(sc, g=None):
+        calls.append(g)
+        if g is None:
+            return {3: 5 * MB, 7: 5 * MB}
+        return {3: 5 * MB, 7: 5 * MB, 9: len(calls) * MB}
 
-    monkeypatch.setattr(sim, "_group_shuffle_write_bytes", fake_read)
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=MB, n_tables=4, job_group="g"
+    monkeypatch.setattr(sim, "_stage_shuffle_write_bytes", fake)
+    fb = _feedback(n_tables=4)
+    fb.after_pass(2)
+    fb.after_pass(2)
+    assert calls == [None, "g", "g", "g"]
+    assert [p["observed_bytes"] for p in fb._passes] == [MB, MB]
+
+
+# ---------------------------------------------------------------------------
+# 3. resolution + executor: pilot, explicit K, re-pack end to end
+# ---------------------------------------------------------------------------
+
+
+def test_resolution_pilot_on_data_sizing_too(emb, monkeypatch):
+    """A budget-sized chunked plan leads with the 1/8 first pass (the
+    r12 no-pilot control breached its first pass 5.43 GB vs 4 GiB),
+    and the pass count includes it."""
+    monkeypatch.setattr(
+        sim, "_mp_exact_candidate_count", lambda *a, **kw: 10_000_000
     )
-    fb.after_pass(2)
-    fb.after_pass(2)
-    assert seen == [sentinel, sentinel, sentinel]
+    rep = mp_mode_report(
+        emb, "vec_id", "embedding", broadcast_corpus=False,
+        disk_budget_bytes=16 * MB,
+    )
+    assert rep["regime"] == "chunked-shuffle"
+    assert rep["adaptive"] is True
+    k = rep["tables_per_pass"]
+    assert rep["pilot_tables"] == max(1, k // sim.MP_PILOT_DIVISOR)
+    assert rep["pilot_tables"] < k
+    assert rep["n_passes"] == -(-(160 - rep["pilot_tables"]) // k) + 1
+
+
+def test_resolution_not_adaptive_with_explicit_k(emb):
+    """An explicit tables_per_pass never consulted the budget: no
+    pilot, no re-pack against a budget the caller didn't give."""
+    with pytest.warns(RuntimeWarning, match="not consulted"):
+        rep = mp_mode_report(
+            emb, "vec_id", "embedding", broadcast_corpus=False,
+            tables_per_pass=3, disk_budget_bytes=8 * MB,
+        )
+    assert rep["adaptive"] is False
+    assert rep["pilot_tables"] is None
+    assert rep["n_passes"] == 54
+
+
+def test_adaptive_run_rechunks_and_stays_exact(emb, monkeypatch):
+    """Drive the REAL chunked executor through a pilot + re-pack with
+    deterministic faked readings (10 MB/table against a 512 KB budget)
+    and assert (a) the pass ledger shows pilot -> re-pack -> finer
+    passes, (b) the output stays bit-identical to the broadcast
+    reference."""
+    args = dict(pool=252, n_bits=12, n_tables=8, probe_radius=1,
+                hamming_max=112)
+    want = {
+        tuple(r)
+        for r in ann_lsh_multiprobe_pairs(
+            emb, "vec_id", "embedding", THRESHOLD, **args
+        ).collect()
+    }
+    # a faked count of ~1.7 MB vs a 512 KB budget -> 4 passes -> K=2,
+    # pilot=1
+    budget = 512 * 1024
+    monkeypatch.setattr(
+        sim, "_mp_exact_candidate_count", lambda *a, **kw: 24_000
+    )
+    plan = mp_mode_report(
+        emb, "vec_id", "embedding", broadcast_corpus=False,
+        disk_budget_bytes=budget, n_tables=8,
+    )
+    assert plan["regime"] == "chunked-shuffle"
+    assert plan["pilot_tables"] == 1
+    assert plan["tables_per_pass"] == 2
+    monkeypatch.setattr(sim, "MP_SIZING_FEEDBACK_MIN_BYTES", 1 * MB)
+    state = {"tables": 0}
+
+    def fake_read(sc, group=None):
+        return {} if group is None else {0: state["tables"] * 10 * MB}
+
+    monkeypatch.setattr(sim, "_stage_shuffle_write_bytes", fake_read)
+    orig_after = sim._MpSizingFeedback.after_pass
+
+    def counting_after(self, tables_in_pass):
+        state["tables"] += tables_in_pass
+        return orig_after(self, tables_in_pass)
+
+    monkeypatch.setattr(sim._MpSizingFeedback, "after_pass", counting_after)
+    sim.LAST_MP_SIZING_REPORT = None
+    got = {
+        tuple(r)
+        for r in ann_lsh_multiprobe_pairs(
+            emb, "vec_id", "embedding", THRESHOLD, **args,
+            broadcast_corpus=False, disk_budget_bytes=budget,
+        ).collect()
+    }
+    assert got == want and len(got) > 0
+    rep = sim.LAST_MP_SIZING_REPORT
+    assert rep["adaptive"] is True
+    assert rep["pilot_tables"] == 1
+    # pilot measured 10 MB/table -> next 2-table pass projects 20 MB
+    # > 512 KB -> re-pack the remaining 7 tables to K=1
+    assert rep["repack"]["old_tables_per_pass"] == 2
+    assert rep["repack"]["new_tables_per_pass"] == 1
+    assert [p["tables"] for p in rep["passes"]] == [1] * 8
+
+
+# ---------------------------------------------------------------------------
+# 4. per-run report slots
+# ---------------------------------------------------------------------------
 
 
 def test_concurrent_runs_keep_distinct_reports(spark, emb):
-    """r10 verdict #4 done-criterion: two eager chunked runs racing
-    in one SparkSession each keep their own sizing report, keyed by
-    the CALLER's job group (the handle a caller can actually know);
+    """Two eager chunked runs racing in one SparkSession each keep
+    their own report, keyed by the CALLER's job group;
     LAST_MP_SIZING_REPORT stays as the last-run alias."""
     import threading
 
@@ -654,7 +405,7 @@ def test_concurrent_runs_keep_distinct_reports(spark, emb):
                 ann_lsh_multiprobe_pairs(
                     emb, "vec_id", "embedding", THRESHOLD,
                     n_tables=n_tables, broadcast_corpus=False,
-                    tables_per_pass=3, eager_passes=True,
+                    tables_per_pass=3,
                 ).count()
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", prev)
@@ -671,317 +422,35 @@ def test_concurrent_runs_keep_distinct_reports(spark, emb):
     assert rep_b["n_tables"] == 6 and rep_b["caller_group"] == "rpt-run-b"
     assert [p["tables"] for p in rep_a["passes"]] == [3, 3, 2]
     assert [p["tables"] for p in rep_b["passes"]] == [3, 3]
-    # the alias points at ONE of the runs (last writer), both survive
     assert sim.LAST_MP_SIZING_REPORT in (rep_a, rep_b)
+
+
+def _run_report(monkeypatch, tag):
+    _fake_group_tracker(monkeypatch, [0, MB], group=f"jg-{tag}")
+    fb = _feedback(n_tables=2, group=f"jg-{tag}", caller_group=tag)
+    fb.after_pass(2)
+    fb.finish()
 
 
 def test_reports_dict_is_bounded(monkeypatch):
     sim.MP_SIZING_REPORTS.clear()
-    _fake_group_tracker(
-        monkeypatch,
-        [b for i in range(sim.MP_SIZING_REPORTS_MAX + 5) for b in (0, MB)],
-    )
     for i in range(sim.MP_SIZING_REPORTS_MAX + 5):
-        fb = _MpSizingFeedback(
-            sc=None, est_stream_bytes=MB, n_tables=2,
-            job_group=f"g{i}", caller_group=f"c{i}",
-        )
-        fb.after_pass(2)
-        fb.finish()
+        _run_report(monkeypatch, f"c{i}")
     assert len(sim.MP_SIZING_REPORTS) == sim.MP_SIZING_REPORTS_MAX
     assert "c0" not in sim.MP_SIZING_REPORTS  # oldest evicted
     assert f"c{sim.MP_SIZING_REPORTS_MAX + 4}" in sim.MP_SIZING_REPORTS
 
 
-def test_guard_zone_single_table_advice_is_followable(emb):
-    """r10 advice: an n_tables=1 estimate in the byte-drift guard
-    zone (budget/1.7 < est <= budget) resolves single-pass, and the
-    eager_passes warning must give advice a 1-table caller can follow
-    (increase n_tables) — never 'pass tables_per_pass=K'."""
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("ignore")
-        probe = mp_mode_report(
-            emb, "vec_id", "embedding", n_tables=1,
-            broadcast_corpus=False, sizing="model",
-            disk_budget_bytes=1 << 60,
-        )
-    est = probe["est_stream_bytes"]
-    assert est and est > 0
-    budget = est  # guard zone: est <= budget < est * 1.7
-    assert est * sim.MP_BYTE_DRIFT_GUARD > budget
-    with pytest.warns(RuntimeWarning, match="Increase n_tables") as rec:
-        mp_mode_report(
-            emb, "vec_id", "embedding", n_tables=1,
-            broadcast_corpus=False, sizing="model",
-            eager_passes=True, disk_budget_bytes=budget,
-        )
-    msg = str(
-        [w for w in rec if "auto-sizer" in str(w.message)][0].message
-    )
-    assert "Pass tables_per_pass" not in msg
-
-
-# ---------------------------------------------------------------------------
-# 5. r11: the two-term byte model + guard-zone screen sample
-#    (r10 verdict #3)
-# ---------------------------------------------------------------------------
-
-
-def test_two_term_bytes_model():
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        _MP_CANDIDATE_ROW_BYTES,
-        _MP_SURVIVOR_ROW_BYTES,
-        _mp_two_term_bytes,
-    )
-
-    # frac=0 reduces to the flat model; monotone >= it always
-    assert _mp_two_term_bytes(1000, 0.0) == 1000 * _MP_CANDIDATE_ROW_BYTES
-    assert _mp_two_term_bytes(1000, 1.0) == 1000 * (
-        _MP_CANDIDATE_ROW_BYTES + _MP_SURVIVOR_ROW_BYTES
-    )
-    # the measured r10 drift point: a ~4.4% pass fraction blends to
-    # ~115 B/candidate = the 1.64x the NC=1024 rung observed
-    assert _mp_two_term_bytes(10_000, 0.044) == pytest.approx(
-        10_000 * 115, rel=0.01
-    )
-    with pytest.raises(ValueError):
-        _mp_two_term_bytes(10, 1.5)
-    # r12: a MEASURED survivor-row cost replaces the static worst
-    # case, clamped to [base, static]: compressible vectors shrink
-    # the estimate, but never below the flat model and never above
-    # the incompressible ceiling
-    assert _mp_two_term_bytes(1000, 1.0, 300) == 1000 * (
-        _MP_CANDIDATE_ROW_BYTES + 300
-    )
-    assert _mp_two_term_bytes(1000, 1.0, 5000) == _mp_two_term_bytes(
-        1000, 1.0
-    )
-    assert _mp_two_term_bytes(1000, 1.0, 3) == 1000 * (
-        2 * _MP_CANDIDATE_ROW_BYTES
-    )
-    assert _mp_two_term_bytes(1000, 0.0, 300) == _mp_two_term_bytes(
-        1000, 0.0
-    )
-
-
-def test_sampled_vector_bytes_reads_real_compression(spark):
-    """r11 verdict #4: the survivor-byte instrument must read REAL
-    lz4 shuffle compression — near-identical (clustered) vectors
-    measure far below the random-vector cost, which sits near the
-    512 B raw array size."""
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        _mp_sampled_vector_row_bytes,
-    )
-
-    n = 2000
-    const = spark.range(n).select(
-        F.col("id"),
-        F.array_repeat(F.lit(0.123456789), 64).alias("v"),
-    )
-    rnd = spark.range(n).select(
-        F.col("id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(64)),
-            lambda j: F.rand(42) * F.col("id").cast("double") + j,
-        ).alias("v"),
-    )
-    vb_const = _mp_sampled_vector_row_bytes(const)
-    vb_rnd = _mp_sampled_vector_row_bytes(rnd)
-    assert vb_const is not None and vb_rnd is not None
-    assert vb_rnd > 256  # random doubles barely compress
-    assert vb_const < 0.5 * vb_rnd  # identical vectors compress hard
-
-
-def test_sampled_rider_bytes_reads_adjacency_compression(spark):
-    """r12: the rider instrument must capture what per-id vector
-    bytes cannot — the attach join streams its output in id_a order,
-    so a high-multiplicity id_a lays verbatim ea copies consecutively
-    into each partition segment and lz4 collapses them (the NC=256
-    mechanism: ~163 B/survivor measured against the 876 B 2-vector
-    model). Pin the discrimination: the same random-vector corpus
-    measured through high-multiplicity pairs reads FAR below
-    multiplicity-1 pairs, and both sit below the ~1.1 KB raw row."""
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        _mp_sampled_rider_row_bytes,
-    )
-
-    n = 500
-    samp = spark.range(n).select(
-        F.col("id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(64)),
-            lambda j: F.rand(7) * F.col("id").cast("double") + j,
-        ).alias("v"),
-    )
-    # multiplicity 40: each id_a pairs with its next 40 ids — the
-    # attach join emits 40 verbatim copies of ea back-to-back
-    dense = samp.select(F.col("id").alias("id_a")).select(
-        "id_a",
-        F.explode(F.sequence(F.lit(1), F.lit(40))).alias("k"),
-    ).select(
-        "id_a", (F.pmod(F.col("id_a") + F.col("k"), F.lit(n))).alias("id_b")
-    )
-    # multiplicity 1: every id_a appears once — no adjacency to collapse
-    sparse = samp.select(F.col("id").alias("id_a")).select(
-        "id_a", F.pmod(F.col("id_a") + 1, F.lit(n)).alias("id_b")
-    )
-    rb_dense = _mp_sampled_rider_row_bytes(dense, samp)
-    rb_sparse = _mp_sampled_rider_row_bytes(sparse, samp)
-    assert rb_dense is not None and rb_sparse is not None
-    assert rb_sparse > 256  # one vector rides, raw-ish
-    assert rb_dense < 0.6 * rb_sparse  # verbatim adjacency collapses
-    # thin sample declines (below MP_VECTOR_BYTES_SAMPLE_MIN rows)
-    thin = sparse.limit(8)
-    assert _mp_sampled_rider_row_bytes(thin, samp) is None
-    # upstream subtraction (review r12): a measured upstream total
-    # strictly lowers the net reading; an upstream at or above the
-    # job's own total declines rather than reporting junk
-    rb_net = _mp_sampled_rider_row_bytes(sparse, samp, 50_000)
-    assert rb_net is not None and rb_net < rb_sparse
-    assert rb_net == pytest.approx(rb_sparse - 50_000 / 500, rel=0.02)
-    assert _mp_sampled_rider_row_bytes(sparse, samp, 1 << 40) is None
-
-
-def test_k_rule_guard_param():
-    """guard=1.0 removes the boundary zone entirely; the narrowed
-    residual guard shrinks it without touching interior K."""
-    budget = 1000
-    # est in the old zone (budget/1.7, budget]: static guard chunks,
-    # guard=1.0 single-passes, the 1.15 residual still chunks at the
-    # very edge
-    est = 900
-    assert _mp_k_from_estimate(est, 16, budget) == 8  # 1.7x guard
-    assert _mp_k_from_estimate(est, 16, budget, guard=1.0) is None
-    assert _mp_k_from_estimate(est, 16, budget, guard=1.15) == 8
-    # est below budget/1.15: every guard single-passes
-    assert _mp_k_from_estimate(800, 16, budget, guard=1.15) is None
-    # interior est: guard-independent
-    for g in (1.0, 1.15, sim.MP_BYTE_DRIFT_GUARD):
-        assert _mp_k_from_estimate(3500, 16, budget, guard=g) == 4
-
-
-def test_screen_sample_estimator_bounds(spark, emb):
-    """Direct estimator pins: hamming_max >= pool passes every
-    candidate (frac 1.0); hamming_max < 0 passes none (frac 0.0);
-    and the sampled count clears the evidence floor on this corpus."""
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        _as_double,
-        _mp_sampled_survivor_frac,
-    )
-
-    e = emb.select(
-        F.col("vec_id").alias("id"),
-        _as_double("embedding").alias("v"),
-    )
-    n_cand = 200_000  # order-of-magnitude is enough to derive q
-    hi = _mp_sampled_survivor_frac(e, 252, 12, 16, 1, 252, 64, n_cand)
-    lo = _mp_sampled_survivor_frac(e, 252, 12, 16, 1, -1, 64, n_cand)
-    assert hi is not None and lo is not None
-    frac_hi, n_hi, vb_hi, ppi_hi, rb_hi = hi
-    frac_lo, n_lo, vb_lo, ppi_lo, rb_lo = lo
-    assert frac_hi == 1.0 and frac_lo == 0.0
-    assert n_hi == n_lo >= sim.MP_SCREEN_SAMPLE_MIN
-    # random float64 vectors barely compress: the measured per-row
-    # shuffle bytes sit near the 512 B raw array size
-    assert vb_hi is not None and vb_hi > 256
-    # amortization census: with every candidate surviving, each id
-    # participates in >= 1 pair; with none surviving there is no census
-    assert ppi_hi is not None and ppi_hi >= 1.0
-    assert ppi_lo is None
-    # rider instrument: with survivors it reads a positive marginal
-    # cost bounded by the raw pair row (<= two uncompressed vectors
-    # plus overhead); with no survivor there is nothing to measure
-    assert rb_hi is not None and 0 < rb_hi < 1300
-    assert rb_lo is None
-
-
-def test_guard_zone_screen_sample_routes_the_decision(emb):
-    """In the byte-drift guard zone the resolution must measure, not
-    hedge: a measured frac=0 single-passes where the static 1.7x
-    forced a chunk; a measured frac=1 sizes the chunk from the
-    two-term estimate. Both decisions carry the evidence in the
-    report."""
-    common = dict(
-        pool=252, n_bits=12, n_tables=16, probe_radius=1,
-        broadcast_corpus=False,
-    )
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("ignore")
-        probe = mp_mode_report(
-            emb, "vec_id", "embedding", sizing="data",
-            disk_budget_bytes=1 << 60, **common,
-        )
-    est = probe["est_exact_bytes"]
-    assert est and probe["est_source"] == "data"
-    budget = int(est * 1.3)  # zone: est <= budget < est * 1.7
-    # hamming-blind resolution: static guard -> minimal chunk
-    # (sizing='data' everywhere below so the auto model-floor cannot
-    # move the estimate out of the zone on this uniform corpus)
-    blind = mp_mode_report(
-        emb, "vec_id", "embedding", sizing="data",
-        disk_budget_bytes=budget, **common,
-    )
-    assert blind["screen_sample"] is None
-    assert blind["single_pass_guard"] == sim.MP_BYTE_DRIFT_GUARD
-    assert blind["tables_per_pass"] == 8  # 2 minimal passes
-    # frac=0 evidence (nothing survives a -1 screen): single-pass
-    lo = mp_mode_report(
-        emb, "vec_id", "embedding", hamming_max=-1, sizing="data",
-        disk_budget_bytes=budget, **common,
-    )
-    assert lo["screen_sample"]["survivor_frac"] == 0.0
-    assert lo["est_source"] == "data+screen-sample"
-    assert lo["single_pass_guard"] == sim.MP_TWO_TERM_RESIDUAL_GUARD
-    assert lo["tables_per_pass"] is None
-    assert lo["est_stream_bytes"] == est
-    # frac=1 evidence (everything survives): two-term sized chunk
-    # from the MEASURED rider cost (r12 — no longer the 2-vector
-    # worst case, so the inflation is the measured rider over the
-    # 70 B base, not a fixed 15x), never coarser than the blind
-    # minimal chunk and with the evidence in the report
-    hi = mp_mode_report(
-        emb, "vec_id", "embedding", hamming_max=252, sizing="data",
-        disk_budget_bytes=budget, **common,
-    )
-    ss = hi["screen_sample"]
-    assert ss["survivor_frac"] == 1.0
-    assert ss["rider_row_bytes"] is not None and ss["rider_row_bytes"] > 0
-    # survivor_row_bytes is the CLAMPED charge the model used, so the
-    # estimate is reproducible from the reported fields
-    assert ss["survivor_row_bytes"] == min(
-        1024, max(70, int(ss["rider_row_bytes"]))
-    )
-    assert hi["single_pass_guard"] == sim.MP_TWO_TERM_RESIDUAL_GUARD
-    # every candidate survives, so the estimate grows by the clamped
-    # rider cost over the 70 B base — at least 2x the flat estimate
-    assert hi["est_stream_bytes"] >= est * 2
-    assert hi["tables_per_pass"] is not None
-    assert hi["tables_per_pass"] <= blind["tables_per_pass"]
-
-
 def test_reports_eviction_tracks_recency(monkeypatch):
-    """Review r11: overwriting an existing caller-group key must move
-    it to the fresh end — FIFO eviction drops the stalest report, not
-    a just-updated one that kept its old slot."""
+    """Overwriting an existing caller-group key moves it to the fresh
+    end — eviction drops the stalest report, not a just-updated one."""
     sim.MP_SIZING_REPORTS.clear()
     n = sim.MP_SIZING_REPORTS_MAX
-    _fake_group_tracker(
-        monkeypatch, [b for _ in range(n + 2) for b in (0, MB)]
-    )
-
-    def run(tag):
-        fb = _MpSizingFeedback(
-            sc=None, est_stream_bytes=MB, n_tables=2,
-            job_group=f"jg-{tag}", caller_group=tag,
-        )
-        fb.after_pass(2)
-        fb.finish()
-
-    run("etl")  # oldest slot
+    _run_report(monkeypatch, "etl")  # oldest slot
     for i in range(n - 1):  # fill to capacity
-        run(f"g{i}")
-    run("etl")  # refresh: must move to the fresh end
-    run("new")  # evicts ONE entry — must be g0, not etl
+        _run_report(monkeypatch, f"g{i}")
+    _run_report(monkeypatch, "etl")  # refresh: moves to the fresh end
+    _run_report(monkeypatch, "new")  # evicts ONE entry — g0, not etl
     assert "etl" in sim.MP_SIZING_REPORTS
     assert "g0" not in sim.MP_SIZING_REPORTS
     assert len(sim.MP_SIZING_REPORTS) == n

@@ -1,106 +1,51 @@
-"""Spark-free tests for the multiprobe chunked-pass auto-sizer
-(r7 verdict #1: the K ≈ candidate-stream bytes / disk-budget rule as
-code, not prose). The datapoints are the MEASURED r6/r7 ladder runs
-(SCALE.md §Round-6/7, SCALE_LADDER_CHUNKED_r07.json), with the input
-bytes taken from the actual fresh-warehouse parquet sizes:
-
-- fresh-x10, threshold 0.4 (20k vectors, 5,241,941 B of embeddings):
-  the single-pass shuffle tier COMPLETED (55.0 s) — the estimate must
-  fit the default budget and auto mode must stay single-pass.
-- fresh-x30 (60k vectors, 15,723,341 B): the single-pass form DIED
-  filling >70 GB of shuffle files; the measured-good chunking was 4
-  passes of 40 tables (621.4 s / 29.9 GB peak). The sizing rule with
-  the default 32 GiB budget must land on exactly that K.
-- fresh-x100 at the PROD preset (200k vectors, 52,408,749 B,
-  16 tables x 16 bits): the prod candidate stream is ~10^3x smaller
-  than t04's — single-pass must hold (measured: flat, 5.95 s).
+"""Spark-free tests for the multiprobe pass packer
+(``_mp_k_from_estimate``): the K = ceil(n_tables / ceil(bytes /
+budget)) rule that packs the table list into eager passes, fed the
+exact candidate count at sizing time and the first pass's measured
+bytes at re-pack time. The datapoints are measured exact counts
+(SCALE_LADDER_SKEW_r09.json, SCALE_LADDER_AUTO_DEFAULT_r09.json,
+SCALE_LADDER_PILOT_TAX_ONEPATH.json).
 """
 
 from __future__ import annotations
 
-import pytest
-
 from canadiannewsdatapipeline_spark.operators.similarity import (
+    MP_BYTE_DRIFT_GUARD,
     MP_DISK_BUDGET_BYTES,
-    PROD_NEAR_DUP_MP,
-    _mp_auto_tables_per_pass,
-    _mp_candidate_stream_bytes,
+    _mp_k_from_estimate,
 )
 
-# t04 stress config (queries/llm.py: _MP_*): 160 tables x 12 bits,
-# radius 1, dim 64 — the configuration whose shuffle tier hit the wall
-T04 = dict(dim=64, n_tables=160, n_bits=12, probe_radius=1)
-X10_BYTES = 5_241_941
-X30_BYTES = 15_723_341
-X100_BYTES = 52_408_749
-
-
-def _auto(input_bytes, budget=MP_DISK_BUDGET_BYTES, **cfg):
-    cfg = {**T04, **cfg}
-    return _mp_auto_tables_per_pass(
-        input_bytes, cfg["dim"], cfg["n_tables"], cfg["n_bits"],
-        cfg["probe_radius"], budget,
-    )
+X10_EXACT = 9_401_076_370  # fresh-x10 exact count x 70 B
+X30_EXACT = 84_462_939_820  # fresh-x30 exact count x 70 B
+# the PROD preset (16 tables x 16 bits) at fresh-x100, 200k vectors
+PROD_X100_EXACT = 10_019_662_380
 
 
 def test_x10_fits_single_pass():
-    # measured: x10 single-pass shuffle completed at 55 s
-    assert _auto(X10_BYTES) is None
-
-
-def test_x30_reproduces_measured_k_curve_point():
-    # measured: x30 single-pass died >70 GB; 4x40 passes ran at
-    # 29.9 GB peak — the rule must pick exactly tables_per_pass=40
-    assert _auto(X30_BYTES) == 40
+    # measured: x10 single-pass shuffle completed (55.0 s, r6)
+    assert _mp_k_from_estimate(X10_EXACT, 160, MP_DISK_BUDGET_BYTES) is None
 
 
 def test_x30_estimate_brackets_the_measured_wall():
-    # the x30 estimate must say "past the wall" (> the 32 GiB budget,
-    # consistent with the observed >70 GB death) while x10's must not
-    est30 = _mp_candidate_stream_bytes(X30_BYTES, **T04)
-    est10 = _mp_candidate_stream_bytes(X10_BYTES, **T04)
-    assert est30 > MP_DISK_BUDGET_BYTES
-    assert est10 <= MP_DISK_BUDGET_BYTES
-    # and the model's x30 stream is at least the observed death point
-    assert est30 > 70 * 1024**3
+    # x30 is past the default budget (its single pass died at >70 GB)
+    # and chunks; x10 is not
+    assert X10_EXACT <= MP_DISK_BUDGET_BYTES < X30_EXACT
+    assert _mp_k_from_estimate(X30_EXACT, 160, MP_DISK_BUDGET_BYTES) == 54
 
 
 def test_prod_preset_x100_stays_single_pass():
-    # measured: prod fresh-x100 flat at 5.95 s, no chunking needed
-    assert _auto(
-        X100_BYTES,
-        n_tables=PROD_NEAR_DUP_MP["n_tables"],
-        n_bits=PROD_NEAR_DUP_MP["n_bits"],
-        probe_radius=PROD_NEAR_DUP_MP["probe_radius"],
-    ) is None
-
-
-def test_tiny_budget_forces_max_chunking():
-    # a 1-byte budget cannot produce more passes than tables:
-    # K clamps to 1 (one table per pass), never 0 / never an error
-    assert _auto(X30_BYTES, budget=1) == 1
-
-
-def test_huge_budget_never_chunks():
-    assert _auto(X30_BYTES, budget=1 << 60) is None
-
-
-def test_single_table_never_chunks():
-    # n_tables=1 cannot be subdivided: even a stream estimate far
-    # past the budget must resolve to single-pass (returning K=1 ==
-    # n_tables would trip the private eager guard with a confusing
-    # error for a caller who merely asked for bounded disk)
-    assert _auto(X30_BYTES, budget=1, n_tables=1) is None
+    # measured: prod fresh-x100 single-pass in the shuffle tier at
+    # 33.4 s; its exact stream fits the default budget with headroom
+    assert _mp_k_from_estimate(PROD_X100_EXACT, 16, MP_DISK_BUDGET_BYTES) is None
 
 
 def test_monotone_in_input_bytes():
-    # more input can only chunk finer (smaller or equal K), and the
-    # fit/chunk boundary is crossed exactly once
-    budget = MP_DISK_BUDGET_BYTES
+    # more candidate bytes can only chunk finer (smaller or equal K),
+    # and the fit/chunk boundary is crossed exactly once
     last_k = None
     seen_chunking = False
-    for b in [X10_BYTES, X30_BYTES, X100_BYTES, 10 * X100_BYTES]:
-        k = _auto(b, budget=budget)
+    for b in [10**9, PROD_X100_EXACT, 2 * 10**10, X30_EXACT, 10**12, 10**14]:
+        k = _mp_k_from_estimate(b, 160, MP_DISK_BUDGET_BYTES)
         if k is None:
             assert not seen_chunking, "fit after chunking started"
         else:
@@ -111,43 +56,47 @@ def test_monotone_in_input_bytes():
     assert seen_chunking
 
 
+def test_tiny_budget_forces_max_chunking():
+    # a 1-byte budget cannot produce more passes than tables: K clamps
+    # to 1 (one table per pass), never 0 / never an error
+    assert _mp_k_from_estimate(X30_EXACT, 160, 1) == 1
+
+
+def test_huge_budget_never_chunks():
+    assert _mp_k_from_estimate(X30_EXACT, 160, 1 << 60) is None
+
+
+def test_single_table_never_chunks():
+    # n_tables=1 cannot be subdivided: even a stream far past the
+    # budget resolves to single-pass
+    assert _mp_k_from_estimate(X30_EXACT, 1, 1) is None
+
+
 try:
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     @settings(max_examples=300, deadline=None)
     @given(
-        input_bytes=st.integers(min_value=1, max_value=1 << 50),
+        est=st.integers(min_value=0, max_value=1 << 50),
         n_tables=st.integers(min_value=1, max_value=4096),
-        n_bits=st.integers(min_value=1, max_value=24),
-        probe_radius=st.integers(min_value=0, max_value=2),
-        dim=st.sampled_from([16, 64, 256]),
         budget=st.integers(min_value=1, max_value=1 << 45),
     )
     def test_auto_k_honors_budget_within_one_table_slice(
-        input_bytes, n_tables, n_bits, probe_radius, dim, budget
+        est, n_tables, budget
     ):
-        """The safety property the whole mechanism exists for: when
-        the sizer picks K, the per-pass candidate stream (est · K /
-        n_tables) must not exceed the budget by more than one table's
-        slice — the provable bound, since K = ceil(n_tables /
-        n_passes) rounds at table granularity. And K is always a
-        usable value: 1 <= K < n_tables (never 0, never a
-        de-facto single-pass that would defeat the disk bound)."""
-        k = _mp_auto_tables_per_pass(
-            input_bytes, dim, n_tables, n_bits, probe_radius, budget
-        )
-        est = _mp_candidate_stream_bytes(
-            input_bytes, dim, n_tables, n_bits, probe_radius
-        )
+        """The safety property the packer exists for: when it picks
+        K, the per-pass stream (est · K / n_tables) exceeds the budget
+        by at most one table's slice — K = ceil(n_tables / n_passes)
+        rounds at table granularity — and K is usable: 1 <= K <
+        n_tables. Single-pass only with the headroom, or when the
+        list cannot be subdivided."""
+        k = _mp_k_from_estimate(est, n_tables, budget)
         if k is None:
-            # single-pass is only allowed when the stream fits, or
-            # when chunking cannot subdivide (n_tables == 1)
-            assert est <= budget or n_tables == 1
+            assert est * MP_BYTE_DRIFT_GUARD <= budget or n_tables == 1
         else:
             assert 1 <= k < n_tables
-            one_table_slice = est / n_tables
-            assert est * k / n_tables <= budget + one_table_slice + 1
+            assert est * k / n_tables <= budget + est / n_tables + 1
 
 except ImportError:  # pragma: no cover - hypothesis is baked in
     pass
@@ -155,36 +104,13 @@ except ImportError:  # pragma: no cover - hypothesis is baked in
 
 def test_clustered_exact_counts_reproduce_measured_k_r9():
     """r9 skew study (SCALE_LADDER_SKEW_r09.json): on the clustered
-    warehouses the EXACT candidate counts (sizing='data') resolved to
-    the K values whose measured runs held the 2 GiB budget — x1
-    single-pass (truth fits), x2 three 54-table passes (peak 1.74 GB),
-    x3 seven 23-table passes (peak 2.02 GB). The uniform model said
-    single-pass at every rung and its runs violated the budget 1.56x /
-    3.05x at x2/x3 — the datapoints that refuted the r8 'skew is
-    conservative' claim.
-
-    r10 amendment: the x1 estimate (1.48 GB vs the 2 GiB budget) sits
-    in the byte-drift guard zone [budget/1.7, budget] and now chunks
-    minimally (2 passes) instead of single-pass. The r10 NC sweep
-    measured WHY the zone is undecidable from the estimate alone:
-    r9 clustered x1 (est 1.48 GB) truly shuffled 1.13 GB (drift
-    0.76x, single-pass would hold) while NC=256 (est 1.59 GB — nearly
-    the same number) truly shuffled 2.26 GB (drift 1.42x, single-pass
-    VIOLATED the budget). Same estimate, opposite outcomes — the
-    static decision must take the bounded 2-pass tax."""
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        _mp_k_from_estimate,
-    )
-
+    warehouses the exact counts pack to the K values whose measured
+    runs held the 2 GiB budget — x2 three 54-table passes (peak
+    1.74 GB), x3 seven 23-table passes (peak 2.02 GB). The x1 count
+    (1.48 GB) sits inside the single-pass headroom zone and packs a
+    minimal 2-pass plan: the r10 NC sweep measured a nearly equal
+    count (NC=256, 1.59 GB) whose single pass shuffled 2.26 GB."""
     budget = 2 * 1024**3
     assert _mp_k_from_estimate(1_480_267_670, 160, budget) == 80
     assert _mp_k_from_estimate(5_943_649_180, 160, budget) == 54
     assert _mp_k_from_estimate(13_391_046_060, 160, budget) == 23
-
-
-def test_estimate_scales_quadratically():
-    # the stream model is Theta(N^2): 3x the input bytes ~ 9x the
-    # estimate (integer floors allow slack)
-    e1 = _mp_candidate_stream_bytes(X10_BYTES, **T04)
-    e3 = _mp_candidate_stream_bytes(3 * X10_BYTES, **T04)
-    assert e3 == pytest.approx(9 * e1, rel=0.01)

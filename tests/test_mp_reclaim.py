@@ -1,12 +1,14 @@
-"""Deterministic inter-pass shuffle reclamation (r12, r11 verdict #1).
+"""Deterministic inter-pass shuffle reclamation, and what an eager
+chunked run leaves behind.
 
-The r11 eager loop nudged the JVM (System.gc()) and hoped
+An eager loop that only nudged the JVM (System.gc()) and hoped
 ContextCleaner's async queue drained before the next pass wrote its
-files — SCALE_LADDER_PILOT_TAX_r11.json caught bit-identical twin
-runs peaking at 6.45 GB vs 3.67 GB under a 4 GiB budget on cleanup
-timing alone. These tests pin the replacement: blocking
-ContextCleaner.doCleanupShuffle on the pass's shuffle ids, with the
-async nudge (plus a one-time soft-budget warning) as the fallback.
+files let bit-identical twin runs peak at 6.45 GB vs 3.67 GB under a
+4 GiB budget (SCALE_LADDER_PILOT_TAX_r11.json). These tests pin the
+replacement: blocking ContextCleaner.doCleanupShuffle on the pass's
+shuffle ids, with the async nudge (plus a one-time soft-budget
+warning) as the fallback — and the run's release of its signature
+cache once every pass is checkpointed.
 """
 
 from __future__ import annotations
@@ -67,7 +69,7 @@ def test_eager_chunked_run_reclaims_every_pass(spark, emb):
     sim.LAST_MP_SIZING_REPORT = None
     pairs = ann_lsh_multiprobe_pairs(
         emb, "vec_id", "embedding", THRESHOLD, n_tables=8,
-        broadcast_corpus=False, tables_per_pass=3, eager_passes=True,
+        broadcast_corpus=False, tables_per_pass=3,
     )
     assert pairs.count() > 0
     rep = sim.LAST_MP_SIZING_REPORT
@@ -90,7 +92,7 @@ def test_reclaim_fallback_warns_once_and_run_completes(
         _warnings.simplefilter("always")
         pairs = ann_lsh_multiprobe_pairs(
             emb, "vec_id", "embedding", THRESHOLD, n_tables=8,
-            broadcast_corpus=False, tables_per_pass=3, eager_passes=True,
+            broadcast_corpus=False, tables_per_pass=3,
         )
         n = pairs.count()
     assert n > 0
@@ -99,28 +101,6 @@ def test_reclaim_fallback_warns_once_and_run_completes(
     rep = sim.LAST_MP_SIZING_REPORT
     assert rep["reclaim"]["deterministic"] is False
     assert rep["reclaim"]["cleaned_per_pass"] == [None, None, None]
-
-
-def test_reclaim_opt_out_conf_silent(spark, emb):
-    """spark.cndp.mp.deterministicReclaim=false opts out WITHOUT the
-    degradation warning (the caller asked for the async behavior,
-    e.g. under concurrent same-session jobs)."""
-    spark.conf.set(sim.MP_DETERMINISTIC_RECLAIM_CONF, "false")
-    try:
-        sim.LAST_MP_SIZING_REPORT = None
-        with _warnings.catch_warnings(record=True) as w:
-            _warnings.simplefilter("always")
-            pairs = ann_lsh_multiprobe_pairs(
-                emb, "vec_id", "embedding", THRESHOLD, n_tables=8,
-                broadcast_corpus=False, tables_per_pass=4,
-                eager_passes=True,
-            )
-            assert pairs.count() > 0
-        assert not [x for x in w if "soft" in str(x.message)]
-        rep = sim.LAST_MP_SIZING_REPORT
-        assert rep["reclaim"]["deterministic"] is False
-    finally:
-        spark.conf.unset(sim.MP_DETERMINISTIC_RECLAIM_CONF)
 
 
 def test_reclaimer_skips_sweep_under_foreign_jobs(spark, monkeypatch):
@@ -138,7 +118,7 @@ def test_reclaimer_skips_sweep_under_foreign_jobs(spark, monkeypatch):
         sim, "_reclaim_shuffle_ids",
         lambda sc, ids: swept.append(ids) or 0,
     )
-    r = _ShuffleReclaimer(sc, enabled=True, job_group="me")
+    r = _ShuffleReclaimer(sc, job_group="me")
     with _warnings.catch_warnings(record=True) as w:
         _warnings.simplefilter("always")
         assert r.after_pass() is None
@@ -159,7 +139,7 @@ def test_reclaimer_disarms_cleanly_on_transient_census_failure(
     form must disarm for the rest of the run instead — None recorded,
     no exception, generic unavailability warning once."""
     sc = spark.sparkContext
-    r = _ShuffleReclaimer(sc, enabled=True, job_group="me")
+    r = _ShuffleReclaimer(sc, job_group="me")
     assert r._snapshot is not None
     monkeypatch.setattr(sim, "_foreign_job_ids", lambda sc, g: None)
     with _warnings.catch_warnings(record=True) as w:
@@ -216,7 +196,7 @@ def test_reclaimer_unit_fallback_path(spark, monkeypatch):
     """_ShuffleReclaimer degrades per-pass: a mid-run internals
     failure flips to the nudge and records None for that pass."""
     sc = spark.sparkContext
-    r = _ShuffleReclaimer(sc, enabled=True)
+    r = _ShuffleReclaimer(sc)
     assert r._snapshot is not None
     monkeypatch.setattr(sim, "_reclaim_shuffle_ids", lambda sc, ids: None)
     with _warnings.catch_warnings(record=True) as w:
@@ -225,3 +205,29 @@ def test_reclaimer_unit_fallback_path(spark, monkeypatch):
         assert r.after_pass() is None
     assert len([x for x in w if "soft" in str(x.message)]) == 1
     assert r.cleaned_per_pass == [None, None]
+
+
+def _cached_frames(spark) -> int:
+    """Persisted RDDs other than checkpoint blocks (each eager pass's
+    localCheckpoint is itself a persisted RDD — the result reads it)."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    n = 0
+    while it.hasNext():
+        n += not getattr(it.next(), "_2")().isCheckpointed()
+    return n
+
+
+def test_eager_chunked_run_releases_signature_cache(spark, emb):
+    """Once every pass is checkpointed nothing reads the persisted
+    signatures, so an eager chunked call must release them: after the
+    call and its result are consumed, the only caches it added are the
+    exact-dup cascade's two frames (groups, mapping), which the lazy
+    result still reads. (A filter no other test uses keeps those two
+    frames from matching a cache an earlier test left behind.)"""
+    before = _cached_frames(spark)
+    pairs = ann_lsh_multiprobe_pairs(
+        emb.filter(F.col("vec_id") != -7919), "vec_id", "embedding",
+        THRESHOLD, n_tables=8, broadcast_corpus=False, tables_per_pass=3,
+    )
+    assert pairs.count() > 0
+    assert _cached_frames(spark) - before <= 2

@@ -1,30 +1,7 @@
-"""Round-9 multiprobe sizing additions.
-
-Three subjects, all on the auto-sizer the r8 round built:
-
-1. **Runtime sizing feedback** (r8 verdict #1): the candidate-stream
-   estimate is open-loop calibration; the ``_MpSizingFeedback`` hook
-   reads the actual per-pass shuffle-write bytes at each eager
-   barrier, records them in ``LAST_MP_SIZING_REPORT``, and warns once
-   past the 4x divergence band. Tested Spark-free with a faked
-   tracker (both divergence directions, eviction disarm, the
-   small-pass floor) and end-to-end on a real eager chunked run.
-
-2. **mp_mode_report** (r8 verdict #6): the resolution an operator can
-   audit before a 10-hour run — same code path as the operator
-   (``_mp_resolve_mode``), so it cannot drift.
-
-3. **Skew** (r8 verdict #2) + the three r8 advice items: exact
-   data-driven candidate counting (``sizing='data'``), the
-   ``skew_factor`` knob, unconsulted-knob warnings, the followable
-   n_tables=1 advice, and the sentinel-estimate decline.
-
-4. **The ``sizing='auto'`` router** (r9, now the default): zero-job
-   model path only when the worst-case concentration bound proves
-   safety under any bucket distribution; exact count otherwise; an
-   explicit skew_factor or sizing='model' opts out; the Catalyst
-   sentinel routes to the stats-free count. Routing pinned against
-   the measured SCALE_LADDER_SKEW_r09.json rungs.
+"""The multiprobe's sizing surface: the exact candidate count, the
+auditable resolution (``mp_mode_report``, the same code path as the
+operator), the per-pass readings of an eager chunked run, and the
+signals for a budget that is given but never consulted.
 """
 
 from __future__ import annotations
@@ -36,13 +13,12 @@ from pyspark.sql import functions as F
 
 import canadiannewsdatapipeline_spark.operators.similarity as sim
 from canadiannewsdatapipeline_spark.operators.similarity import (
-    MP_SIZING_FEEDBACK_MIN_BYTES,
     PLAN_SIZE_UNKNOWN,
     PROD_NEAR_DUP_MP,
     _MP_CANDIDATE_ROW_BYTES,
-    _ann_lsh_multiprobe_distinct,
-    _mp_auto_tables_per_pass,
+    _as_double,
     _mp_exact_candidate_count,
+    _mp_k_from_estimate,
     _MpSizingFeedback,
     ann_lsh_multiprobe_pairs,
     mp_mode_report,
@@ -52,6 +28,7 @@ from canadiannewsdatapipeline_spark.sources.registry import load_table
 SF_DIR = "/root/testdata/sf0.001"
 THRESHOLD = 0.4
 MB = 1024 * 1024
+ARGS = dict(pool=252, n_bits=12, n_tables=8, probe_radius=1, hamming_max=112)
 
 
 @pytest.fixture(scope="module")
@@ -59,95 +36,34 @@ def emb(spark):
     return load_table(spark, SF_DIR, "embeddings")
 
 
+def _rows(emb, **kw):
+    return {
+        tuple(r)
+        for r in ann_lsh_multiprobe_pairs(
+            emb, "vec_id", "embedding", THRESHOLD, **{**ARGS, **kw}
+        ).collect()
+    }
+
+
+def _clean(emb):
+    return emb.filter(
+        F.col("embedding").isNotNull()
+        & ~F.exists(F.col("embedding"), lambda x: x.isNull())
+    ).select(F.col("vec_id").alias("id"), _as_double("embedding").alias("v"))
+
+
 # ---------------------------------------------------------------------------
-# 1. the feedback hook, Spark-free (faked tracker readings)
+# 1. the pass readings
 # ---------------------------------------------------------------------------
 
 
 def _fake_tracker(monkeypatch, readings):
     it = iter(readings)
     monkeypatch.setattr(
-        sim, "_observed_shuffle_write_bytes", lambda sc: next(it)
+        sim,
+        "_stage_shuffle_write_bytes",
+        lambda sc, group=None: {} if group is None else next(it),
     )
-
-
-def test_feedback_warns_on_underestimate(monkeypatch):
-    """Observed ≫ modeled (the dangerous direction — the next
-    un-warned run under-chunks toward the disk wall) must produce ONE
-    RuntimeWarning naming the measured ratio and the budget knob,
-    plus a complete per-pass report."""
-    est = 240 * MB  # slices of 90/90/60 MB for passes of 3/3/2 tables
-    _fake_tracker(
-        monkeypatch, [0, 600 * MB, 1200 * MB, 1800 * MB]
-    )
-    fb = _MpSizingFeedback(sc=None, est_stream_bytes=est, n_tables=8)
-    with pytest.warns(RuntimeWarning, match="UNDERESTIMATED") as rec:
-        fb.after_pass(3)
-        fb.after_pass(3)
-        fb.after_pass(2)
-    msgs = [w for w in rec if "sizing feedback" in str(w.message)]
-    assert len(msgs) == 1, "the divergence warning must be one-time"
-    assert "disk_budget_bytes" in str(msgs[0].message)
-    fb.finish()
-    rep = sim.LAST_MP_SIZING_REPORT
-    assert rep["est_stream_bytes"] == est
-    assert [p["tables"] for p in rep["passes"]] == [3, 3, 2]
-    assert rep["observed_total_bytes"] == 1800 * MB
-    assert rep["est_total_bytes"] == est
-    assert rep["ratio_total"] == pytest.approx(7.5)
-    assert rep["warned"] is True
-
-
-def test_feedback_warns_on_overestimate(monkeypatch):
-    """Observed ≪ modeled (over-chunking — the bounded ~3x wall loss)
-    warns in the other direction with the duplication explanation."""
-    est = 4000 * MB
-    _fake_tracker(monkeypatch, [0, 100 * MB, 200 * MB])
-    fb = _MpSizingFeedback(sc=None, est_stream_bytes=est, n_tables=8)
-    with pytest.warns(RuntimeWarning, match="OVERESTIMATED"):
-        fb.after_pass(4)
-        fb.after_pass(4)
-    fb.finish()
-    assert sim.LAST_MP_SIZING_REPORT["ratio_total"] == pytest.approx(
-        200 / 4000
-    )
-
-
-def test_feedback_silent_inside_band(monkeypatch):
-    """A ratio within the 4x band is the model working as documented —
-    record, never warn."""
-    est = 800 * MB
-    _fake_tracker(monkeypatch, [0, 300 * MB, 700 * MB])
-    fb = _MpSizingFeedback(sc=None, est_stream_bytes=est, n_tables=8)
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        fb.after_pass(4)
-        fb.after_pass(4)
-        fb.finish()
-    assert sim.LAST_MP_SIZING_REPORT["warned"] is False
-    assert len(sim.LAST_MP_SIZING_REPORT["passes"]) == 2
-
-
-def test_feedback_floor_suppresses_tiny_pass_warning(monkeypatch):
-    """Below MP_SIZING_FEEDBACK_MIN_BYTES fixed per-pass shuffle
-    floors dominate (measured: a sf0.001 pass shuffles ~0.9 MB against
-    a ~0.1 MB slice — all floor, no drift): the divergent ratio is
-    still RECORDED but must not warn."""
-    _fake_tracker(monkeypatch, [0, 1 * MB, 2 * MB])
-    fb = _MpSizingFeedback(
-        sc=None, est_stream_bytes=200 * 1024, n_tables=8
-    )
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        fb.after_pass(4)
-        fb.after_pass(4)
-        fb.finish()
-    rep = sim.LAST_MP_SIZING_REPORT
-    assert rep["warned"] is False
-    assert rep["passes"][0]["ratio"] > sim.MP_SIZING_DIVERGENCE_BAND
-    assert max(
-        rep["observed_total_bytes"], rep["est_total_bytes"]
-    ) < MP_SIZING_FEEDBACK_MIN_BYTES
 
 
 def test_feedback_disarms_on_eviction_rollback(monkeypatch):
@@ -155,8 +71,8 @@ def test_feedback_disarms_on_eviction_rollback(monkeypatch):
     (spark.ui.retainedStages) — a stale reading is worse than none,
     so the hook disarms instead of reporting garbage."""
     sim.LAST_MP_SIZING_REPORT = None
-    _fake_tracker(monkeypatch, [1000 * MB, 500 * MB, 600 * MB])
-    fb = _MpSizingFeedback(sc=None, est_stream_bytes=800 * MB, n_tables=8)
+    _fake_tracker(monkeypatch, [{1: 1000 * MB}, {1: 500 * MB}, {1: 600 * MB}])
+    fb = _MpSizingFeedback(None, 8, "g")
     fb.after_pass(4)  # rollback -> disarm
     fb.after_pass(4)  # must not even read the tracker again
     fb.finish()
@@ -166,37 +82,35 @@ def test_feedback_disarms_on_eviction_rollback(monkeypatch):
 def test_feedback_disarms_when_tracker_unavailable(monkeypatch):
     sim.LAST_MP_SIZING_REPORT = None
     monkeypatch.setattr(
-        sim, "_observed_shuffle_write_bytes", lambda sc: None
+        sim, "_stage_shuffle_write_bytes", lambda sc, group=None: None
     )
-    fb = _MpSizingFeedback(sc=None, est_stream_bytes=800 * MB, n_tables=8)
+    fb = _MpSizingFeedback(None, 8, "g")
     fb.after_pass(4)
     fb.finish()
     assert sim.LAST_MP_SIZING_REPORT is None
 
 
 def test_feedback_records_on_real_eager_run(spark, emb):
-    """End-to-end: a real eager chunked run on the sf0.001 corpus must
-    populate LAST_MP_SIZING_REPORT with genuinely observed bytes (the
-    status-store path, not the fake) and must NOT warn — tiny passes
-    sit under the feedback floor by design."""
+    """A real eager chunked run records genuinely observed per-pass
+    bytes (the status-store path, not a fake); explicit-K runs record
+    too, and never re-pack."""
     sim.LAST_MP_SIZING_REPORT = None
     with _warnings.catch_warnings():
         _warnings.simplefilter("error", RuntimeWarning)
         n = ann_lsh_multiprobe_pairs(
             emb, "vec_id", "embedding", THRESHOLD,
             n_tables=8, broadcast_corpus=False, tables_per_pass=3,
-            eager_passes=True,
         ).count()
     assert n > 0
     rep = sim.LAST_MP_SIZING_REPORT
-    assert rep is not None, "explicit-K eager runs arm the hook too"
+    assert rep is not None
     assert [p["tables"] for p in rep["passes"]] == [3, 3, 2]
-    assert rep["observed_total_bytes"] > 0
-    assert rep["warned"] is False
+    assert all(p["observed_bytes"] > 0 for p in rep["passes"])
+    assert rep["adaptive"] is False and rep["repack"] is None
 
 
 # ---------------------------------------------------------------------------
-# 2. mp_mode_report — the auditable resolution (r8 verdict #6)
+# 2. mp_mode_report — the auditable resolution
 # ---------------------------------------------------------------------------
 
 
@@ -207,78 +121,52 @@ def test_mode_report_broadcast_regime(emb):
     assert 0 < rep["input_bytes"] <= rep["broadcast_gate_bytes"]
     assert rep["tables_per_pass"] is None
     assert rep["n_passes"] == 1
-    assert rep["eager_passes"] is False
     assert rep["est_pass_bytes"] is None
+    assert rep["budget_consulted"] is False
 
 
 def test_mode_report_single_pass_shuffle(emb):
-    """Zero-knob shuffle tier at sf0.001: the model estimate
-    (~17 MB) fits the 32 GiB budget but its worst-case concentration
-    bound (x2^11 = ~34 GiB) does NOT quite — so the r9 'auto' default
-    must refuse to trust the model, pay the count job, and land on
-    single-pass. On this near-uniform corpus the exact count
-    (~5.8 MB) reads BELOW the model, so the max() combiner keeps the
-    model value as the sizing floor (est_source says so) — either
-    way single-pass, since both fit."""
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False
-    )
+    """Zero-knob shuffle tier at sf0.001: the exact count fits the
+    32 GiB default budget with headroom -> single pass."""
+    rep = mp_mode_report(emb, "vec_id", "embedding", broadcast_corpus=False)
     assert rep["regime"] == "single-pass-shuffle"
-    assert rep["sizing"] == "auto"
-    assert rep["sizing_effective"] == "data"
-    assert rep["est_source"] == "data+model-floor"
-    assert rep["est_exact_bytes"] < rep["est_stream_bytes"]
-    # r10: the bound is computed from the UNFLOORED product (ceil of
-    # T*M*N^2/2 candidate rows), so it is >= the model est << (k-1)
-    # and within one floored 2^(k-1) slop of it
-    assert rep["model_worst_case_bytes"] >= rep["est_stream_bytes"] << 11
-    assert rep["model_worst_case_bytes"] < (
-        (rep["est_stream_bytes"] + sim._MP_CANDIDATE_ROW_BYTES) << 11
-    ) + sim._MP_CANDIDATE_ROW_BYTES
-    assert rep["model_worst_case_bytes"] > rep["disk_budget_bytes"]
     assert rep["budget_consulted"] is True
-    assert rep["est_stream_bytes"] <= rep["disk_budget_bytes"]
+    assert rep["disk_budget_bytes"] == sim.MP_DISK_BUDGET_BYTES
+    assert 0 < rep["est_stream_bytes"] <= rep["disk_budget_bytes"]
     assert rep["est_pass_bytes"] == rep["est_stream_bytes"]
-    assert rep["skew_factor"] is None  # the exact count needs no hedge
-
-
-def test_mode_report_model_sizing_single_pass(emb):
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        sizing="model",
-    )
-    assert rep["regime"] == "single-pass-shuffle"
-    assert rep["est_source"] == "model"
-    assert rep["sizing_effective"] == "model"
-    assert rep["budget_consulted"] is True
-    assert rep["est_stream_bytes"] <= rep["disk_budget_bytes"]
-    assert rep["est_pass_bytes"] == rep["est_stream_bytes"]
-    assert rep["skew_factor"] == 1.0
+    assert rep["tables_per_pass"] is None and rep["pilot_tables"] is None
 
 
 def test_mode_report_chunked_matches_the_sizer(emb):
-    """A budget below the estimate must flip the report to chunked
-    eager passes with EXACTLY the K the sizing rule computes — the
-    report is the resolution code, not a reimplementation.
-    sizing='model' pins the byte-model source (under the r9 'auto'
-    default this tiny budget would route to the exact count, whose K
-    is data- not model-derived)."""
-    budget = 64 * 1024
+    """A budget below the count flips the report to chunked passes
+    with EXACTLY the K the packer computes, and the operator then
+    runs that plan: its first pass is the reported one."""
+    probe = mp_mode_report(
+        emb, "vec_id", "embedding", broadcast_corpus=False, n_tables=8
+    )
+    est = probe["est_stream_bytes"]
+    budget = est // 3
     rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=budget, sizing="model",
+        emb, "vec_id", "embedding", broadcast_corpus=False, n_tables=8,
+        disk_budget_bytes=budget,
     )
     assert rep["regime"] == "chunked-shuffle"
-    assert rep["eager_passes"] is True
-    want_k = _mp_auto_tables_per_pass(
-        rep["input_bytes"], 64, 160, 12, 1, budget
-    )
-    assert rep["tables_per_pass"] == want_k
-    assert rep["n_passes"] == -(-160 // want_k)
-    # the bound the mechanism exists for: per-pass stream within one
-    # table slice of the budget
-    slice_ = rep["est_stream_bytes"] / 160
-    assert rep["est_pass_bytes"] <= budget + slice_ + 1
+    assert rep["est_stream_bytes"] == est
+    k = _mp_k_from_estimate(est, 8, budget)
+    assert rep["tables_per_pass"] == k > 1
+    assert rep["pilot_tables"] == 1  # max(1, k // 8)
+    assert rep["est_pass_bytes"] <= budget + est / 8 + 1
+    plan = [1] + [min(k, 8 - lo) for lo in range(1, 8, k)]
+    assert rep["n_passes"] == len(plan)
+    sim.LAST_MP_SIZING_REPORT = None
+    assert ann_lsh_multiprobe_pairs(
+        emb, "vec_id", "embedding", THRESHOLD, **ARGS,
+        broadcast_corpus=False, disk_budget_bytes=budget,
+    ).count() > 0
+    ran = sim.LAST_MP_SIZING_REPORT
+    assert ran["est_stream_bytes"] == est
+    # sub-floor readings never re-pack: the run is the reported plan
+    assert [p["tables"] for p in ran["passes"]] == plan
 
 
 def test_mode_report_accepts_preset_splat(emb):
@@ -287,21 +175,19 @@ def test_mode_report_accepts_preset_splat(emb):
 
 
 def test_mode_report_validates_like_the_operator(emb):
-    """A knob combination the operator rejects raises the identical
-    named error from the report — an operator can dry-run a config."""
-    with pytest.raises(ValueError, match="broadcast mode"):
-        mp_mode_report(
-            emb, "vec_id", "embedding", broadcast_corpus=True,
-            eager_passes=True,
-        )
-    with pytest.raises(ValueError, match="sizing must be"):
-        mp_mode_report(emb, "vec_id", "embedding", sizing="guess")
+    """A knob value the operator rejects raises the identical named
+    error from the report — an operator can dry-run a config."""
     with pytest.raises(ValueError, match="tables_per_pass"):
         mp_mode_report(emb, "vec_id", "embedding", tables_per_pass=0)
+    with pytest.raises(ValueError, match="disk_budget_bytes"):
+        mp_mode_report(
+            emb, "vec_id", "embedding", broadcast_corpus=False,
+            disk_budget_bytes=0,
+        )
 
 
 # ---------------------------------------------------------------------------
-# 3. skew: exact data-driven sizing + skew_factor (r8 verdict #2)
+# 3. the exact candidate count
 # ---------------------------------------------------------------------------
 
 
@@ -314,18 +200,12 @@ def test_exact_candidate_count_matches_the_real_candidate_stream(
     stream independently from the operator's own signature stage and
     compare counts."""
     from canadiannewsdatapipeline_spark.operators.similarity import (
-        _as_double,
         _mp_signature_gen,
         _probe_masks,
     )
 
     cfg = dict(pool=252, n_bits=12, n_tables=8, probe_radius=1, dim=64)
-    e = emb.filter(
-        F.col("embedding").isNotNull()
-        & ~F.exists(F.col("embedding"), lambda x: x.isNull())
-    ).select(
-        F.col("vec_id").alias("id"), _as_double("embedding").alias("v")
-    )
+    e = _clean(emb)
     got = _mp_exact_candidate_count(e, **cfg)
 
     n_words = cfg["pool"] // 63
@@ -366,94 +246,68 @@ def test_exact_candidate_count_matches_the_real_candidate_stream(
 
 
 def test_data_sizing_resolves_from_the_exact_count(emb):
-    """sizing='data' must size the passes from the exact count, not
-    the byte model: est_stream_bytes == count x 70 B, and a budget
-    below it chunks."""
+    """The shuffle tier sizes from the exact count: est_stream_bytes
+    == count x 70 B, and a budget below it chunks."""
     cfg = dict(pool=252, n_bits=12, n_tables=8, probe_radius=1, dim=64)
-    e = emb.filter(
-        F.col("embedding").isNotNull()
-        & ~F.exists(F.col("embedding"), lambda x: x.isNull())
-    ).select(
-        F.col("vec_id").alias("id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    count = _mp_exact_candidate_count(e, **cfg)
+    count = _mp_exact_candidate_count(_clean(emb), **cfg)
     rep = mp_mode_report(
-        emb, "vec_id", "embedding", n_tables=8,
-        broadcast_corpus=False, sizing="data",
+        emb, "vec_id", "embedding", n_tables=8, broadcast_corpus=False,
     )
-    assert rep["est_source"] == "data"
     assert rep["est_stream_bytes"] == count * _MP_CANDIDATE_ROW_BYTES
     tight = mp_mode_report(
-        emb, "vec_id", "embedding", n_tables=8,
-        broadcast_corpus=False, sizing="data",
+        emb, "vec_id", "embedding", n_tables=8, broadcast_corpus=False,
         disk_budget_bytes=max(rep["est_stream_bytes"] // 3, 1),
     )
     assert tight["regime"] == "chunked-shuffle"
-    assert tight["eager_passes"] is True
 
 
 def test_data_sizing_output_identical(emb):
-    """sizing='data' is a sizing-source change only — pairs AND
-    cosines must match the broadcast default bit-for-bit."""
-    args = dict(pool=252, n_bits=12, n_tables=8, probe_radius=1,
-                hamming_max=112)
-    rows = lambda **kw: {  # noqa: E731
-        tuple(r)
-        for r in ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, **args, **kw
-        ).collect()
-    }
-    base = rows(broadcast_corpus=True)
-    data_sized = rows(
-        broadcast_corpus=False, sizing="data", disk_budget_bytes=1024
-    )
-    assert base == data_sized
+    """Budget-sized chunking is a slicing change only — pairs AND
+    cosines match the broadcast default bit-for-bit."""
+    base = _rows(emb, broadcast_corpus=True)
+    assert base == _rows(emb, broadcast_corpus=False, disk_budget_bytes=1024)
     assert len(base) > 0
 
 
-def test_skew_factor_scales_the_model_estimate(emb):
-    base = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        sizing="model",
+def test_auto_sentinel_runs_the_stats_free_count(emb, monkeypatch):
+    """Catalyst stats unreachable: the gate fails toward shuffle, and
+    the sizing still has everything it needs — the exact count reads
+    no Catalyst stats."""
+    monkeypatch.setattr(
+        sim, "_plan_size_bytes", lambda df: PLAN_SIZE_UNKNOWN
     )
-    skewed = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        skew_factor=1000.0,
+    fake_count = 10_000_000
+    monkeypatch.setattr(
+        sim, "_mp_exact_candidate_count", lambda *a, **kw: fake_count
     )
-    assert skewed["skew_factor"] == 1000.0
-    assert skewed["est_stream_bytes"] == pytest.approx(
-        1000 * base["est_stream_bytes"], rel=0.001
+    rep = mp_mode_report(
+        emb, "vec_id", "embedding", disk_budget_bytes=16 * MB,
     )
+    assert rep["broadcast_corpus"] is False
+    assert rep["input_bytes"] is None
+    assert rep["est_stream_bytes"] == fake_count * _MP_CANDIDATE_ROW_BYTES
+    assert rep["regime"] == "chunked-shuffle"
 
 
-def test_skew_factor_conf_is_read(spark, emb):
-    spark.conf.set("spark.cndp.mp.skewFactor", "7.5")
-    try:
-        rep = mp_mode_report(
-            emb, "vec_id", "embedding", broadcast_corpus=False
-        )
-        assert rep["skew_factor"] == 7.5
-    finally:
-        spark.conf.unset("spark.cndp.mp.skewFactor")
-
-
-def test_skew_factor_validation(emb):
-    with pytest.raises(ValueError, match="skew_factor must be > 0"):
-        mp_mode_report(
-            emb, "vec_id", "embedding", broadcast_corpus=False,
-            skew_factor=0.0,
-        )
+def test_auto_sentinel_end_to_end_output_equal(emb, monkeypatch):
+    """The same through a REAL run: with Catalyst stats gone and a
+    tiny budget, the default counts, chunks eagerly, executes, and
+    produces pairs bit-identical to the broadcast default."""
+    want = _rows(emb)
+    monkeypatch.setattr(
+        sim, "_plan_size_bytes", lambda df: PLAN_SIZE_UNKNOWN
+    )
+    got = _rows(emb, disk_budget_bytes=1024)
+    assert got == want
+    assert len(got) > 0
 
 
 # ---------------------------------------------------------------------------
-# r8 advice items
+# 4. a budget given but not consulted is signaled
 # ---------------------------------------------------------------------------
 
 
 def test_unconsulted_budget_warns_under_explicit_k(emb):
-    """Advice #1: disk_budget_bytes next to an explicit
-    tables_per_pass was silently ignored — now it signals."""
     with pytest.warns(RuntimeWarning, match="not consulted"):
         mp_mode_report(
             emb, "vec_id", "embedding", broadcast_corpus=False,
@@ -463,277 +317,13 @@ def test_unconsulted_budget_warns_under_explicit_k(emb):
 
 def test_unconsulted_budget_warns_in_broadcast_mode(emb):
     with pytest.warns(RuntimeWarning, match="broadcast mode"):
-        mp_mode_report(
-            emb, "vec_id", "embedding", disk_budget_bytes=1,
-        )
+        mp_mode_report(emb, "vec_id", "embedding", disk_budget_bytes=1)
 
 
 def test_unconsulted_knobs_silent_when_consulted(emb):
-    """The warning must NOT fire on the path that does consult the
-    budget (no false alarms on the auto path)."""
     with _warnings.catch_warnings():
         _warnings.simplefilter("error")
         mp_mode_report(
             emb, "vec_id", "embedding", broadcast_corpus=False,
             disk_budget_bytes=1024,
         )
-
-
-def test_single_table_eager_advice_is_followable(emb):
-    """Advice #2: the n_tables=1 warning used to suggest
-    tables_per_pass=K — unfollowable, no K subdivides one table. It
-    must now say to increase n_tables (and must not suggest
-    tables_per_pass)."""
-    with pytest.warns(RuntimeWarning, match="Increase n_tables") as rec:
-        ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, n_tables=1,
-            broadcast_corpus=False, eager_passes=True,
-            disk_budget_bytes=1,
-        )
-    msg = str(
-        [w for w in rec if "auto-sizer" in str(w.message)][0].message
-    )
-    assert "Pass tables_per_pass" not in msg
-
-
-def test_stream_fits_eager_advice_still_names_the_knob(emb):
-    with pytest.warns(RuntimeWarning, match="tables_per_pass=K"):
-        mp_mode_report(
-            emb, "vec_id", "embedding", broadcast_corpus=False,
-            eager_passes=True, disk_budget_bytes=1 << 60,
-        )
-
-
-def test_sentinel_estimate_declines_auto_chunking(emb, monkeypatch):
-    """Advice #3: when Catalyst stats are unreachable the old sizer
-    chunked MAXIMALLY (n_tables eager construction-time jobs on zero
-    information). Under sizing='model' it must decline — lazy
-    single-pass — and an explicit eager request must raise a named
-    error instead of guessing. (The r9 'auto' default routes the
-    sentinel to the stats-free exact count instead — see
-    test_auto_sentinel_runs_the_stats_free_count.)"""
-    monkeypatch.setattr(
-        sim, "_plan_size_bytes", lambda df: PLAN_SIZE_UNKNOWN
-    )
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        sizing="model",
-    )
-    assert rep["regime"] == "single-pass-shuffle"
-    assert rep["est_source"] == "unknown"
-    assert rep["input_bytes"] is None
-    assert rep["input_bytes_unknown"] is True
-    assert rep["tables_per_pass"] is None
-    assert rep["eager_passes"] is False
-    with pytest.raises(ValueError, match="declines to guess"):
-        mp_mode_report(
-            emb, "vec_id", "embedding", broadcast_corpus=False,
-            eager_passes=True, sizing="model",
-        )
-
-
-# ---------------------------------------------------------------------------
-# r9: the sizing='auto' router (the default is now skew-safe)
-# ---------------------------------------------------------------------------
-
-
-def _count_forbidden(monkeypatch):
-    def boom(*a, **kw):  # pragma: no cover - failing is the assert
-        raise AssertionError(
-            "the exact-count job ran on a provably-safe resolution"
-        )
-
-    monkeypatch.setattr(sim, "_mp_exact_candidate_count", boom)
-
-
-def test_auto_routes_to_model_when_provably_safe(emb, monkeypatch):
-    """'auto' takes the zero-job model path ONLY when the worst-case
-    concentration bound (true stream <= model * 2^(k-1), provable)
-    already fits the budget — then NO bucket distribution can violate
-    it and the count job would be a pure waste. (sf0.001's worst-case
-    bound is ~34 GiB — just past the 32 GiB default, which is why the
-    default-budget test above routes to 'data'; a 64 GiB budget puts
-    this corpus inside the provably-safe zone.)"""
-    _count_forbidden(monkeypatch)
-    budget = 64 * 1024**3
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=budget,
-    )
-    assert rep["sizing_effective"] == "model"
-    assert rep["est_source"] == "model"
-    # r10 unfloored bound: ceil(T*M*N^2/2)*70 — at least the model
-    # est * 2^(k-1), never more than a floored-slop above it
-    assert rep["model_worst_case_bytes"] >= rep["est_stream_bytes"] << 11
-    assert rep["model_worst_case_bytes"] <= budget
-    assert rep["regime"] == "single-pass-shuffle"
-    assert rep["skew_factor"] == 1.0
-
-
-def test_auto_routes_to_data_past_the_worst_case_bound(
-    emb, monkeypatch
-):
-    """When the model cannot PROVE safety (worst-case bound exceeds
-    the budget), 'auto' must pay the one linear count job and size
-    from the exact, skew-immune stream — the r9 measured fix for the
-    clustered corpora the bare model under-estimated 11.2x on."""
-    fake_count = 10_000_000
-    monkeypatch.setattr(
-        sim, "_mp_exact_candidate_count", lambda *a, **kw: fake_count
-    )
-    budget = 16 * MB
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=budget,
-    )
-    assert rep["sizing"] == "auto"
-    assert rep["sizing_effective"] == "data"
-    # the faked count (700 MB) exceeds this corpus's ~17 MB model
-    # est, so the max() combiner keeps the exact value
-    assert rep["est_source"] == "data"
-    assert rep["est_stream_bytes"] == fake_count * _MP_CANDIDATE_ROW_BYTES
-    assert rep["est_exact_bytes"] == rep["est_stream_bytes"]
-    assert rep["model_worst_case_bytes"] > budget
-    assert rep["regime"] == "chunked-shuffle"
-    assert rep["eager_passes"] is True
-    # the bound the router exists for: per-pass stream within one
-    # table slice of the budget
-    slice_ = rep["est_stream_bytes"] / 160
-    assert rep["est_pass_bytes"] <= budget + slice_ + 1
-
-
-def test_auto_model_floor_when_exact_reads_low(emb, monkeypatch):
-    """The max() combiner (r9): on uniform corpora the exact count
-    under-shoots the model (measured: 0.71x at fresh-x30, where
-    exact-only sizing picked the 25%-slower 3x54) — so when the
-    count job returns LESS than the model estimate, 'auto' must size
-    from the model value and say so in est_source. Over-chunking is
-    the bounded loss; the floor can only chunk finer."""
-    monkeypatch.setattr(
-        sim, "_mp_exact_candidate_count", lambda *a, **kw: 1000
-    )
-    budget = 4 * MB
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=budget,
-    )
-    assert rep["est_source"] == "data+model-floor"
-    assert rep["est_exact_bytes"] == 1000 * _MP_CANDIDATE_ROW_BYTES
-    assert rep["est_stream_bytes"] > rep["est_exact_bytes"]
-    # K comes from the floored (model) estimate: the exact count
-    # alone (70 KB) would have said single-pass under this budget
-    assert rep["regime"] == "chunked-shuffle"
-    assert rep["tables_per_pass"] is not None
-
-
-def test_auto_with_skew_factor_stays_zero_job(emb, monkeypatch):
-    """An explicit skew_factor is the caller asserting knowledge of
-    their corpus's skew: 'auto' must honor it on the zero-job model
-    path instead of re-deriving skew with the count job."""
-    _count_forbidden(monkeypatch)
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=16 * MB, skew_factor=12.0,
-    )
-    assert rep["sizing_effective"] == "model"
-    assert rep["est_source"] == "model"
-    assert rep["skew_factor"] == 12.0
-
-
-def test_auto_sentinel_runs_the_stats_free_count(emb, monkeypatch):
-    """Catalyst stats unreachable: 'model' must decline (zero
-    information), but the 'auto' default has a strictly better move —
-    the exact count needs no Catalyst stats — so it must size from
-    the data and even honor an explicit eager request."""
-    monkeypatch.setattr(
-        sim, "_plan_size_bytes", lambda df: PLAN_SIZE_UNKNOWN
-    )
-    fake_count = 10_000_000
-    monkeypatch.setattr(
-        sim, "_mp_exact_candidate_count", lambda *a, **kw: fake_count
-    )
-    rep = mp_mode_report(
-        emb, "vec_id", "embedding", broadcast_corpus=False,
-        disk_budget_bytes=16 * MB,
-    )
-    assert rep["input_bytes_unknown"] is True
-    assert rep["sizing_effective"] == "data"
-    assert rep["est_source"] == "data"
-    assert rep["est_stream_bytes"] == fake_count * _MP_CANDIDATE_ROW_BYTES
-    assert rep["regime"] == "chunked-shuffle"
-    assert rep["eager_passes"] is True
-
-
-def test_auto_sentinel_end_to_end_output_equal(emb, monkeypatch):
-    """The auto-sentinel path all the way through a REAL run (the
-    report test above fakes the count): with Catalyst stats gone and
-    a tiny budget, the default must count, chunk eagerly, execute,
-    and produce pairs bit-identical to the broadcast default."""
-    args = dict(pool=252, n_bits=12, n_tables=8, probe_radius=1,
-                hamming_max=112)
-    want = {
-        tuple(r)
-        for r in ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, **args
-        ).collect()
-    }
-    monkeypatch.setattr(
-        sim, "_plan_size_bytes", lambda df: PLAN_SIZE_UNKNOWN
-    )
-    got = {
-        tuple(r)
-        for r in ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, **args,
-            broadcast_corpus=False, disk_budget_bytes=1024,
-        ).collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
-def test_auto_routing_reproduces_the_r9_skew_rungs():
-    """Spark-free pin against SCALE_LADDER_SKEW_r09.json: at the
-    measured clustered x2/x3 rungs the model estimates (0.53 / 1.19
-    GB) FIT the 2 GiB budget — the r8 model-sized runs went
-    single-pass and violated it 1.56x / 3.05x. The 'auto' worst-case
-    bound must refuse the model there (route to the count), and the
-    exact counts must chunk to the K values whose runs held the
-    budget (3x54, 7x23)."""
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        _mp_k_from_estimate,
-    )
-
-    budget = 2 * 1024**3
-    for model_est in (528_811_220, 1_189_208_440):
-        assert model_est <= budget  # what fooled the model-sized runs
-        # the r10 unfloored worst-case bound is >= the floored-shift
-        # form (model_est << (k-1)), so showing THAT already exceeds
-        # the budget pins the routing refusal for the new bound too
-        assert (model_est << 11) > budget
-    # the max() combiner keeps the (larger) exact counts here, and
-    # they chunk to the K values whose runs held the budget
-    assert _mp_k_from_estimate(
-        max(5_943_649_180, 528_811_220), 160, budget
-    ) == 54
-    assert _mp_k_from_estimate(
-        max(13_391_046_060, 1_189_208_440), 160, budget
-    ) == 23
-
-
-def test_auto_combiner_reproduces_the_uniform_x30_rung():
-    """Spark-free pin of the max() combiner against the measured
-    uniform fresh-x30 rungs (SCALE_LADDER_AUTO_DEFAULT_r09.json):
-    the exact count read 84.5 GB (0.71x the 118.8 GB model) and
-    exact-only sizing picked 3x54 (757.7 s / 34.49 GB, the slack
-    edge) while the model's 4x40 ran 573.5 s / 29.78 GB same-box.
-    max(exact, model) keeps the model there and recovers 4x40."""
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        MP_DISK_BUDGET_BYTES,
-        _mp_k_from_estimate,
-    )
-
-    exact, model = 84_462_939_820, 118_781_078_430
-    assert _mp_k_from_estimate(exact, 160, MP_DISK_BUDGET_BYTES) == 54
-    assert _mp_k_from_estimate(
-        max(exact, model), 160, MP_DISK_BUDGET_BYTES
-    ) == 40

@@ -261,8 +261,12 @@ def test_multiprobe_shuffle_mode_plan_shape(spark, monkeypatch):
     words wa/wb + both exact-verify vector sides) must all plan as
     ShuffledHashJoin — pinned, not AQE-decided, because post-
     mapInPandas stats are garbage (a 41.6M-row side was measured
-    mis-broadcast) — alongside the probes-homes SHUFFLE_HASH join;
-    exchanges still hash on ids only, never on a raw vector column."""
+    mis-broadcast) — alongside the probes-homes SHUFFLE_HASH join.
+    Every pass of a chunked run is this same pass_pairs pipeline over
+    a table slice, so the exchange rule pinned here holds for each
+    pass: the quadratic candidate stream stays ids-only and no
+    Exchange hashes on a raw vector column — only the linear corpus
+    relation ships vectors."""
     from canadiannewsdatapipeline_spark.operators import similarity as sim
     from canadiannewsdatapipeline_spark.sources.registry import load_table
 
@@ -285,53 +289,14 @@ def test_multiprobe_shuffle_mode_plan_shape(spark, monkeypatch):
             assert "mv#" not in line and "embedding#" not in line, line
 
 
-def test_multiprobe_chunked_shuffle_plan_shape(spark):
-    """Chunked pass mode in the above-gate shuffle tier (r7): with
-    n_tables=8 and tables_per_pass=3 the plan must contain THREE
-    independent per-pass join pipelines — each with its own pinned
-    SHUFFLE_HASH probes-homes join and four SHUFFLE_HASH corpus
-    attaches (>= 15 ShuffledHashJoin total) — united under a Union
-    feeding the cross-pass pair-dedup. Each pass's candidate exchange
-    carries only its 3-table slice, which is the whole point: the
-    single-pass shuffle form exchanges the full unscreened candidate
-    stream (~1e9 rows / >70 GB of shuffle files at threshold 0.4 x
-    60k vectors — measured, it filled the disk and died). And as
-    everywhere in this family: no Exchange may carry a raw vector —
-    the quadratic candidate stream stays ids-only; only the linear
-    corpus relation ships vectors."""
-    from canadiannewsdatapipeline_spark.operators import similarity as sim
-    from canadiannewsdatapipeline_spark.sources.registry import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    df = sim.ann_lsh_multiprobe_pairs(
-        emb, "vec_id", "embedding", 0.4, n_tables=8,
-        broadcast_corpus=False, tables_per_pass=3,
-    )
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "CartesianProduct" not in plan
-    assert "Union" in plan
-    assert plan.count("ShuffledHashJoin") >= 15, plan.count("ShuffledHashJoin")
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "mv#" not in line and "embedding#" not in line, line
-
-
 def test_multiprobe_auto_chunking_flips_on_disk_budget(spark):
-    """r7 verdict #1: in the shuffle tier with NO chunking knobs, the
-    operator sizes tables_per_pass itself from the candidate-stream
-    estimate vs the disk budget. A tiny budget (argument or the
-    spark.cndp.mp.diskBudgetBytes conf) must flip the auto mode to
-    the chunked Union shape; the default budget must keep the cheaper
-    single-pass plan at this input size (chunking below the disk wall
-    is a measured ~3x wall loss). eager_passes=False plus
-    sizing='model' (the zero-job source — the r9 'auto' default would
-    run the exact-count job here) keeps the flipped plan fully lazy
-    so the shape is assertable without running construction-time
-    jobs."""
+    """In the shuffle tier with no tables_per_pass, the operator packs
+    its passes from the exact candidate count vs the disk budget. A
+    tiny budget must flip it to eager chunked passes (checkpointed RDD
+    scans, every per-pass join pipeline gone), and so must the
+    spark.cndp.mp.diskBudgetBytes conf; the default budget keeps the
+    single-pass shuffle shape at this input size (one probes-homes
+    join + four corpus attaches)."""
     from canadiannewsdatapipeline_spark.operators import similarity as sim
     from canadiannewsdatapipeline_spark.sources.registry import load_table
 
@@ -340,8 +305,7 @@ def test_multiprobe_auto_chunking_flips_on_disk_budget(spark):
     def plan(**kw):
         df = sim.ann_lsh_multiprobe_pairs(
             emb, "vec_id", "embedding", 0.4, n_tables=8,
-            broadcast_corpus=False, eager_passes=False,
-            sizing="model", **kw
+            broadcast_corpus=False, **kw
         )
         return df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -349,26 +313,19 @@ def test_multiprobe_auto_chunking_flips_on_disk_budget(spark):
             )
         )
 
-    # argument knob: 1-byte budget -> K=1, 8 per-pass SHUFFLE_HASH
-    # pipelines (>= 5 joins each) united under the cross-pass dedup
-    tiny = plan(disk_budget_bytes=1)
-    assert "Union" in tiny
-    assert tiny.count("ShuffledHashJoin") >= 40, tiny.count(
-        "ShuffledHashJoin"
-    )
-    # conf knob (read only when the argument is absent)
+    def chunked(p):
+        return "Scan ExistingRDD" in p and "ShuffledHashJoin" not in p
+
+    assert chunked(plan(disk_budget_bytes=1))
+    # the conf feeds the same resolver; its report is the plan to run
     spark.conf.set("spark.cndp.mp.diskBudgetBytes", "1")
     try:
-        via_conf = plan()
-        assert "Union" in via_conf
-        assert via_conf.count("ShuffledHashJoin") >= 40
+        rep = sim.mp_mode_report(
+            emb, "vec_id", "embedding", n_tables=8, broadcast_corpus=False
+        )
+        assert rep["regime"] == "chunked-shuffle" and rep["n_passes"] == 8
     finally:
         spark.conf.unset("spark.cndp.mp.diskBudgetBytes")
-    # default budget: this input's estimated stream fits -> the exact
-    # single-pass shuffle shape (one probes-homes join + four corpus
-    # attaches; the Union that remains is the cascade's expand step,
-    # present in every multiprobe plan — the chunked flip shows up as
-    # the 8x multiplication of the per-pass join pipelines)
     single = plan()
     assert 5 <= single.count("ShuffledHashJoin") < 15
 

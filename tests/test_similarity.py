@@ -192,13 +192,12 @@ def test_multiprobe_shuffle_mode_output_equal(emb):
 
 
 def test_multiprobe_chunked_passes_output_equal(emb):
-    """Chunked pass mode (r7: the above-gate shuffle tier's bounded-
-    exchange path) is a PHYSICAL reshaping only: slicing the table
-    list into tables_per_pass passes partitions the candidate set by
+    """Chunked pass mode (the above-gate shuffle tier's bounded-disk
+    path) is a PHYSICAL reshaping only: slicing the table list into
+    eager tables_per_pass passes partitions the candidate set by
     table, and the cross-pass pair-dedup commutes with the per-pass
     one — pairs AND cosines must be bit-identical to the single-pass
-    broadcast default, in both the lazy-union and the eager
-    (per-pass localCheckpoint) forms."""
+    broadcast default."""
     from canadiannewsdatapipeline_spark.operators.similarity import (
         ann_lsh_multiprobe_pairs,
     )
@@ -212,11 +211,7 @@ def test_multiprobe_chunked_passes_output_equal(emb):
         ).collect()
     }
     single = rows(broadcast_corpus=True)
-    chunked = rows(broadcast_corpus=False, tables_per_pass=3)
-    eager = rows(broadcast_corpus=False, tables_per_pass=3,
-                 eager_passes=True)
-    assert single == chunked
-    assert single == eager
+    assert single == rows(broadcast_corpus=False, tables_per_pass=3)
     assert len(single) > 0
 
 
@@ -226,16 +221,16 @@ def test_multiprobe_eager_passes_truncate_lineage(spark, emb):
     frame's plan must read checkpointed RDD blocks (LogicalRDD scans),
     with no MapInPandas signature stage or SHUFFLE_HASH candidate
     joins left upstream — those belong to the per-pass lineage whose
-    shuffle files ContextCleaner reclaims between passes. If a future
-    edit accidentally keeps the passes lazy under eager_passes=True,
-    the full lineage reappears here and the peak-disk bound is gone."""
+    shuffle files are reclaimed between passes. If a future edit
+    accidentally keeps chunked passes lazy, the full lineage
+    reappears here and the peak-disk bound is gone."""
     from canadiannewsdatapipeline_spark.operators.similarity import (
         ann_lsh_multiprobe_pairs,
     )
 
     df = ann_lsh_multiprobe_pairs(
         emb, "vec_id", "embedding", THRESHOLD, n_tables=8,
-        broadcast_corpus=False, tables_per_pass=4, eager_passes=True,
+        broadcast_corpus=False, tables_per_pass=4,
     )
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -308,7 +303,6 @@ def test_multiprobe_eager_passes_reliable_checkpoint(spark, emb, tmp_path):
             for r in ann_lsh_multiprobe_pairs(
                 emb, "vec_id", "embedding", THRESHOLD, **args,
                 broadcast_corpus=False, tables_per_pass=3,
-                eager_passes=True,
             ).collect()
         }
     finally:
@@ -356,38 +350,6 @@ def test_multiprobe_knob_validation(spark, emb):
             emb, "vec_id", "embedding", THRESHOLD,
             broadcast_corpus=False, disk_budget_bytes=0,
         )
-
-
-def test_multiprobe_eager_without_chunking_is_signaled(emb):
-    """r7 advice: eager_passes=True must never be a silent no-op.
-    Three regimes: (a) explicit tables_per_pass >= n_tables resolves
-    to the single-pass plan — named error; (b) broadcast mode with no
-    tables_per_pass has no passes at all — named error; (c) the
-    shuffle tier whose auto-sizer concludes the stream FITS the
-    budget — the requested disk bound already holds, so it warns and
-    stays single-pass rather than punishing the safety-conscious
-    caller."""
-    from canadiannewsdatapipeline_spark.operators.similarity import (
-        ann_lsh_multiprobe_pairs,
-    )
-
-    with pytest.raises(ValueError, match="eager_passes"):
-        ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, n_tables=8,
-            broadcast_corpus=False, tables_per_pass=8,
-            eager_passes=True,
-        ).collect()
-    with pytest.raises(ValueError, match="eager_passes"):
-        ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, n_tables=8,
-            broadcast_corpus=True, eager_passes=True,
-        )
-    with pytest.warns(RuntimeWarning, match="fits the disk budget"):
-        df = ann_lsh_multiprobe_pairs(
-            emb, "vec_id", "embedding", THRESHOLD, n_tables=8,
-            broadcast_corpus=False, eager_passes=True,
-        )
-    assert df.count() > 0
 
 
 def test_multiprobe_auto_chunked_output_equal(emb):
