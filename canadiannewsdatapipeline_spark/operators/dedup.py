@@ -96,17 +96,23 @@ def shingle_hash_set(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> D
     Cross-doc hash collisions (~n_shingles/2^31) are reproduced
     identically by the oracle (same md5-derived values)."""
     t = tokens_col(text_col)
-    hashes = F.array_distinct(
+    return (
+        df.select(F.col(id_col).alias("id"), t.alias("t"))
+        .filter(F.size("t") >= n)
+        .select("id", F.explode(_shingle_hashes_expr(n)).alias("h"))
+    )
+
+
+def _shingle_hashes_expr(n: int):
+    """The distinct shingle hashes of token-array column ``t`` —
+    bigint(first 15 hex chars of md5(shingle)) mod M31, deduped inside
+    the array."""
+    return F.array_distinct(
         F.transform(
             _shingles_expr(n),
             lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
             % M31,
         )
-    )
-    return (
-        df.select(F.col(id_col).alias("id"), t.alias("t"))
-        .filter(F.size("t") >= n)
-        .select("id", F.explode(hashes).alias("h"))
     )
 
 
@@ -162,25 +168,6 @@ def _mh_min(i: int):
     return F.min((F.lit(mult) * F.col("h") + F.lit(i)) % M31).alias(f"mh{i}")
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 12, n: int = 3
-) -> DataFrame:
-    """(id, hash_index, minhash) — minhash_i = MIN over the doc's
-    31-bit shingle hashes of universal hash i (see ``_mh_min``).
-    md5-seeded so any engine reproduces it.
-
-    Computed as ``num_hashes`` MIN aggregates over a single shingle
-    explode (wide form, then unpivoted): one shuffle, no x12 row
-    multiplication — at 100 TB the explode factor is the difference
-    between a pass and a blow-up."""
-    sh = shingle_hash_set(df, text_col, id_col, n)
-    wide = sh.groupBy("id").agg(*[_mh_min(i) for i in range(num_hashes)])
-    stack_expr = ", ".join(f"{i}, mh{i}" for i in range(num_hashes))
-    return wide.select(
-        "id", F.expr(f"stack({num_hashes}, {stack_expr}) AS (i, mh)")
-    )
-
-
 def _token_key(t) -> "F.Column":
     """16-byte exact-dedup key: md5 of the space-joined token array.
 
@@ -193,29 +180,102 @@ def _token_key(t) -> "F.Column":
     return F.md5(F.concat_ws(" ", t))
 
 
-def _collapse_identical(df: DataFrame, text_col: str, id_col: str):
-    """Exact-dedup cascade front end: ``(groups, mapping)``.
+def _collapse_exact_dups(keyed: DataFrame, key: str, payload: str):
+    """Exact-dup cascade front end, shared by the text (token array)
+    and vector (embedding) near-dup families: ``(groups, mapping)``
+    from a keyed frame ``(mid, <key>, <payload>)`` whose ``key`` is a
+    narrow digest of ``payload``. The cascade collapses identical
+    inputs to a min-id representative, runs the LSH stage over the
+    representatives only, and expands their pairs back to members
+    (``_expand_member_pairs``) — output-identical to a per-member run
+    whenever the stage's candidate test and pair value depend only on
+    the payload VALUE.
 
-    - ``groups``: one row per DISTINCT token array — ``(tkey, rid,
-      gsz, t)`` with rid = min member id (the representative) and gsz
-      the member count. Built with groupBy/agg, NOT a window: partial
-      aggregation collapses identical copies map-side, so the one
-      shuffle that carries token arrays moves ~|distinct docs| rows
+    - ``groups``: one row per DISTINCT payload — ``(<key>, rid, gsz,
+      <payload>)`` with rid = min member id (the representative) and
+      gsz the member count. Built with groupBy/agg, NOT a window:
+      partial aggregation collapses identical copies map-side, so the
+      one shuffle that carries payloads moves ~|distinct inputs| rows
       regardless of the duplication factor (a K-fold-replicated corpus
-      shuffles 1/K of itself). ``F.first(t)`` is value-deterministic —
-      every row in a tkey group carries the identical array.
+      shuffles 1/K of itself), keyed on 16 bytes instead of the
+      payload. ``F.first(<payload>)`` is value-deterministic — every
+      row in a key group carries the identical payload.
     - ``mapping``: narrow ``(mid, rid, gsz)`` member->representative
-      mapping (ids + a 16-byte key only; the docs' text never rides
-      this join).
+      mapping (ids + the key only; payloads never ride this join).
 
-    Both frames are persisted — groups feeds the shingle pipeline and
-    the within-group expansion, mapping feeds two expansion joins.
-    Cache lifecycle (corrected r12, r11 advice): Dataset persists
-    register in the session CacheManager and are NOT ContextCleaner-
-    reclaimed — unpersist/clearCache between repeated runs in one
-    session. Tokenization runs twice (once per frame), map-side only."""
+    Both frames are persisted — groups feeds the representative
+    pipeline and the within-group values, mapping feeds the expansion
+    joins. Cache lifecycle (corrected r12, r11 advice): Dataset
+    persists register in the session CacheManager and are NOT
+    ContextCleaner-reclaimed — a long-lived session that rebuilds a
+    cascade operator repeatedly should ``unpersist()``/``clearCache()``
+    between runs; on a 100 TB run swap the persists for checkpoints to
+    cluster storage (the two-phase shape plans/runner.py uses). The
+    keyed frame's projection runs twice (once per frame), map-side
+    only."""
     from pyspark.storagelevel import StorageLevel
 
+    groups = (
+        keyed.groupBy(key)
+        .agg(
+            F.min("mid").alias("rid"),
+            F.count(F.lit(1)).alias("gsz"),
+            F.first(payload).alias(payload),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    mapping = (
+        keyed.select("mid", key)
+        .join(groups.select(key, "rid", "gsz"), key)
+        .select("mid", "rid", "gsz")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return groups, mapping
+
+
+def _expand_member_pairs(
+    rep_pairs: DataFrame, mapping: DataFrame, rep_values: DataFrame, value_col: str
+) -> DataFrame:
+    """Cascade back end: representative pairs ``(id_a, id_b, <value>)``
+    -> member pairs ``(id_a, id_b, <value>)``.
+
+    - cross-group pairs: every member of group A x every member of
+      group B, canonically ordered. Two narrow joins (ids + one value
+      column); the quadratic-in-group-size blowup only happens here, in
+      output rows, never in the LSH stage.
+    - within-group pairs: all member pairs of multi-member groups, with
+      their representative's value from ``rep_values`` (rid, <value>),
+      which holds only representatives that self-collide and pass the
+      pair filter — as in a per-member run.
+
+    Disjoint by construction (cross pairs span two groups, within pairs
+    stay inside one), so the union needs no dedup."""
+    ma = mapping.select(F.col("rid").alias("id_a"), F.col("mid").alias("ma"))
+    mb = mapping.select(F.col("rid").alias("id_b"), F.col("mid").alias("mb"))
+    cross = (
+        rep_pairs.join(ma, "id_a")
+        .join(mb, "id_b")
+        .select(
+            F.least("ma", "mb").alias("id_a"),
+            F.greatest("ma", "mb").alias("id_b"),
+            value_col,
+        )
+    )
+    m2 = mapping.filter(F.col("gsz") > 1)
+    within = (
+        m2.select("rid", F.col("mid").alias("id_a"))
+        .join(m2.select("rid", F.col("mid").alias("id_b")), "rid")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .join(rep_values, "rid")
+        .select("id_a", "id_b", value_col)
+    )
+    return cross.unionByName(within)
+
+
+def _token_groups(df: DataFrame, text_col: str, id_col: str):
+    """The text cascade's ``(groups, mapping)``: documents keyed by
+    their token array (``tkey``), groups carrying ``(tkey, rid, gsz,
+    t)``."""
     t = tokens_col(text_col)
     # NOT spread (r12, measured): this cascade is exchange-dominated
     # cold — 8+ shuffles and four persisted frames over narrow keys —
@@ -226,22 +286,7 @@ def _collapse_identical(df: DataFrame, text_col: str, id_col: str):
     keyed = df.select(F.col(id_col).alias("mid"), t.alias("t")).withColumn(
         "tkey", _token_key(F.col("t"))
     )
-    groups = (
-        keyed.groupBy("tkey")
-        .agg(
-            F.min("mid").alias("rid"),
-            F.count(F.lit(1)).alias("gsz"),
-            F.first("t").alias("t"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    mapping = (
-        keyed.select("mid", "tkey")
-        .join(groups.select("tkey", "rid", "gsz"), "tkey")
-        .select("mid", "rid", "gsz")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return groups, mapping
+    return _collapse_exact_dups(keyed, "tkey", "t")
 
 
 def _rep_shingle_hashes(groups: DataFrame, n: int) -> DataFrame:
@@ -249,17 +294,10 @@ def _rep_shingle_hashes(groups: DataFrame, n: int) -> DataFrame:
     (id=rid, gsz, h). gsz rides along (8 bytes/shingle row, map-side
     only) so the band clamp can weight representative rows by member
     count without a second join."""
-    hashes = F.array_distinct(
-        F.transform(
-            _shingles_expr(n),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-            % M31,
-        )
-    )
     return (
         groups.select(F.col("rid").alias("id"), "gsz", "t")
         .filter(F.size("t") >= n)
-        .select("id", "gsz", F.explode(hashes).alias("h"))
+        .select("id", "gsz", F.explode(_shingle_hashes_expr(n)).alias("h"))
     )
 
 
@@ -274,60 +312,20 @@ def _band_stack_expr(num_hashes: int, rows_per_band: int) -> str:
     return f"stack({n_bands}, {band_exprs}) AS (band, sig)"
 
 
-def _clamp_bands(
-    bands: DataFrame, max_band_freq: int | None, weighted: bool
-) -> DataFrame:
+def _clamp_bands(bands: DataFrame, max_band_freq: int | None) -> DataFrame:
     """Drop band signatures whose document frequency exceeds the skew
-    clamp. ``weighted`` is the cascade form: each representative row
-    counts ``gsz`` members, so the frequency equals what the flat
-    (per-member) pipeline would have counted — clamp decisions are
-    bit-identical."""
+    clamp. Each representative row counts ``gsz`` members, so the
+    frequency equals the per-member count — clamp decisions do not
+    depend on the collapse."""
     if max_band_freq is None:
         return bands
     from pyspark.sql import Window
 
-    one = F.sum("gsz") if weighted else F.count(F.lit(1))
-    freq = one.over(Window.partitionBy("band", "sig"))
+    freq = F.sum("gsz").over(Window.partitionBy("band", "sig"))
     return (
         bands.withColumn("_band_freq", freq)
         .filter(F.col("_band_freq") <= max_band_freq)
         .drop("_band_freq")
-    )
-
-
-def _expand_member_pairs(
-    rep_pairs: DataFrame, mapping: DataFrame, value_col: str
-) -> DataFrame:
-    """Representative pairs -> member pairs: every member of group A x
-    every member of group B, canonically ordered. Two narrow joins
-    (ids + one value column); the quadratic-in-group-size blowup only
-    happens here, in output rows, never in shingles/signatures."""
-    ma = mapping.select(F.col("rid").alias("rid_a"), F.col("mid").alias("ma"))
-    mb = mapping.select(F.col("rid").alias("rid_b"), F.col("mid").alias("mb"))
-    return (
-        rep_pairs.join(ma, "rid_a")
-        .join(mb, "rid_b")
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            value_col,
-        )
-    )
-
-
-def _within_group_pairs(mapping: DataFrame, rep_values: DataFrame) -> DataFrame:
-    """All member pairs inside multi-member groups, carrying their
-    representative's value row. ``rep_values`` (rid, <value>) must
-    contain only reps that would self-collide (>= 1 surviving band) —
-    the inner join drops groups whose rep was clamped out or has no
-    shingles, exactly as the flat pipeline drops them."""
-    m2 = mapping.filter(F.col("gsz") > 1)
-    return (
-        m2.select("rid", F.col("mid").alias("id_a"))
-        .join(m2.select("rid", F.col("mid").alias("id_b")), "rid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(rep_values, "rid")
-        .drop("rid")
     )
 
 
@@ -339,7 +337,6 @@ def minhash_lsh_candidates(
     rows_per_band: int = 3,
     n: int = 3,
     max_band_freq: int | None = None,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """LSH banding: candidate pairs sharing >= 1 band signature, with
     the number of shared bands. Join key is (band, band_signature) —
@@ -356,34 +353,44 @@ def minhash_lsh_candidates(
     exact dedup on the content hash; LSH only needs the *near*-dup
     tail. Default None = no clamp (exact oracle semantics).
 
-    ``collapse_identical`` (default) is the exact-dedup cascade:
-    identical documents (same token array) are collapsed to a min-id
-    representative BEFORE shingling, the signature/banding pipeline
-    runs over distinct docs only, and representative pairs expand back
-    to member pairs at the end. Output-identical to the flat pipeline
-    (``collapse_identical=False``, kept as the equivalence oracle):
+    Runs as the exact-dup cascade (``_collapse_exact_dups``): identical
+    documents (same token array) collapse to a min-id representative
+    BEFORE shingling, the signature/banding stage
+    (``_minhash_rep_pairs``) runs over distinct docs only, and
+    representative pairs expand back to member pairs. The output equals
+    that stage run with one group per document:
 
     - members share their representative's shingle-hash set, hence its
       signatures, band sigs, and candidate partners;
     - the band clamp weights each representative row by group size, so
-      frequencies equal the flat per-member counts;
+      frequencies equal the per-member counts;
     - within-group pairs always collide — they share every surviving
       band, so their n_shared_bands is the rep's surviving-band count,
       and groups whose rep lost every band (or has < n tokens) emit
-      nothing, exactly like the flat pipeline.
+      nothing, exactly like a per-member run.
 
     On a replicated corpus the shingle explode, signature agg, and
     banding join all scale with DISTINCT documents; only the output
     expansion is quadratic in group size (the operator's pair-list
     contract — hand consumers ``dedup_clusters`` for group-shaped
     output)."""
-    if not collapse_identical:
-        return _minhash_lsh_candidates_flat(
-            df, text_col, id_col, num_hashes, rows_per_band, n, max_band_freq
-        )
+    groups, mapping = _token_groups(df, text_col, id_col)
+    rep_pairs, surv = _minhash_rep_pairs(
+        groups, num_hashes, rows_per_band, n, max_band_freq
+    )
+    return _expand_member_pairs(rep_pairs, mapping, surv, "n_shared_bands")
+
+
+def _minhash_rep_pairs(
+    groups: DataFrame, num_hashes: int, rows_per_band: int, n: int,
+    max_band_freq: int | None,
+):
+    """``minhash_lsh_candidates``' stage over ``(rid, gsz, t)`` groups:
+    ``(rep_pairs, surv)`` — representative pairs ``(id_a, id_b,
+    n_shared_bands)`` and each representative's surviving-band count
+    ``(rid, n_shared_bands)``, the value of its within-group pairs."""
     from pyspark.storagelevel import StorageLevel
 
-    groups, mapping = _collapse_identical(df, text_col, id_col)
     sh = _rep_shingle_hashes(groups, n)
     wide = sh.groupBy("id").agg(
         *[_mh_min(i) for i in range(num_hashes)],
@@ -392,71 +399,19 @@ def minhash_lsh_candidates(
     bands = wide.select(
         "id", "gsz", F.expr(_band_stack_expr(num_hashes, rows_per_band))
     )
-    bands = _clamp_bands(bands, max_band_freq, weighted=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    a = bands.select(F.col("id").alias("rid_a"), "band", "sig")
-    b = bands.select(F.col("id").alias("rid_b"), "band", "sig")
-    rep_pairs = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("rid_a") < F.col("rid_b"))
-        .groupBy("rid_a", "rid_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    cross = _expand_member_pairs(rep_pairs, mapping, "n_shared_bands")
-    surv = bands.groupBy(F.col("id").alias("rid")).agg(
-        F.count(F.lit(1)).alias("n_shared_bands")
-    )
-    within = _within_group_pairs(mapping, surv).select(
-        "id_a", "id_b", "n_shared_bands"
-    )
-    # disjoint by construction: cross pairs span two groups, within
-    # pairs stay inside one — union needs no dedup
-    return cross.unionByName(within)
-
-
-def _minhash_lsh_candidates_flat(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 12,
-    rows_per_band: int = 3,
-    n: int = 3,
-    max_band_freq: int | None = None,
-) -> DataFrame:
-    """Flat (per-member) pipeline — the cascade's equivalence oracle.
-
-    The per-id signature frame is persisted: both sides of the banding
-    self-join read it, and without the persist Spark recomputes the
-    shingle explode + N-way MIN aggregation once per branch (~2x the
-    query's cost — ReuseExchange does not fire across the stack
-    unpivot)."""
-    from pyspark.storagelevel import StorageLevel
-
-    sh = shingle_hash_set(df, text_col, id_col, n)
-    wide = (
-        sh.groupBy("id")
-        .agg(*[_mh_min(i) for i in range(num_hashes)])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    bands = wide.select("id", F.expr(_band_stack_expr(num_hashes, rows_per_band)))
-    if max_band_freq is not None:
-        from pyspark.sql import Window
-
-        freq = F.count(F.lit(1)).over(Window.partitionBy("band", "sig"))
-        bands = (
-            bands.withColumn("_band_freq", freq)
-            .filter(F.col("_band_freq") <= max_band_freq)
-            .drop("_band_freq")
-        )
+    bands = _clamp_bands(bands, max_band_freq).persist(StorageLevel.MEMORY_AND_DISK)
     a = bands.select(F.col("id").alias("id_a"), "band", "sig")
     b = bands.select(F.col("id").alias("id_b"), "band", "sig")
-    return (
+    rep_pairs = (
         a.join(b, ["band", "sig"])
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
+    surv = bands.groupBy(F.col("id").alias("rid")).agg(
+        F.count(F.lit(1)).alias("n_shared_bands")
+    )
+    return rep_pairs, surv
 
 
 def lsh_verified_pairs(
@@ -469,7 +424,6 @@ def lsh_verified_pairs(
     threshold: float = 0.5,
     max_band_freq: int | None = None,
     verify_strategy: str = "array",
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """The production-shape near-dup pipeline: MinHash-LSH candidate
     generation followed by exact Jaccard verification of ONLY the
@@ -496,25 +450,21 @@ def lsh_verified_pairs(
     bit-for-bit. Candidate pairs with zero common shingles fall out of
     the inner join — identical to jaccard = 0 < threshold.
 
-    ``collapse_identical`` (default) is the exact-dedup cascade —
-    identical token arrays collapse to a min-id representative before
-    shingling, only representatives are banded and verified, and
-    verified pairs expand back to members (see
+    Runs as the exact-dup cascade (``_collapse_exact_dups``): only
+    representatives are banded and verified (``_verified_rep_pairs``),
+    and verified pairs expand back to members (see
     ``minhash_lsh_candidates`` for the output-identity argument). The
     verified additions: a cross-group member pair's Jaccard IS its
     representatives' Jaccard (same hash sets), and a within-group
     pair's Jaccard is exactly 1.0 (n/(n+n-n) with n >= 1 distinct
-    hashes — the flat pipeline computes the same double), emitted only
+    hashes — a per-member run computes the same double), emitted only
     for groups whose representative kept >= 1 band after the clamp,
     and only when 1.0 >= threshold.
 
     The signature aggregate is persisted (it feeds banding AND the
-    verify lookups); the cache entry lives in the session CacheManager
-    until explicitly unpersisted (not ContextCleaner-reclaimed — r11
-    advice); on a 100 TB run swap the persist for a checkpoint to
-    cluster storage (the same two-phase shape plans/runner.py uses).
-    Shingle sizes ride along as one extra COUNT column instead of a
-    second aggregation over the shingles.
+    verify lookups), under the cascade's cache lifecycle (see
+    ``_collapse_exact_dups``). Shingle sizes ride along as one extra
+    COUNT column instead of a second aggregation over the shingles.
 
     Exchange-count note (r7, measured — this is plan_audit's one
     exchange-count outlier, adjudicated NOT a defect): the static
@@ -536,14 +486,24 @@ def lsh_verified_pairs(
     with both initial and final sections. Every exchange is keyed on
     ids / 16-byte token keys / (band, sig) — none grows with band
     count, text never shuffles."""
-    if not collapse_identical:
-        return _lsh_verified_pairs_flat(
-            df, text_col, id_col, num_hashes, rows_per_band, n, threshold,
-            max_band_freq, verify_strategy,
-        )
+    groups, mapping = _token_groups(df, text_col, id_col)
+    rep_pairs, surv = _verified_rep_pairs(
+        groups, num_hashes, rows_per_band, n, threshold, max_band_freq,
+        verify_strategy,
+    )
+    return _expand_member_pairs(rep_pairs, mapping, surv, "jaccard")
+
+
+def _verified_rep_pairs(
+    groups: DataFrame, num_hashes: int, rows_per_band: int, n: int,
+    threshold: float, max_band_freq: int | None, verify_strategy: str,
+):
+    """``lsh_verified_pairs``' stage over ``(rid, gsz, t)`` groups:
+    ``(rep_pairs, surv)`` — verified representative pairs ``(id_a,
+    id_b, jaccard)`` and ``(rid, jaccard=1.0)`` for every
+    representative whose within-group pairs are emitted."""
     from pyspark.storagelevel import StorageLevel
 
-    groups, mapping = _collapse_identical(df, text_col, id_col)
     sh = _rep_shingle_hashes(groups, n)
     if verify_strategy == "join":
         sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
@@ -557,9 +517,7 @@ def lsh_verified_pairs(
     bands = wide.select(
         "id", "gsz", F.expr(_band_stack_expr(num_hashes, rows_per_band))
     )
-    bands = _clamp_bands(bands, max_band_freq, weighted=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    bands = _clamp_bands(bands, max_band_freq).persist(StorageLevel.MEMORY_AND_DISK)
     ba = bands.select(F.col("id").alias("id_a"), "band", "sig")
     bb = bands.select(F.col("id").alias("id_b"), "band", "sig")
     cand = (
@@ -581,16 +539,7 @@ def lsh_verified_pairs(
         jac = n_common.cast("double") / (
             F.col("n_a") + F.col("n_b") - n_common
         )
-        rep_pairs = (
-            cand.join(wa, "id_a")
-            .join(wb, "id_b")
-            .select(
-                F.col("id_a").alias("rid_a"),
-                F.col("id_b").alias("rid_b"),
-                jac.alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+        scored = cand.join(wa, "id_a").join(wb, "id_b")
     else:
         a = sh.select(F.col("id").alias("id_a"), "h")
         b = sh.select(F.col("id").alias("id_b"), "h")
@@ -605,17 +554,10 @@ def lsh_verified_pairs(
         jac = F.col("n_common").cast("double") / (
             F.col("n_a") + F.col("n_b") - F.col("n_common")
         )
-        rep_pairs = (
-            common.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select(
-                F.col("id_a").alias("rid_a"),
-                F.col("id_b").alias("rid_b"),
-                jac.alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    cross = _expand_member_pairs(rep_pairs, mapping, "jaccard")
+        scored = common.join(sa, "id_a").join(sb, "id_b")
+    rep_pairs = scored.select("id_a", "id_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
     # a rep with >= 1 surviving band self-collides; its members' pairwise
     # Jaccard is exactly 1.0 (identical nonempty hash sets)
     surv = (
@@ -624,98 +566,7 @@ def lsh_verified_pairs(
         .withColumn("jaccard", F.lit(1.0))
         .filter(F.col("jaccard") >= threshold)
     )
-    within = _within_group_pairs(mapping, surv).select("id_a", "id_b", "jaccard")
-    return cross.unionByName(within)
-
-
-def _lsh_verified_pairs_flat(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 12,
-    rows_per_band: int = 3,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_band_freq: int | None = None,
-    verify_strategy: str = "array",
-) -> DataFrame:
-    """Flat (per-member) pipeline — the cascade's equivalence oracle."""
-    from pyspark.storagelevel import StorageLevel
-
-    sh = shingle_hash_set(df, text_col, id_col, n)
-    if verify_strategy == "join":
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    extra = [] if verify_strategy == "join" else [F.collect_set("h").alias("hs")]
-    wide = sh.groupBy("id").agg(
-        *[_mh_min(i) for i in range(num_hashes)],
-        F.count(F.lit(1)).alias("n_sh"),
-        *extra,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_bands = num_hashes // rows_per_band
-    band_exprs = ", ".join(
-        f"{b}, concat_ws('|', "
-        + ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
-        + ")"
-        for b in range(n_bands)
-    )
-    bands = wide.select(
-        "id", F.expr(f"stack({n_bands}, {band_exprs}) AS (band, sig)")
-    )
-    if max_band_freq is not None:
-        from pyspark.sql import Window
-
-        freq = F.count(F.lit(1)).over(Window.partitionBy("band", "sig"))
-        bands = (
-            bands.withColumn("_band_freq", freq)
-            .filter(F.col("_band_freq") <= max_band_freq)
-            .drop("_band_freq")
-        )
-    ba = bands.select(F.col("id").alias("id_a"), "band", "sig")
-    bb = bands.select(F.col("id").alias("id_b"), "band", "sig")
-    cand = (
-        ba.join(bb, ["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    if verify_strategy == "array":
-        wa = wide.select(
-            F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"),
-            F.col("hs").alias("hs_a"),
-        )
-        wb = wide.select(
-            F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"),
-            F.col("hs").alias("hs_b"),
-        )
-        n_common = F.size(F.array_intersect("hs_a", "hs_b"))
-        jac = n_common.cast("double") / (
-            F.col("n_a") + F.col("n_b") - n_common
-        )
-        return (
-            cand.join(wa, "id_a")
-            .join(wb, "id_b")
-            .select("id_a", "id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
-    a = sh.select(F.col("id").alias("id_a"), "h")
-    b = sh.select(F.col("id").alias("id_b"), "h")
-    common = (
-        cand.join(a, "id_a")
-        .join(b, ["id_b", "h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = wide.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = wide.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return rep_pairs, surv
 
 
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:

@@ -6,11 +6,11 @@ Two tiers, as a 100 TB pipeline needs:
   product is a sequential ``aggregate`` fold over ``zip_with`` — pure
   Catalyst expressions, no UDF, deterministic summation order.
   Quadratic: correct baseline, verification stage, and small-N path.
-- ``lsh_sign_buckets`` / ``ann_lsh_pairs``: the scale path. Random-
-  hyperplane LSH with md5-derived integer hyperplanes (engine-
-  reproducible); docs sharing a bucket are candidates, verified
-  exactly. Turns the quadratic scan into an equi-join on the bucket
-  key.
+- ``ann_lsh_multitable_pairs`` / ``ann_lsh_multiprobe_pairs``: the
+  scale path. Random-hyperplane LSH with md5-derived integer
+  hyperplanes (engine-reproducible); docs sharing a bucket are
+  candidates, verified exactly. Turns the quadratic scan into an
+  equi-join on the bucket key.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from threading import Lock as _Lock
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _collapse_exact_dups, _expand_member_pairs
 from .spread import spread
 
 
@@ -82,8 +83,12 @@ def _norm2(a: str) -> Column:
     return F.aggregate(F.col(a), F.lit(0.0), lambda acc, x: acc + x * x)
 
 
-def with_cosine(pairs: DataFrame, a: str = "ea", b: str = "eb") -> DataFrame:
-    """Add ``cos_sim`` (rounded to 4 dp for engine-portable compares).
+def _with_cosine_prenormed(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Add ``cos_sim`` (rounded to 4 dp for engine-portable compares)
+    to frames that carry precomputed ``sqrt_na`` / ``sqrt_nb`` side
+    norms. ``sqrt(norm2)`` of the same double is the same double
+    whether it is computed per pair or per side, and the per-side form
+    does the O(dim) norm fold N+Q times instead of N*Q times.
 
     ``try_divide``, not ``/``: a zero-norm vector makes the denominator
     0, and under ANSI mode a plain division turns ONE degenerate row
@@ -91,16 +96,6 @@ def with_cosine(pairs: DataFrame, a: str = "ea", b: str = "eb") -> DataFrame:
     DuckDB returns for double x/0, so the oracle pair agrees: undefined
     similarities drop out of thresholds and rank last (NULLS LAST on
     DESC in both engines) with the id tiebreaker deciding order."""
-    cos = F.try_divide(_dot(a, b), F.sqrt(_norm2(a)) * F.sqrt(_norm2(b)))
-    return pairs.withColumn("cos_sim", F.round(cos, 4))
-
-
-def _with_cosine_prenormed(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    """``with_cosine`` for frames that carry precomputed ``sqrt_na`` /
-    ``sqrt_nb`` side norms. Bit-identical to the inline version —
-    ``sqrt(norm2)`` of the same double is the same double whether it is
-    computed per pair or per side — but the per-side form does the
-    O(dim) norm fold N+Q times instead of N*Q times."""
     cos = F.try_divide(_dot(a, b), F.col("sqrt_na") * F.col("sqrt_nb"))
     return pairs.withColumn("cos_sim", F.round(cos, 4))
 
@@ -164,71 +159,6 @@ def cosine_topk(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", F.col("id_b").alias("neighbor_id"), "rnk", "cos_sim")
-    )
-
-
-def lsh_sign_buckets(
-    emb: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, dim: int = 64
-) -> DataFrame:
-    """(id, bucket) — sign bits of dot products with ``n_planes``
-    deterministic pseudo-random integer hyperplanes.
-
-    Hyperplane component (p, j) = (ascii(md5(p ':' j)[0]) % 7) - 3,
-    reproducible in any engine with md5 + ascii (precomputed to
-    literals here — see ``_plane``)."""
-    plane = [_plane((p,), dim).alias(f"h{p}") for p in range(n_planes)]
-    e = emb.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v"), *plane
-    )
-    bucket = None
-    for p in range(n_planes):
-        dot = F.round(
-            F.aggregate(
-                F.zip_with(F.col("v"), F.col(f"h{p}"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,  # engine-stable sign test: fp summation order differs across engines
-        )
-        bit = F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * (2**p)
-        bucket = bit if bucket is None else bucket + bit
-    return e.select("id", bucket.cast("long").alias("bucket"))
-
-
-def ann_lsh_pairs(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    n_planes: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """Scale-path near-dup: LSH-bucket candidates verified exactly.
-
-    Equi-join on bucket instead of a full cross join; recall trades
-    off with n_planes (8 planes => 256 buckets)."""
-    buckets = lsh_sign_buckets(emb, id_col, vec_col, n_planes, dim)
-    e = emb.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    ).withColumn("sn", F.sqrt(_norm2("v")))
-    be = buckets.join(e, "id")
-    a = be.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("ea"),
-        F.col("sn").alias("sqrt_na"),
-        "bucket",
-    )
-    b = be.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("eb"),
-        F.col("sn").alias("sqrt_nb"),
-        "bucket",
-    )
-    cand = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    return (
-        _with_cosine_prenormed(cand, "ea", "eb")
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "bucket", "cos_sim")
     )
 
 
@@ -418,7 +348,7 @@ def _ann_lsh_multitable_distinct(
     persist Catalyst plans — and runs — the entire fold stage once per
     side ((id, tbl, bucket) ints, negligible to cache at any corpus
     scale). Same CacheManager lifecycle caveat as the cascade persists
-    (see ``ann_lsh_multitable_pairs``).
+    (see ``dedup._collapse_exact_dups``).
 
     Closing r12 optimization: the bucket stage is the output-identical
     Arrow kernel (``lsh_multitable_buckets_kernel``), not the literal-
@@ -498,36 +428,20 @@ def ann_lsh_multitable_pairs(
     (scripts/prod_recall.py). This operator remains the frozen-oracle
     correctness row (``sim_ann_lsh``) and a valid small-corpus path.
 
-    Identical vectors are collapsed FIRST (min-id representative), the
-    LSH + verify pipeline runs on distinct vectors only, and verified
-    representative pairs are expanded back to member pairs at the end.
-    Replicated corpora are exactly where near-dup volume explodes
-    (every copy collides with every copy in every table,
-    quadratically); the cascade makes the quadratic stage scale with
-    DISTINCT vectors while the expansion is a linear join. The output
-    set is provably identical: members share their representative's
-    buckets (identical input -> identical hashes) and its cosines
-    (identical doubles -> identical rounded values), and within-group
-    pairs always collide, with the same self-cosine the pairwise
-    formula yields. Exact-dedup-then-LSH is the cascade production
-    near-dup pipelines run anyway.
-
-    The collapse groups by a 16-byte md5 of the canonical vector
-    string (``_vec_key``), not the raw 64-double array, and uses
-    groupBy/agg rather than a window: partial aggregation collapses
-    copies map-side, so the one shuffle that carries vectors moves
-    ~|distinct vectors| rows regardless of the duplication factor, and
-    its key is 16 bytes instead of ~512. ``F.first(mv)`` is value-
-    deterministic — every row in a vkey group carries the identical
-    array. The member->rep ``mapping`` join is ids + key only; member
-    vectors never shuffle. Both frames are persisted (groups feeds the
-    rep pipeline and the within-group self-cosines, mapping feeds two
-    expansion joins). Cache lifecycle (corrected r12, r11 advice):
-    Dataset persists register in the session CacheManager and are NOT
-    ContextCleaner-reclaimed — a long-lived session that rebuilds this
-    operator repeatedly should ``unpersist()``/``clearCache()`` between
-    runs; on a 100 TB run swap the persists for checkpoints to cluster
-    storage (the two-phase shape plans/runner.py uses)."""
+    Runs as the exact-dup cascade (``dedup._collapse_exact_dups``, via
+    ``_exact_dup_cascade``): identical vectors are collapsed FIRST
+    (min-id representative), the LSH + verify pipeline runs on distinct
+    vectors only, and verified representative pairs are expanded back
+    to member pairs at the end. Replicated corpora are exactly where
+    near-dup volume explodes (every copy collides with every copy in
+    every table, quadratically); the cascade makes the quadratic stage
+    scale with DISTINCT vectors while the expansion is a linear join.
+    The output set is provably identical: members share their
+    representative's buckets (identical input -> identical hashes) and
+    its cosines (identical doubles -> identical rounded values), and
+    within-group pairs always collide, with the same self-cosine the
+    pairwise formula yields. Exact-dedup-then-LSH is the cascade
+    production near-dup pipelines run anyway."""
     return _exact_dup_cascade(
         emb,
         id_col,
@@ -546,53 +460,21 @@ def _exact_dup_cascade(
     threshold: float,
     rep_pairs_fn,
 ) -> DataFrame:
-    """Exact-dup collapse wrapper shared by the LSH pair pipelines
-    (see ``ann_lsh_multitable_pairs`` for the full rationale):
-    collapse identical vectors to min-id representatives, run
+    """The vector side of the exact-dup cascade
+    (``dedup._collapse_exact_dups``): collapse identical vectors on
+    ``_vec_key`` — a 16-byte md5 of the canonical vector string, so the
+    shuffle carrying vectors is keyed on 16 bytes instead of ~512 — run
     ``rep_pairs_fn(reps)`` (any pipeline whose candidate test depends
     only on the vector VALUE — identical inputs always collide and
-    carry identical cosines) over distinct vectors, then expand
-    verified rep pairs back to member pairs and add within-group
-    self-pairs. Output-identical to running the flat pipeline on the
-    raw frame; equivalence pinned by tests/test_dedup_cascade.py and
-    test_similarity.py."""
-    from pyspark.storagelevel import StorageLevel
-
+    carry identical cosines) over distinct vectors, then expand the
+    verified rep pairs back to member pairs. Equivalence with the
+    per-member pipeline is pinned in test_similarity.py."""
     e = emb.select(
         F.col(id_col).alias("mid"), _as_double(vec_col).alias("mv")
     ).withColumn("vkey", _vec_key(F.col("mv")))
-    groups = (
-        e.groupBy("vkey")
-        .agg(
-            F.min("mid").alias("rid"),
-            F.count(F.lit(1)).alias("gsz"),
-            F.first("mv").alias("mv"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    mapping = (
-        e.select("mid", "vkey")
-        .join(groups.select("vkey", "rid", "gsz"), "vkey")
-        .select("mid", "rid", "gsz")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    groups, mapping = _collapse_exact_dups(e, "vkey", "mv")
     reps = groups.select(F.col("rid").alias(id_col), F.col("mv").alias(vec_col))
     rep_pairs = rep_pairs_fn(reps)
-    cross = (
-        rep_pairs.join(
-            mapping.select(F.col("rid").alias("id_a"), F.col("mid").alias("ma")),
-            "id_a",
-        )
-        .join(
-            mapping.select(F.col("rid").alias("id_b"), F.col("mid").alias("mb")),
-            "id_b",
-        )
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            "cos_sim",
-        )
-    )
     # within-group pairs: identical vectors always share every bucket,
     # so every member pair of a multi-member group is a candidate; its
     # cosine is the group's self-cosine (1.0 after rounding for any
@@ -608,17 +490,7 @@ def _exact_dup_cascade(
         .filter(F.col("cos_sim") >= threshold)
         .select("rid", "cos_sim")
     )
-    m2 = mapping.filter(F.col("gsz") > 1)
-    within = (
-        m2.select("rid", F.col("mid").alias("id_a"))
-        .join(m2.select("rid", F.col("mid").alias("id_b")), "rid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(grp, "rid")
-        .select("id_a", "id_b", "cos_sim")
-    )
-    # disjoint by construction: cross pairs span two groups, within
-    # pairs stay inside one — no dedup needed across the union
-    return cross.unionByName(within)
+    return _expand_member_pairs(rep_pairs, mapping, grp, "cos_sim")
 
 
 def _pool_subsets(pool: int, n_bits: int, n_tables: int) -> list[list[int]]:

@@ -15,6 +15,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g: the driver JVM of a
+    ``local[N]`` run is the whole engine, but a heap sized past the
+    host's RAM grows until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(app_name: str = "newsflow", master: str | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -34,7 +42,10 @@ def get_spark(app_name: str = "newsflow", master: str | None = None) -> SparkSes
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Local-bench default: the test warehouse's parquet files are

@@ -1,20 +1,29 @@
 """Output-identity of the exact-dedup cascade inside the text-dedup
-family: ``collapse_identical=True`` (collapse identical token arrays,
-LSH+verify representatives, expand member pairs) must reproduce the
-flat per-member pipeline bit-for-bit — same pairs, same counts, same
-Jaccards — including under the band-frequency clamp.
+family: ``minhash_lsh_candidates`` / ``lsh_verified_pairs`` (collapse
+identical token arrays, LSH+verify representatives, expand member
+pairs) must reproduce the per-member reference bit-for-bit — same
+pairs, same counts, same Jaccards — including under the band-frequency
+clamp.
 
-Mirrors the twinned-corpus equivalence pattern test_similarity.py uses
-for the vector-side cascade (operators/similarity.py).
+The per-member reference is the operators' own representative stage
+(``_minhash_rep_pairs`` / ``_verified_rep_pairs``) fed one group per
+document (``gsz = 1``), the way test_similarity.py checks the
+vector-side cascade against ``_ann_lsh_multiprobe_distinct``. With
+``gsz = 1`` the weighted band clamp counts documents, so the clamp
+weighting stays checked.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from canadiannewsdatapipeline_spark.operators.dedup import (
+    _minhash_rep_pairs,
+    _verified_rep_pairs,
     lsh_verified_pairs,
     minhash_lsh_candidates,
+    tokens_col,
 )
 from canadiannewsdatapipeline_spark.sources.registry import load_table
 
@@ -53,20 +62,37 @@ def _pairs_multiset(df, value):
     return set(out)
 
 
+def _per_member_groups(docs):
+    """One ``(rid, gsz, t)`` group per document."""
+    return docs.select(
+        F.col("doc_id").alias("rid"),
+        F.lit(1).cast("long").alias("gsz"),
+        tokens_col("text").alias("t"),
+    )
+
+
+def _minhash_per_member(docs, max_band_freq=None):
+    pairs, _ = _minhash_rep_pairs(_per_member_groups(docs), 12, 3, 3, max_band_freq)
+    return pairs
+
+
+def _verified_per_member(docs, max_band_freq=None, strategy="array"):
+    pairs, _ = _verified_rep_pairs(
+        _per_member_groups(docs), 12, 3, 3, 0.5, max_band_freq, strategy
+    )
+    return pairs
+
+
 @pytest.mark.parametrize("max_band_freq", [None, 3])
 def test_minhash_cascade_equivalent_twinned(spark, max_band_freq):
     docs = _twinned_corpus(spark)
-    flat = minhash_lsh_candidates(
-        docs, "text", "doc_id", max_band_freq=max_band_freq,
-        collapse_identical=False,
-    )
+    ref = _minhash_per_member(docs, max_band_freq)
     casc = minhash_lsh_candidates(
-        docs, "text", "doc_id", max_band_freq=max_band_freq,
-        collapse_identical=True,
+        docs, "text", "doc_id", max_band_freq=max_band_freq
     )
-    got_f = _pairs_multiset(flat, "n_shared_bands")
+    got_r = _pairs_multiset(ref, "n_shared_bands")
     got_c = _pairs_multiset(casc, "n_shared_bands")
-    assert got_c == got_f
+    assert got_c == got_r
     if max_band_freq is None:
         # sanity: the 4-member group alone contributes C(4,2)=6 pairs
         # sharing all 4 bands, and short/null/empty docs emit nothing
@@ -89,17 +115,14 @@ def test_minhash_cascade_equivalent_twinned(spark, max_band_freq):
 @pytest.mark.parametrize("max_band_freq", [None, 3])
 def test_verified_cascade_equivalent_twinned(spark, strategy, max_band_freq):
     docs = _twinned_corpus(spark)
-    flat = lsh_verified_pairs(
-        docs, "text", "doc_id", threshold=0.5, max_band_freq=max_band_freq,
-        verify_strategy=strategy, collapse_identical=False,
-    )
+    ref = _verified_per_member(docs, max_band_freq, strategy)
     casc = lsh_verified_pairs(
         docs, "text", "doc_id", threshold=0.5, max_band_freq=max_band_freq,
-        verify_strategy=strategy, collapse_identical=True,
+        verify_strategy=strategy,
     )
-    got_f = _pairs_multiset(flat, "jaccard")
+    got_r = _pairs_multiset(ref, "jaccard")
     got_c = _pairs_multiset(casc, "jaccard")
-    assert got_c == got_f
+    assert got_c == got_r
     if max_band_freq is None:
         # within-group pairs carry exact 1.0 (including the punctuation
         # variant: Jaccard is a function of the token array only)
@@ -108,21 +131,17 @@ def test_verified_cascade_equivalent_twinned(spark, strategy, max_band_freq):
 
 def test_verified_cascade_equivalent_real_corpus(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    flat = lsh_verified_pairs(
-        docs, "text", "doc_id", threshold=0.5, collapse_identical=False
-    )
-    casc = lsh_verified_pairs(
-        docs, "text", "doc_id", threshold=0.5, collapse_identical=True
-    )
-    got_f = _pairs_multiset(flat, "jaccard")
+    ref = _verified_per_member(docs)
+    casc = lsh_verified_pairs(docs, "text", "doc_id", threshold=0.5)
+    got_r = _pairs_multiset(ref, "jaccard")
     got_c = _pairs_multiset(casc, "jaccard")
-    assert got_c == got_f and len(got_c) > 0
+    assert got_c == got_r and len(got_c) > 0
 
 
 def test_minhash_cascade_equivalent_real_corpus(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    flat = minhash_lsh_candidates(docs, "text", "doc_id", collapse_identical=False)
-    casc = minhash_lsh_candidates(docs, "text", "doc_id", collapse_identical=True)
+    ref = _minhash_per_member(docs)
+    casc = minhash_lsh_candidates(docs, "text", "doc_id")
     assert _pairs_multiset(casc, "n_shared_bands") == _pairs_multiset(
-        flat, "n_shared_bands"
+        ref, "n_shared_bands"
     )

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from canadiannewsdatapipeline_spark.operators.similarity import (
     ann_ivf_pairs,
     ann_lsh_multitable_pairs,
-    ann_lsh_pairs,
     cosine_pairs,
 )
 from canadiannewsdatapipeline_spark.sources.registry import load_table
@@ -43,7 +42,11 @@ def _pairs(df):
 
 
 def test_lsh_multitable_perfect_precision_and_amplified_recall(emb, truth):
-    single = _pairs(ann_lsh_pairs(emb, "vec_id", "embedding", THRESHOLD))
+    single = _pairs(
+        ann_lsh_multitable_pairs(
+            emb, "vec_id", "embedding", THRESHOLD, n_tables=1, n_planes=8
+        )
+    )
     multi = _pairs(
         ann_lsh_multitable_pairs(
             emb, "vec_id", "embedding", THRESHOLD, n_tables=12, n_planes=5
